@@ -4,15 +4,6 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local("graft-bench")
-    // Untimed warmup: JVM/codegen/session initialization plus the shared
-    // cached frames (cleaned sides, match, LSH pairs, CC labels) —
-    // without this the one-time cache materialization lands on whichever
-    // consumer query sorts first and per-query numbers swing run-to-run.
-    try {
-      SparkEntry.queries("q1_agg")(spark, sfDir).count()
-      SparkEntry.warmupSharedFrames(spark, sfDir)
-    } catch { case _: Throwable => () }
-
     // A FAILED run must never masquerade as a fast success: the r15
     // driver kill turned swallowed exceptions into ~6 ms entries that a
     // later diff read as speedups. time() still returns the elapsed
@@ -21,6 +12,21 @@ object Bench {
     // bench_failures line before the totals).
     val failedRuns = scala.collection.mutable.Map[String, Int]()
       .withDefaultValue(0)
+
+    // Untimed warmup: JVM/codegen/session initialization plus the shared
+    // cached frames (cleaned sides, match, LSH pairs, CC labels) —
+    // without this the one-time cache materialization lands on whichever
+    // consumer query sorts first and per-query numbers swing run-to-run.
+    // A failed warmup is printed and counted (as "warmup" on the
+    // bench_failures line): its compile and cache costs would otherwise
+    // land silently on the timed runs.
+    try {
+      SparkEntry.queries("q1_agg")(spark, sfDir).count()
+      SparkEntry.warmupSharedFrames(spark, sfDir)
+    } catch { case e: Throwable =>
+      failedRuns("warmup") += 1
+      System.err.println(s"BENCH FAILED warmup: $e")
+    }
     def time(query: String)(fn: => Unit): Double = {
       val t0 = System.nanoTime()
       try fn catch { case e: Throwable =>

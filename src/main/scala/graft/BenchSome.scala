@@ -15,10 +15,15 @@ object BenchSome {
     require(args.nonEmpty, "pass at least one query name")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local("graft-bench-some")
+    // A failed warmup is printed and fails the process like a failed run.
+    var anyFailed = false
     try {
       SparkEntry.queries("q1_agg")(spark, sfDir).count()
       SparkEntry.warmupSharedFrames(spark, sfDir)
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable =>
+      anyFailed = true
+      println(s"BENCHSOME warmup FAILED: $e")
+    }
     // Track failures per run: a query whose run threw must print a
     // FAILED marker (and fail the process), never a bogus timing
     // (round-15 advice — the swallowed-Throwable timing read as a fast
@@ -33,7 +38,6 @@ object BenchSome {
       (System.nanoTime() - t0) / 1e9
     }
     val runs = 3
-    var anyFailed = false
     args.foreach { name =>
       queryFails = 0
       SparkEntry.buildServe.get(name) match {

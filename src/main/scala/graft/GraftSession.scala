@@ -22,6 +22,13 @@ object GraftSession {
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // Spark's generated-class cache is JVM-wide and sized once, from
+      // this static conf, at the first codegen in the JVM. Its default of
+      // 100 is below the ~140 distinct classes one ETL pipeline run
+      // generates, so the LRU evicts every class before its next use and
+      // each run recompiles all of them (Janino, then the JIT). 500 holds
+      // graft's measured plan set with room to spare.
+      .config("spark.sql.codegen.cache.maxEntries", "500")
 
   /** Local session sized from SPARK_GRAFT_CPUS (driver harness contract),
     * defaulting to all available cores (local[32] on the target box). */

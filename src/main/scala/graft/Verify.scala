@@ -2,7 +2,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A failed query
+  * does not stop the dump; after writing everything it can, Verify lists
+  * the failed names on stderr and exits 1. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -14,13 +16,17 @@ object Verify {
     val only = sys.env.get("GRAFT_VERIFY_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def wanted(name: String): Boolean = only.forall(_.contains(name))
-    SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    val failed = SparkEntry.queries.filter(kv => wanted(kv._1)).toSeq
+      .flatMap { case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
+        }
       }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -37,5 +43,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: " +
+        failed.sorted.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

@@ -52,37 +52,53 @@ object NeutralLlmScorer extends LlmScorer {
  *    entity_match.py:143-220) becomes a max_by aggregation — one shuffle,
  *    map-side partial aggregation, no driver loop.
  *  - The fuzzy UDF becomes a codegen'd StaticInvoke expression.
+ *  - Per-name work runs once per row, not once per candidate pair: each
+ *    side projects its scorer-prepared name (token-sorted for
+ *    token_sort_ratio) before the join, and the pairs are scored on the
+ *    prepared strings.
  */
 object Match {
 
-  /** Similarity measure between two normalized-name columns. */
-  sealed trait Scorer { def apply(a: Column, b: Column): Column }
+  /** Similarity measure between two normalized-name columns, split into
+    * a per-row preparation of each name and a per-pair score of the
+    * prepared names: `score(prepare(a), prepare(b))` is the measure. */
+  sealed trait Scorer {
+    def prepare(name: Column): Column
+    def score(a: Column, b: Column): Column
+  }
+  /** token_sort_ratio as InDel `ratio` over per-row token-sorted names
+    * (bit-identical to `GraftFunctions.token_sort_ratio`). */
   case object TokenSortRatio extends Scorer {
-    def apply(a: Column, b: Column): Column =
-      GraftFunctions.token_sort_ratio(a, b)
+    def prepare(name: Column): Column = GraftFunctions.token_sort(name)
+    def score(a: Column, b: Column): Column = GraftFunctions.indel_ratio(a, b)
   }
   case object JaccardTokens extends Scorer {
-    def apply(a: Column, b: Column): Column = Text.jaccardTokens(a, b)
+    def prepare(name: Column): Column = name
+    def score(a: Column, b: Column): Column = Text.jaccardTokens(a, b)
   }
 
   /**
    * Score all blocked candidate pairs. Inputs are the outputs of
    * Clean.web / Clean.abr (need crawl_url, clean_name, normalized_name,
    * block_key on the left; abn_clean, clean_name, normalized_name,
-   * block_key on the right).
+   * block_key on the right). Each side's prepared name rides the join as
+   * a helper column, dropped after scoring.
    */
   def candidates(web: DataFrame, abr: DataFrame,
       scorer: Scorer = TokenSortRatio,
       cfg: MatchConfig = MatchConfig()): DataFrame = {
     val left = web.select(
       col("crawl_url"), col("clean_name").as("crawl_name"),
-      col("normalized_name").as("crawl_norm"), col("block_key"))
+      col("normalized_name").as("crawl_norm"), col("block_key"),
+      scorer.prepare(col("normalized_name")).as("_crawl_key"))
     val right0 = abr.select(
       col("abn_clean").as("abn"), col("clean_name").as("abr_name"),
-      col("normalized_name").as("abr_norm"), col("block_key"))
+      col("normalized_name").as("abr_norm"), col("block_key"),
+      scorer.prepare(col("normalized_name")).as("_abr_key"))
     val right = if (cfg.broadcastRight) broadcast(right0) else right0
     left.join(right, "block_key")
-      .withColumn("fuzzy_score", scorer(col("crawl_norm"), col("abr_norm")))
+      .withColumn("fuzzy_score", scorer.score(col("_crawl_key"), col("_abr_key")))
+      .drop("_crawl_key", "_abr_key")
   }
 
   /** Keep the best candidate per crawl_url (argmax on score, ties broken

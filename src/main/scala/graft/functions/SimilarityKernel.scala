@@ -12,9 +12,16 @@ package graft.functions
  *
  * The InDel distance is computed with Myers' bit-parallel LCS algorithm
  * (Hyyrö 2004 variant) — O(ceil(n/64) * m) — with a 64-bit fast path for the
- * common case (company names are short). All methods are static, null-safe
- * at the call site (wrapped via StaticInvoke with propagateNull), and
- * deterministic, so they stay inside whole-stage codegen.
+ * common case (company names are short); the pattern's match masks live in
+ * a primitive [[MaskTable]]. All methods are static, null-safe at the call
+ * site (wrapped via StaticInvoke with propagateNull), and deterministic, so
+ * they stay inside whole-stage codegen.
+ *
+ * Token sorting depends on one string only. A caller that scores many
+ * pairs per name (blocked matching) sorts each name once per row with
+ * [[tokenSort]] and scores the pairs with [[ratio]], which is bit-identical:
+ * `ratio(tokenSort(a), tokenSort(b)) == tokenSortRatio(a, b)` for non-null
+ * inputs, both giving 0.0 when either side has no tokens.
  */
 object SimilarityKernel extends Serializable {
 
@@ -37,11 +44,32 @@ object SimilarityKernel extends Serializable {
     1.0 - indelDistance(s1, s2).toDouble / total
   }
 
+  /** Whitespace tokens of `s`: the non-empty runs between characters of
+    * Java's non-Unicode `\s` set `[ \t\n\x0B\f\r]` — exactly the tokens of
+    * `s.split("\\s+").filter(_.nonEmpty)`, without compiling a regex per
+    * call. U+00A0 and other Unicode spaces stay inside tokens. */
+  def tokens(s: String): Array[String] = {
+    val out = new java.util.ArrayList[String]()
+    val n = s.length
+    var i = 0
+    while (i < n) {
+      while (i < n && isSpace(s.charAt(i))) i += 1
+      val start = i
+      while (i < n && !isSpace(s.charAt(i))) i += 1
+      if (i > start) out.add(s.substring(start, i))
+    }
+    out.toArray(new Array[String](0))
+  }
+
+  /** ' ' or U+0009..U+000D (tab, LF, VT, FF, CR). */
+  @inline private def isSpace(c: Char): Boolean =
+    c == ' ' || (c >= '\t' && c <= '\r')
+
   /** Whitespace-tokenize, sort tokens, rejoin with single spaces. */
   def tokenSort(s: String): String = {
-    val toks = s.split("\\s+").filter(_.nonEmpty)
+    val toks = tokens(s)
     java.util.Arrays.sort(toks.asInstanceOf[Array[AnyRef]])
-    toks.mkString(" ")
+    String.join(" ", toks: _*)
   }
 
   /**
@@ -61,8 +89,8 @@ object SimilarityKernel extends Serializable {
     * (reference: src/transform/entity_match.py:236-250). */
   def jaccardTokens(s1: String, s2: String): Double = {
     if (s1 == null || s2 == null) return 0.0
-    val set1 = s1.toLowerCase.split("\\s+").filter(_.nonEmpty).toSet
-    val set2 = s2.toLowerCase.split("\\s+").filter(_.nonEmpty).toSet
+    val set1 = tokens(s1.toLowerCase).toSet
+    val set2 = tokens(s2.toLowerCase).toSet
     val union = set1.union(set2).size
     if (union == 0) 0.0 else set1.intersect(set2).size.toDouble / union
   }
@@ -79,8 +107,7 @@ object SimilarityKernel extends Serializable {
     * the max (reference: feature_engineering.py token_set feature). */
   def tokenSetRatio(s1: String, s2: String): Double = {
     if (s1 == null || s2 == null) return 0.0
-    tokenSetFromSets(s1.split("\\s+").filter(_.nonEmpty).toSet,
-      s2.split("\\s+").filter(_.nonEmpty).toSet)
+    tokenSetFromSets(tokens(s1).toSet, tokens(s2).toSet)
   }
 
   /**
@@ -94,8 +121,8 @@ object SimilarityKernel extends Serializable {
   def nameRatios(s1: String, s2: String): Array[Double] = {
     if (s1 == null || s2 == null) return Array(0.0, 0.0, 0.0, 0.0)
     val fuzzy = if (s1.isEmpty || s2.isEmpty) 0.0 else indelSimilarity(s1, s2)
-    val t1 = s1.split("\\s+").filter(_.nonEmpty)
-    val t2 = s2.split("\\s+").filter(_.nonEmpty)
+    val t1 = tokens(s1)
+    val t2 = tokens(s2)
     val sorted1 = { val a = t1.clone()
       java.util.Arrays.sort(a.asInstanceOf[Array[AnyRef]]); a.mkString(" ") }
     val sorted2 = { val a = t2.clone()
@@ -142,16 +169,8 @@ object SimilarityKernel extends Serializable {
     }
     // Bit-parallel fast path: the pattern (shorter) is constant across
     // windows, so its match-mask table is built ONCE; each window is
-    // scanned in place (no substring allocation, no per-window HashMap).
-    val masks = new java.util.HashMap[Character, java.lang.Long](m * 2)
-    var p = 0
-    while (p < m) {
-      val c = Character.valueOf(shorter.charAt(p))
-      val prev = masks.get(c)
-      masks.put(c, java.lang.Long.valueOf(
-        (if (prev == null) 0L else prev.longValue()) | (1L << p)))
-      p += 1
-    }
+    // scanned in place (no substring allocation, no per-window table).
+    val masks = new MaskTable(shorter)
     val full = if (m == 64) -1L else (1L << m) - 1
     var bestLcs = 0
     var i = 0
@@ -161,11 +180,8 @@ object SimilarityKernel extends Serializable {
       var j = i
       val end = i + m
       while (j < end) {
-        val mk = masks.get(Character.valueOf(longer.charAt(j)))
-        if (mk != null) {
-          val u = s & mk.longValue()
-          s = (s + u) | (s - u)
-        }
+        val u = s & masks.get(longer.charAt(j))
+        s = (s + u) | (s - u)
         j += 1
       }
       val lcs = m - java.lang.Long.bitCount(s & full)
@@ -181,21 +197,11 @@ object SimilarityKernel extends Serializable {
 
   /** LCS length via bit-parallel algorithm; pattern `b` must be <= 64 chars. */
   private def lcsBitParallel64(a: String, b: String): Int = {
-    // Build match bitmasks for the pattern (shorter string).
-    val masks = new java.util.HashMap[Character, java.lang.Long](b.length * 2)
-    var i = 0
-    while (i < b.length) {
-      val c = Character.valueOf(b.charAt(i))
-      val prev = masks.get(c)
-      masks.put(c, java.lang.Long.valueOf((if (prev == null) 0L else prev.longValue()) | (1L << i)))
-      i += 1
-    }
+    val masks = new MaskTable(b)
     var s = if (b.length == 64) -1L else (1L << b.length) - 1
     var j = 0
     while (j < a.length) {
-      val m = masks.get(Character.valueOf(a.charAt(j)))
-      val matches = if (m == null) 0L else m.longValue()
-      val u = s & matches
+      val u = s & masks.get(a.charAt(j))
       s = (s + u) | (s - u)
       j += 1
     }
@@ -223,4 +229,40 @@ object SimilarityKernel extends Serializable {
     }
     prev(b.length)
   }
+}
+
+/** Per-char match masks of a pattern of at most 64 chars, for the
+  * bit-parallel LCS: bit i of `get(c)` is set iff `pattern.charAt(i) == c`.
+  * Open addressing over two primitive arrays (linear probing, capacity a
+  * power of two at least twice the pattern length), so building and
+  * probing it boxes nothing. A slot is free while its mask is 0, since
+  * every stored char has at least one bit set. */
+private[graft] final class MaskTable(pattern: String) {
+  private[this] val capacity = {
+    var c = 16
+    while (c < 2 * pattern.length) c <<= 1
+    c
+  }
+  private[this] val keys = new Array[Char](capacity)
+  private[this] val masks = new Array[Long](capacity)
+
+  {
+    var i = 0
+    while (i < pattern.length) {
+      val c = pattern.charAt(i)
+      val k = slot(c)
+      keys(k) = c
+      masks(k) |= 1L << i
+      i += 1
+    }
+  }
+
+  /** The slot holding `c`, or the free slot it would take. */
+  private[this] def slot(c: Char): Int = {
+    var k = c & (capacity - 1)
+    while (masks(k) != 0L && keys(k) != c) k = (k + 1) & (capacity - 1)
+    k
+  }
+
+  def get(c: Char): Long = masks(slot(c))
 }

@@ -17,6 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
 object SimilarityAdapters extends Serializable {
   def tokenSortRatio(s1: UTF8String, s2: UTF8String): Double =
     SimilarityKernel.tokenSortRatio(str(s1), str(s2))
+  def tokenSort(s: UTF8String): UTF8String =
+    UTF8String.fromString(SimilarityKernel.tokenSort(s.toString))
   def ratio(s1: UTF8String, s2: UTF8String): Double =
     SimilarityKernel.ratio(str(s1), str(s2))
   def tokenSetRatio(s1: UTF8String, s2: UTF8String): Double =
@@ -730,6 +732,14 @@ object GraftFunctions {
     * matcher score (entity_match.py:473-491). Codegen'd via StaticInvoke. */
   def token_sort_ratio(c1: Column, c2: Column): Column =
     invoke2("tokenSortRatio", c1, c2, DoubleType)
+
+  /** Whitespace tokens sorted and joined by single spaces — the per-row
+    * half of token_sort_ratio: `indel_ratio(token_sort(a), token_sort(b))`
+    * equals `token_sort_ratio(a, b)`, nulls included. */
+  def token_sort(c: Column): Column =
+    col(StaticInvoke(SimilarityAdapters.getClass, StringType, "tokenSort",
+      Seq(expr(c)), inputTypes = Seq(StringType),
+      propagateNull = true, returnNullable = false))
 
   /** Plain InDel ratio in [0,1] (RapidFuzz `ratio`). */
   def indel_ratio(c1: Column, c2: Column): Column =

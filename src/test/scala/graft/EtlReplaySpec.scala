@@ -34,9 +34,17 @@ class EtlReplaySpec extends SparkSpec {
 
   private val ExportDir = "/root/reference/actual_aws_db_exported_data"
 
-  private def export(name: String): DataFrame =
+  /** Fails (never skips) with one named, actionable message when the
+    * export is not installed, instead of a raw FileNotFoundException. */
+  private def export(name: String): DataFrame = {
+    if (!java.nio.file.Files.isRegularFile(java.nio.file.Paths.get(ExportDir, name)))
+      fail(s"EtlReplaySpec needs the reference run's exported CSVs " +
+        s"(entity_match_results.csv, unified_companies.csv) in $ExportDir, " +
+        s"but $name is missing: install the reference's " +
+        "actual_aws_db_exported_data directory there")
     spark.read.option("header", "true").option("nullValue", "NULL")
       .csv(s"$ExportDir/$name")
+  }
 
   private lazy val matchExport = export("entity_match_results.csv")
   private lazy val unifiedExport = export("unified_companies.csv")
