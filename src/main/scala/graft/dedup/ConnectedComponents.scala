@@ -1,36 +1,62 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /**
  * Connected components over an undirected edge list — the step that turns
  * pairwise near-duplicate matches into dedup CLUSTERS (keep one
- * representative per component).
+ * representative per component). Every node is labeled with the minimum
+ * node id reachable from it.
  *
- * Implementation: alternating large-star / small-star (Kiveris et al.,
- * "Connected Components in MapReduce and Beyond", SoCC'14). Each round
- * rewires edges toward the per-neighborhood minimum:
+ * Two paths, chosen by the size of the distinct oriented edge set:
  *
- *   - large-star(u): m = min(N(u) ∪ {u}); emit (v, m) for v ∈ N(u), v > u
- *   - small-star(u): over edges oriented u > v, m = min(N(u));
- *     emit (v, m) for all v ∈ N(u) plus (u, m)
+ *  - Distributed loop (more than [[LocalEdges]] edges): alternating
+ *    large-star / small-star (Kiveris et al., "Connected Components in
+ *    MapReduce and Beyond", SoCC'14). Each round rewires edges toward the
+ *    per-neighborhood minimum:
  *
- * The edge set converges to a star forest rooted at each component's
- * minimum node id in O(log² n) rounds (vs graph-diameter rounds for plain
- * min-label propagation), and every round is edge-proportional work:
- * a hash aggregation for the per-node minimum, a co-partitioned join to
- * rewire, and a distinct. High-degree nodes are exactly what large-star
- * flattens, so skew self-heals instead of accumulating. Each round is
- * localCheckpoint'ed: lineage (and optimizer time) stays O(1) per round
- * instead of growing with the iteration count.
+ *      - large-star(u): m = min(N(u) ∪ {u}); emit (v, m) for v ∈ N(u), v > u
+ *      - small-star(u): over edges oriented u > v, m = min(N(u));
+ *        emit (v, m) for all v ∈ N(u) plus (u, m)
  *
- * Only edge-touched nodes enter the loop; isolated nodes (the vast
+ *    The edge set converges to a star forest rooted at each component's
+ *    minimum node id in O(log² n) rounds (vs graph-diameter rounds for
+ *    plain min-label propagation), and every round is edge-proportional
+ *    work: a hash aggregation for the per-node minimum, a co-partitioned
+ *    join to rewire, and a distinct. High-degree nodes are exactly what
+ *    large-star flattens, so skew self-heals instead of accumulating. Each
+ *    round is localCheckpoint'ed: lineage (and optimizer time) stays O(1)
+ *    per round instead of growing with the iteration count.
+ *
+ *  - Driver finish (at most [[LocalEdges]] edges, long ids): the edge
+ *    set is collected and labeled by a min-root union-find. Every round
+ *    preserves both the touched node set and its connectivity, so the
+ *    check runs wherever the loop already knows the edge count — before
+ *    the first round and after each round's signature — and adds no job
+ *    when it does not fire. On a near-duplicate graph this replaces
+ *    every round's checkpoint, signature probe and AQE stage jobs with
+ *    one bounded collect, and the result is exact: the finish never
+ *    stops early.
+ *
+ * Only edge-touched nodes enter either path; isolated nodes (the vast
  * majority in a near-duplicate corpus) are unioned back at the end with
  * their own id as label — keeping them inside the loop would multiply
  * every shuffle by corpus/edge_nodes for rows whose label never moves.
  */
 object ConnectedComponents {
+
+  /** Edge count at or below which the driver finishes the labeling.
+    * 2¹⁸ edges of two longs each is about 4 MB collected (≤ 2¹⁹ label
+    * rows back), far below the default 1 GiB `spark.driver.maxResultSize`,
+    * so the collect is bounded by construction; near-duplicate graphs sit
+    * orders of magnitude below it, while a graph too big for the driver
+    * keeps the distributed loop until its rounds shrink the edge set. */
+  val LocalEdges: Long = 1L << 18
 
   /** min(N(u) ∪ {u}) per node over the symmetrized edge list, then rewire
     * every strictly-larger neighbor to that minimum. Output edges are
@@ -67,20 +93,54 @@ object ConnectedComponents {
     (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
   }
 
+  /** Min-root union-find over collected (u, v) edges: (node, component)
+    * for every endpoint, the component being the minimum id reachable. */
+  private def unionFind(edges: Array[Row]): Seq[Row] = {
+    val index = new mutable.LongMap[Int]()
+    val ids = mutable.ArrayBuffer[Long]()
+    def idx(x: Long): Int = index.getOrElseUpdate(x, { ids += x; ids.size - 1 })
+    val pairs = edges.map(r => (idx(r.getLong(0)), idx(r.getLong(1))))
+    val parent = Array.tabulate(ids.size)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
+      r
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      // the root with the smaller id wins, so every root is its
+      // component's minimum
+      if (ra != rb) {
+        if (ids(ra) < ids(rb)) parent(rb) = ra else parent(ra) = rb
+      }
+    }
+    ids.indices.map(i => Row(ids(i), ids(find(i))))
+  }
+
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Label every node (from `nodes`, one column) with the minimum node id
     * reachable through `edges` (aCol, bCol). Output: (node, component);
     * isolated nodes label themselves.
     *
-    * If the star-contraction loop hits `maxIter` before the fixpoint
-    * (needs ~log²(n) rounds; 20 covers any realistic graph), labels are
-    * APPROXIMATE upper bounds: a warning is logged and one extra
-    * pointer-jump pass compresses remaining two-level chains, but deep
-    * unconverged chains may still split one true component into several.
-    * Raise `maxIter` if the warning ever fires in production. */
+    * An edge set of at most [[LocalEdges]] rows with long ids —
+    * before the first round or after any round — is finished exactly on
+    * the driver. Otherwise, if the star-contraction loop hits `maxIter`
+    * before the fixpoint (needs ~log²(n) rounds; 20 covers any realistic
+    * graph), labels are APPROXIMATE upper bounds: a warning is logged and
+    * one extra pointer-jump pass compresses remaining two-level chains,
+    * but deep unconverged chains may still split one true component into
+    * several. Raise `maxIter` if the warning ever fires in production. */
   def label(nodes: DataFrame, edges: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 20): DataFrame = {
+      maxIter: Int = 20): DataFrame =
+    label(nodes, edges, aCol, bCol, maxIter, LocalEdges)
+
+  /** [[label]] with the driver-finish cut-off as a parameter: specs pass
+    * 0 to force the distributed loop. */
+  private[graft] def label(nodes: DataFrame, edges: DataFrame, aCol: String,
+      bCol: String, maxIter: Int, localEdges: Long): DataFrame = {
     val nodeCol = nodes.columns.head
     val allNodes = nodes.select(col(nodeCol).as("node")).distinct()
 
@@ -90,10 +150,14 @@ object ConnectedComponents {
         least(col("u"), col("v")).as("v"))
       .distinct()
       .localCheckpoint() // eager: truncate lineage before the loop
+    // the union-find reads long ids (every caller's id type); any other
+    // id type takes the loop
+    val longIds = e.schema("u").dataType == LongType
+    def fits(edgeCount: Long) = longIds && edgeCount <= localEdges
     var sig = signature(e)
     var converged = sig._1 == 0L
     var i = 0
-    while (!converged && i < maxIter) {
+    while (!converged && !fits(sig._1) && i < maxIter) {
       // One large/small alternation per checkpoint + signature probe.
       // Batching TWO alternations per checkpoint was tried in the
       // round-16 optimization pass and REGRESSED ~1.8× at sf0.1 (the
@@ -107,23 +171,33 @@ object ConnectedComponents {
       e = next
       i += 1
     }
-    // converged star forest: children point at the component root (the
-    // minimum id); roots appear only on the small side.
-    var touched = e.select(col("u").as("node"), col("v").as("component"))
-      .unionByName(e.select(col("v").as("node"), col("v").as("component")))
-      .groupBy("node").agg(min("component").as("component"))
-    if (!converged) {
-      log.warn(s"connected components did not converge in $maxIter rounds " +
-        "(edge signature still moving) — emitted labels are upper bounds, " +
-        "compressed by one extra pointer-jump pass; raise maxIter")
-      // node -> label(label(node)): compresses any two-level chain the
-      // truncated loop left behind (roots label themselves, so the
-      // self-join is total and monotone non-increasing).
-      val parents = touched
-        .select(col("node").as("component"), col("component").as("grand"))
-      touched = touched.join(parents, Seq("component"), "left")
-        .select(col("node"),
-          coalesce(col("grand"), col("component")).as("component"))
+    val touched = if (fits(sig._1)) {
+      // nullable, as any loop round leaves both columns (a min aggregate
+      // feeds them); an empty edge set always lands here, on both paths
+      val schema = StructType(Seq(StructField("node", LongType),
+        StructField("component", LongType)))
+      e.sparkSession.createDataFrame(
+        new java.util.ArrayList(unionFind(e.collect()).asJava), schema)
+    } else {
+      // converged star forest: children point at the component root (the
+      // minimum id); roots appear only on the small side.
+      val forest = e.select(col("u").as("node"), col("v").as("component"))
+        .unionByName(e.select(col("v").as("node"), col("v").as("component")))
+        .groupBy("node").agg(min("component").as("component"))
+      if (converged) forest
+      else {
+        log.warn(s"connected components did not converge in $maxIter rounds " +
+          "(edge signature still moving) — emitted labels are upper bounds, " +
+          "compressed by one extra pointer-jump pass; raise maxIter")
+        // node -> label(label(node)): compresses any two-level chain the
+        // truncated loop left behind (roots label themselves, so the
+        // self-join is total and monotone non-increasing).
+        val parents = forest
+          .select(col("node").as("component"), col("component").as("grand"))
+        forest.join(parents, Seq("component"), "left")
+          .select(col("node"),
+            coalesce(col("grand"), col("component")).as("component"))
+      }
     }
     val isolated = allNodes
       .join(touched.select("node"), Seq("node"), "left_anti")

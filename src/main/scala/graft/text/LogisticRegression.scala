@@ -185,9 +185,16 @@ object LogisticRegression {
       featFrame(docs, textCol, idCol, label, buckets)
         .filter(col("_bk") < trainBuckets)
         .select("doc_id", "y", "cells"))
-    // n = train docs with ≥1 gram; a driver SCALAR (one bounded count),
-    // baked into the step expression as a literal
-    val n = feats.select("doc_id").distinct().count()
+    // n = train docs with ≥1 gram; a driver SCALAR (one bounded
+    // aggregate), baked into the step expression as a literal. The same
+    // aggregate enforces the doc grain every iteration assumes: one row
+    // per non-null doc_id.
+    val stats = feats.agg(count(lit(1)), countDistinct(col("doc_id"))).head()
+    val n = stats.getLong(0)
+    if (stats.getLong(1) != n)
+      throw new IllegalArgumentException(s"trainWeights: $idCol must be " +
+        s"unique and non-null over the training slice, but its $n " +
+        s"documents carry ${stats.getLong(1)} distinct non-null ids")
     require(n > 0, "no training documents with at least one gram")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("cell",

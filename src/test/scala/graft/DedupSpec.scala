@@ -261,14 +261,23 @@ class DedupSpec extends SparkSpec {
       4L -> 4L, 5L -> 4L, 6L -> 4L, 7L -> 7L))
   }
 
-  test("connected components: random graphs equal union-find (seeded)") {
+  test("connected components: both paths equal union-find (seeded)") {
     val rnd = new scala.util.Random(1234)
-    for (trial <- 1 to 5) {
+    val random = (1 to 5).map { _ =>
       val n = 30 + rnd.nextInt(120)
       val nEdges = rnd.nextInt(2 * n)
-      val edges = Seq.fill(nEdges)(
+      n -> Seq.fill(nEdges)(
         (rnd.nextInt(n).toLong + 1, rnd.nextInt(n).toLong + 1))
-        .filter { case (a, b) => a != b }
+    }
+    val edgeCases = Seq(
+      "empty edge set" -> (10 -> Seq.empty[(Long, Long)]),
+      "self-loops only" -> (8 -> Seq((1L, 1L), (3L, 3L), (8L, 8L))),
+      "duplicate and reversed edges" -> (9 -> Seq((1L, 2L), (2L, 1L),
+        (1L, 2L), (4L, 3L), (3L, 4L), (3L, 3L), (5L, 4L), (4L, 5L))),
+      "isolated nodes" -> (40 -> Seq((7L, 3L), (3L, 5L), (20L, 21L))))
+    val trials = random.zipWithIndex.map { case (g, i) => s"random trial ${i + 1}" -> g } ++
+      edgeCases
+    for ((name, (n, edges)) <- trials) {
       // reference: plain union-find with min-id roots
       val parent = Array.tabulate(n + 1)(identity)
       def find(x: Int): Int =
@@ -279,11 +288,48 @@ class DedupSpec extends SparkSpec {
           parent(math.max(ra, rb)) = lo }
       }
       val want = (1 to n).map(i => i.toLong -> find(i).toLong).toMap
-      val got = graft.dedup.ConnectedComponents.label(
-          (1L to n.toLong).toDF("id"), edges.toDF("a", "b"), "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === want, s"trial $trial (n=$n, edges=${edges.size})")
+      def run(localEdges: Long) = graft.dedup.ConnectedComponents.label(
+        (1L to n.toLong).toDF("id"), edges.toDF("a", "b"), "a", "b",
+        20, localEdges)
+      // the default cut-off finishes on the driver; 0 forces the loop
+      val local = run(graft.dedup.ConnectedComponents.LocalEdges)
+      val loop = run(0L)
+      def labels(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(labels(local) === want, s"$name, driver finish (n=$n, edges=${edges.size})")
+      assert(labels(loop) === want, s"$name, distributed loop (n=$n, edges=${edges.size})")
+      assert(local.schema === loop.schema, name)
     }
+  }
+
+  test("connected components: unconverged labels are upper bounds") {
+    // two interleaved 64-node paths (odd ids, even ids), each chained in
+    // id order, so one round cannot reach either fixpoint
+    val path = (1L to 128L).toSeq
+    val edges = path.filter(_ > 2).map(x => (x, x - 2))
+    val nodes = path.toDF("id")
+    def check(got: Seq[(Long, Long)]): Unit = {
+      assert(got.map(_._1).sorted === path, "every node exactly once")
+      got.foreach { case (node, comp) =>
+        assert(comp <= node, s"label $comp of $node is not an upper bound")
+        assert(comp % 2 === node % 2, s"label $comp of $node leaves its component")
+      }
+      assert(got.map(_._2).distinct.size > 2, "one round converged; the spec shows nothing")
+    }
+    check(graft.dedup.ConnectedComponents.label(nodes, edges.toDF("a", "b"),
+        "a", "b", 1, 0L)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq)
+    // string ids never take the driver finish: under the default
+    // cut-off they stay on the loop and keep its truncation contract
+    val key = (x: Long) => f"n$x%04d"
+    val strLabels = graft.dedup.ConnectedComponents.label(
+        path.map(key).toDF("id"),
+        edges.map { case (a, b) => (key(a), key(b)) }.toDF("a", "b"),
+        "a", "b", maxIter = 1)
+    assert(strLabels.schema.map(_.dataType).distinct ===
+      Seq(org.apache.spark.sql.types.StringType))
+    check(strLabels.collect()
+      .map(r => r.getString(0).tail.toLong -> r.getString(1).tail.toLong).toSeq)
   }
 
   test("wide-key simhash banding equals chunk banding at every maxDist") {

@@ -118,6 +118,23 @@ class LogisticRegressionSpec extends SparkSpec {
     assert(fresh.toSeq === served.toSeq)
   }
 
+  test("duplicate training doc_ids are rejected") {
+    val docs = (0L until 40L).map(i =>
+      (i, s"tok${i % 7} tok${i % 11} filler words here", i % 3 == 0))
+    // the duplicate sits in the training slice, so the trainer sees it
+    val dup = splitIds(1, train = true).head
+    val withDup = (docs :+ ((dup, "another text under the same id", true)))
+      .toDF("doc_id", "text", "y")
+    val e = intercept[IllegalArgumentException] {
+      LogisticRegression.trainWeights(withDup, "text", "doc_id", col("y"),
+        buckets = 16, iters = 1)
+    }
+    assert(e.getMessage.contains("doc_id must be unique"), e.getMessage)
+    // the same corpus without the duplicate trains
+    assert(LogisticRegression.trainWeights(docs.toDF("doc_id", "text", "y"),
+      "text", "doc_id", col("y"), buckets = 16, iters = 1).count() > 0)
+  }
+
   // ------------------------------------------------- multiclass softmax
 
   /** ids pre-sorted into the engine's own md5 train/held-out slices so
