@@ -1,7 +1,13 @@
 package graft
 import org.apache.spark.sql.SparkSession
+/** The suite timer: `runMain graft.Bench [<name> ...]`, data dir from
+  * `$SPARK_GRAFT_SF_DIR`. Query names restrict the run to those queries
+  * (same warmup and timing) and leave the per-query file unwritten. */
 object Bench {
   def main(args: Array[String]): Unit = {
+    val unknown = args.filterNot(SparkEntry.queries.contains)
+    if (unknown.nonEmpty) throw new IllegalArgumentException(
+      s"Bench: unknown query name(s): ${unknown.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local("graft-bench")
     // A FAILED run must never masquerade as a fast success: the r15
@@ -43,6 +49,8 @@ object Bench {
     // query) — a deployment pays build once and serve per request, so
     // the conflated number overstated serving cost.
     val perQueryRuns = 3
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter(q => args.isEmpty || args.contains(q._1))
     case class Suite(perQuery: Seq[(String, Double)],
         buildServe: Seq[(String, Double, Double)]) {
       def total: Double = perQuery.map(_._2).sum
@@ -50,7 +58,7 @@ object Bench {
     def runSuite(): Suite = {
       val per = Seq.newBuilder[(String, Double)]
       val bs = Seq.newBuilder[(String, Double, Double)]
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      selected.foreach { case (name, fn) =>
         SparkEntry.buildServe.get(name) match {
           case Some(builder) =>
             val runs = (1 to perQueryRuns).map { _ =>
@@ -116,7 +124,8 @@ object Bench {
     // the top-15 spread line could not be diffed across rounds from
     // committed artifacts alone. One entry per query: min/med/max over
     // the whole-suite runs, plus the build/serve split where it exists.
-    def writePerq(ss: Vector[Suite]): Unit = {
+    // A filtered run writes none: it would replace the full table.
+    def writePerq(ss: Vector[Suite]): Unit = if (args.isEmpty) {
       val row = queryRowOf(ss)
       val rows = ss.head.perQuery.map(_._1).sorted.map(k => "  " + row(k))
       val path = sys.env.getOrElse("BENCH_PERQ_PATH", "BENCH_perq.json")

@@ -17,30 +17,39 @@ object SparkEntry {
     * "trading" name variants) enter the result alongside exact matches. */
   private val demoCfg = MatchConfig(fuzzyThreshold = 0.6)
 
+  /** The one cache for state the queries share per (session, dir,
+    * tag): persisted demo frames, corpus counts, deterministic model
+    * fits and the bench Bloom name. Each entry is built exactly once:
+    * `computeIfAbsent` only allocates the [[Cell]], and the build runs
+    * in the cell's lazy val, outside the map's bin lock. So a build may
+    * take other keys' cells (dim → matched → match → web/abr), a second
+    * thread asking for the same key waits for the first build, unrelated
+    * keys never block each other, and a build that throws is retried on
+    * the next access. Every caller treats a dir as immutable for the
+    * session's life (regenerate a corpus under a fresh dir or session).
+    * Entries live until [[releaseSharedFrames]] drops their dir; there
+    * is no size bound because every harness creates one session and the
+    * only multi-dir one (ScaleSoak) releases each dir after use. */
+  private final class Cell(build: => AnyRef) {
+    @volatile var built = false
+    lazy val value: AnyRef = { val v = build; built = true; v }
+  }
+  private val shared =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Cell]()
+  private[graft] def cached[V <: AnyRef](s: SparkSession, dir: String, tag: String)(
+      build: => V): V =
+    shared.computeIfAbsent((s, dir, tag), _ => new Cell(build))
+      .value.asInstanceOf[V]
+
   /** The cleaned/matched demo frames feed many queries (and appear 2-4×
     * inside single query trees); persist once per (session, dir). The
     * frames are small (the cleaned sides of the demo workload), and
     * Spark's cache matches by analyzed plan, so every consumer hits the
     * same entry. */
-  private val frameCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-  // NOT computeIfAbsent: building one frame recursively builds its
-  // parents through this same cache (dim → matched → match → web/abr),
-  // and a nested computeIfAbsent into the bin being computed throws
-  // IllegalStateException("Recursive update") — bin layout depends on
-  // the session's identity hash, so it surfaced only on some runs.
-  // get/putIfAbsent allows re-entry; a lost race just drops its persist.
-  private def cachedFrame(s: SparkSession, dir: String, tag: String)(
-      f: => DataFrame): DataFrame = {
-    val key = (s, dir, tag)
-    val hit = frameCache.get(key)
-    if (hit != null) hit
-    else {
-      val built = f.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val prev = frameCache.putIfAbsent(key, built)
-      if (prev != null) { built.unpersist(); prev } else built
-    }
-  }
+  private[graft] def cachedFrame(s: SparkSession, dir: String, tag: String)(
+      f: => DataFrame): DataFrame =
+    cached(s, dir, tag)(
+      f.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** The RELEASE-MART counted sample, shared by `corpus_release` and
     * `corpus_release_manifest` (one persist per session+dir): the
@@ -81,76 +90,30 @@ object SparkEntry {
     * counted ONCE per (session, dir) instead of once per query
     * invocation — at corpus scale the derivation pass should not be
     * re-run by every consumer (round-6 verdict, "what's wrong" #3).
-    * Parquet counts are metadata-cheap but still schedule a job.
-    * Deliberately NO invalidation: every caller (driver gate, bench,
-    * soak, specs) treats an sfDir as immutable for the session's life —
-    * regenerating a corpus in-place mid-session would serve a stale
-    * count (and a stale nlist); use a fresh dir or session instead. */
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), java.lang.Long]()
+    * Parquet counts are metadata-cheap but still schedule a job. */
   private def cachedCount(s: SparkSession, dir: String, table: String): Long =
-    countCache.computeIfAbsent((s, dir, table),
-      _ => Demo.table(s, dir, table).count())
-
-  /** Bounded LRU for the shared deterministic model fits below: the
-    * former unbounded ConcurrentHashMaps keyed by (SparkSession, sfDir)
-    * pinned SparkSession references and trained models for the JVM
-    * lifetime — a leak in any long-lived process that creates/stops
-    * many sessions (round-13 advice). 8 entries covers every harness
-    * (verify + bench + soak alternate at most a handful of
-    * (session, dir) pairs); an evicted fit just retrains — the
-    * trainers are deterministic, so eviction never changes a result. */
-  private final class ModelLru[V] {
-    private val map = new java.util.LinkedHashMap[(SparkSession, String), V](
-      16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String), V]): Boolean =
-        size() > 8
-    }
-    // The training closure f runs OUTSIDE the lock: a full model fit
-    // is many Spark jobs, and holding the single map lock across it
-    // would serialize unrelated fits in concurrent sessions (round-14
-    // advice). Two threads missing the same key may both fit — the
-    // trainers are deterministic, so the duplicate is identical and
-    // last-put-wins changes no result (same reasoning as eviction).
-    def get(s: SparkSession, dir: String)(f: => V): V = {
-      val key = (s, dir)
-      val hit = synchronized(map.get(key))
-      if (hit != null) hit
-      else {
-        val v = f
-        synchronized {
-          val raced = map.get(key)
-          if (raced != null) raced else { map.put(key, v); v }
-        }
-      }
-    }
-    def put(key: (SparkSession, String), v: V): Unit = synchronized {
-      map.put(key, v)
-    }
-  }
+    cached[java.lang.Long](s, dir, s"count:$table")(
+      java.lang.Long.valueOf(Demo.table(s, dir, table).count()))
 
   /** One PCA fit per (session, sfDir), shared by the CONSUMER queries
     * (eigenvalues / projection / persisted serve) — the fit is
     * deterministic (exact-integer statistics), so sharing changes no
-    * result; same immutable-sfDir contract as [[countCache]].
-    * embed_pca_components is the TRAINER query and always refits (its
-    * bench/soak rows measure the statistics passes), and
+    * result. embed_pca_components is the TRAINER query and always
+    * refits (its bench/soak rows measure the statistics passes), and
     * embed_pca_incremental deliberately fits from merged batch
     * statistics (that is its point). */
-  private val pcaCache = new ModelLru[graft.embeddings.Pca.Model]
   private def cachedPcaModel(s: SparkSession, dir: String): graft.embeddings.Pca.Model =
-    pcaCache.get(s, dir)(
+    cached(s, dir, "model:pca")(
       graft.embeddings.Pca.fit(Demo.table(s, dir, "embeddings"),
         "embedding", "vec_id", k = 4, iters = 32))
 
   /** One OPQ fit per (session, sfDir) — same deterministic-trainer
     * sharing discipline as [[cachedPcaModel]]. ann_opq_topk is the
-    * TRAINER query and always refits (its bench/soak rows measure the
-    * alternation); opq_recall consumes the shared fit. */
-  private val opqCache = new ModelLru[graft.embeddings.Opq.Model]
+    * TRAINER query: it always refits and seeds this entry; opq_recall
+    * consumes the shared fit. */
+  private val OpqTag = "model:opq"
   private def cachedOpqModel(s: SparkSession, dir: String): graft.embeddings.Opq.Model =
-    opqCache.get(s, dir)(
+    cached(s, dir, OpqTag)(
       graft.embeddings.Opq.train(Demo.table(s, dir, "embeddings"),
         "embedding", "vec_id", m = 8, ksub = 16))
 
@@ -161,11 +124,9 @@ object SparkEntry {
     * measure the trainers); the hybrid/production serving queries
     * consume the shared deterministic fit (a deploy-time artifact, not
     * per-query work). */
-  private val kmeansCache =
-    new ModelLru[(Array[(Long, Array[Double], Double)], Array[Double])]
   private def cachedKmeansFit(s: SparkSession, dir: String)
       : (Array[(Long, Array[Double], Double)], Array[Double]) =
-    kmeansCache.get(s, dir) {
+    cached(s, dir, "model:kmeans") {
       val emb = Demo.table(s, dir, "embeddings")
       (EmbeddingOps.kmeansCentroids(emb, "embedding", "vec_id", nlist = 8),
         ProductQuantization.trainedCodebook(emb, "embedding", "vec_id",
@@ -206,23 +167,19 @@ object SparkEntry {
     * production shape (the eval-suite sketch is a deploy-time artifact,
     * not per-query work), and [[graft.dedup.BloomRegistry]] names are
     * unique per SparkContext so per-invocation registration would
-    * throw on bench's median-of-3 reruns anyway. Session-lifetime like
-    * `frameCache`/`countCache`: entries (and their registry filters)
-    * live until the JVM exits — the documented demo-harness tradeoff,
-    * not a pattern for a long-lived multi-session server. */
-  private val bloomCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+    * throw on bench's median-of-3 reruns anyway. The registry keeps a
+    * released dir's filter until the JVM exits (it has no unregister);
+    * a rebuild after release registers under a fresh name. */
   // Registry names must be unique per JVM: a monotone counter is
   // collision-free by construction (hashCode-derived names could
   // collide across dirs/sessions and crash register()'s fail-fast).
   private val bloomSeq = new java.util.concurrent.atomic.AtomicLong()
   private def benchBloomName(s: SparkSession, dir: String): String =
-    bloomCache.computeIfAbsent((s, dir), { _ =>
+    cached(s, dir, "bloom")(
       TextDedup.registerBenchBloom(s,
         Demo.table(s, dir, "documents").filter(col("doc_id") % 10 === 3),
         "text", n = 3, fpp = 0.01,
-        name = s"bench-shingles-${bloomSeq.incrementAndGet()}")
-    })
+        name = s"bench-shingles-${bloomSeq.incrementAndGet()}"))
 
   private def webClean(s: SparkSession, dir: String): DataFrame =
     cachedFrame(s, dir, "web")(Clean.web(Demo.ccRaw(s, dir)))
@@ -737,23 +694,24 @@ object SparkEntry {
           Demo.table(s, dir, "documents"), "text", "doc_id", minTokens = 10)
       }).foreach(_.count())
 
-  /** Release every shared frame (and cached count) held for
-    * (session, dir) — multi-corpus sessions (the 1×/10×/100× soak
-    * ladder) call this between factor dirs so persisted frames from a
-    * finished corpus don't accumulate: at 100× the adversarially dense
-    * audio-pair frame alone is ~10⁸ rows, and three corpora's worth of
-    * cached frames exhausted the soak heap at a broadcast build (found
-    * by the round-8 session-3 full-ladder run). */
+  /** Release every shared entry held for (session, dir): frames are
+    * unpersisted, and counts, model fits and the Bloom name are
+    * forgotten, so the next access rebuilds them. Multi-corpus sessions
+    * (the 1×/10×/100× soak ladder) call this between factor dirs so
+    * persisted frames from a finished corpus don't accumulate: at 100×
+    * the adversarially dense audio-pair frame alone is ~10⁸ rows, and
+    * three corpora's worth of cached frames exhausted the soak heap at a
+    * broadcast build (found by the round-8 session-3 full-ladder run). */
   def releaseSharedFrames(s: SparkSession, dir: String): Unit = {
     import scala.jdk.CollectionConverters._
-    frameCache.keySet.asScala
-      .filter(k => (k._1 eq s) && k._2 == dir).toSeq.foreach { k =>
-        val df = frameCache.remove(k)
-        if (df != null) df.unpersist(false)
+    shared.keySet.asScala.filter(k => (k._1 eq s) && k._2 == dir).toSeq
+      .foreach { k =>
+        val cell = shared.remove(k)
+        if (cell != null && cell.built) cell.value match {
+          case df: org.apache.spark.sql.Dataset[_] => df.unpersist(false)
+          case _ =>
+        }
       }
-    countCache.keySet.asScala
-      .filter(k => (k._1 eq s) && k._2 == dir).toSeq
-      .foreach(countCache.remove)
   }
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
@@ -769,6 +727,12 @@ object SparkEntry {
    * overstated serving cost ~4× (the round-7 verdict's ask #2).
    */
   val buildServe: Map[String, (SparkSession, String) => () => DataFrame] = Map(
+    // Training-data ops: the PERSISTED compressed index layouts. Each
+    // invocation (re)writes the cluster-partitioned index — SQ8 codes +
+    // scale, or m-byte PQ codes, never the float vectors — then serves
+    // top-k FROM the parquet layout with dynamic partition pruning on
+    // the probed cells (asserted in EmbeddingIndexSpec). Oracles are the
+    // in-memory twins: persistence must not change a single value.
     "ann_ivf_sq8_index_topk" -> ((s, dir) => {
       val emb = Demo.table(s, dir, "embeddings")
       val cents = EmbeddingOps.ivfCentroids(emb, "embedding", "vec_id", 8)
@@ -1021,6 +985,9 @@ object SparkEntry {
           .orderBy("query_id", "rank")
       }
     }),
+    // Train-once/serve-many twin: decimal weights round-trip parquet
+    // exactly, so serving from the persisted model is bit-identical to
+    // classify_quality_lr (same oracle)
     "classify_quality_lr_from_model" -> ((s, dir) => {
       val path = tmpIndexDir("lrmodel", dir)
       graft.text.LogisticRegression.writeModel(
@@ -1029,6 +996,9 @@ object SparkEntry {
         Demo.table(s, dir, "documents"), "text", "doc_id", lrLabel, path)
         .orderBy("doc_id")
     }),
+    // Train-once/serve-many twin: decimal weights round-trip parquet
+    // exactly, so serving from the persisted model is bit-identical to
+    // classify_langid_lr (same oracle)
     "classify_langid_lr_from_model" -> ((s, dir) => {
       val path = tmpIndexDir("softmaxmodel", dir)
       graft.text.LogisticRegression.writeSoftmaxModel(
@@ -1037,6 +1007,10 @@ object SparkEntry {
         Demo.table(s, dir, "documents"), "text", "doc_id", "lang", path)
         .orderBy("doc_id")
     }),
+    // Train-once/serve-many: the SAME prediction served from the
+    // persisted model layout (classes/ + terms/ parquet) — the stored
+    // decimal log columns are exactly what scoring sums, so this must be
+    // bit-identical to classify_lang_nb (same oracle)
     "classify_lang_nb_from_model" -> ((s, dir) => {
       val path = tmpIndexDir("nbmodel", dir)
       graft.text.Classifier.writeNbModel(Demo.table(s, dir, "documents"),
@@ -1045,6 +1019,8 @@ object SparkEntry {
         Demo.table(s, dir, "documents"), "text", "doc_id", "lang", path)
         .orderBy("doc_id")
     }),
+    // Train-once/serve-many twin for the centroid classifier: the
+    // persisted (label, cv) model serves bit-identical predictions
     "classify_embedding_centroid_from_model" -> ((s, dir) => {
       val path = tmpIndexDir("centmodel", dir)
       graft.text.Classifier.writeCentroidModel(
@@ -1341,8 +1317,12 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     matchDf(spark, "/root/testdata/sf0.001").orderBy("crawl_url")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** One entry per implemented operator from SURVEY.md §2. The
+    * persisted-artifact queries are derived from [[buildServe]]: build,
+    * then serve. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] = buildServe.map {
+    case (name, build) => name -> ((s: SparkSession, dir: String) => build(s, dir)())
+  } ++ Map[String, (SparkSession, String) => DataFrame](
     // §2.2/2.5/2.7: projection+filter chains, native expressions, dedup
     "etl_clean_web" -> ((s, dir) =>
       webClean(s, dir).select("crawl_url", "clean_name", "normalized_name",
@@ -2828,14 +2808,6 @@ object SparkEntry {
         .orderBy("doc_id", "rank")),
     // Retrieval: BM25 full-text scores against a probe query (postings
     // filtered to the query's terms before any shuffle)
-    // Full-text serving from the persisted index — see buildServe
-    "bm25_index_search" -> ((s, dir) => buildServe("bm25_index_search")(s, dir)()),
-    // The INCREMENTAL full-text index grown over 3 epochs — served
-    // rows must be bit-identical to the fresh computation (same oracle
-    // as bm25_search); plus its per-epoch freshness gauge
-    "bm25_index_incremental" -> ((s, dir) => buildServe("bm25_index_incremental")(s, dir)()),
-    "bm25_index_freshness" -> ((s, dir) => buildServe("bm25_index_freshness")(s, dir)()),
-    "bm25_index_delete" -> ((s, dir) => buildServe("bm25_index_delete")(s, dir)()),
     "bm25_search" -> ((s, dir) =>
       graft.text.Relevance.bm25(Demo.table(s, dir, "documents"),
         "text", "doc_id", query = "spark window merge")
@@ -2940,11 +2912,6 @@ object SparkEntry {
     // split, count-trained in-engine, decimal log-sum scoring
     "classify_lang_nb" -> ((s, dir) =>
       nbPredDf(s, dir).orderBy("doc_id")),
-    // Train-once/serve-many: the SAME prediction served from the
-    // persisted model layout (classes/ + terms/ parquet) — the stored
-    // decimal log columns are exactly what scoring sums, so this must be
-    // bit-identical to classify_lang_nb (same oracle)
-    "classify_lang_nb_from_model" -> ((s, dir) => buildServe("classify_lang_nb_from_model")(s, dir)()),
     // Scale-bounded NB variant: FIXED hashed feature alphabet (the DSIR
     // dsir_cells kernel — unigram+bigram hashing trick), so the model is
     // ≤ buckets × classes rows at ANY corpus size; the exact-vocab
@@ -2974,11 +2941,6 @@ object SparkEntry {
       lrWeightsDf(s, dir)
         .select(col("cell"), col("w").cast("double").as("w"))
         .orderBy("cell")),
-    // Train-once/serve-many twin: decimal weights round-trip parquet
-    // exactly, so serving from the persisted model is bit-identical to
-    // classify_quality_lr (same oracle)
-    "classify_quality_lr_from_model" -> ((s, dir) =>
-      buildServe("classify_quality_lr_from_model")(s, dir)()),
     // Classifier-QA reliability report: fixed decile bins over the
     // served probability, exact micro-unit mean probability vs the
     // empirical weak-label rate per bin — the calibration table a
@@ -3007,20 +2969,6 @@ object SparkEntry {
       softmaxWeightsDf(s, dir)
         .select(col("cell"), col("cls"), col("w").cast("double").as("w"))
         .orderBy("cell", "cls")),
-    // Train-once/serve-many twin: decimal weights round-trip parquet
-    // exactly, so serving from the persisted model is bit-identical to
-    // classify_langid_lr (same oracle)
-    "classify_langid_lr_from_model" -> ((s, dir) =>
-      buildServe("classify_langid_lr_from_model")(s, dir)()),
-    // Hybrid retrieval: RRF fusion (k=60) of the persisted BM25 and
-    // IVF+PQ-rerank serve paths — integer rank arithmetic, so the
-    // fused ranking is exactly oracle-checkable end to end
-    "search_hybrid_rrf" -> ((s, dir) =>
-      buildServe("search_hybrid_rrf")(s, dir)()),
-    // The incrementally-grown serving stack — must fuse to the exact
-    // rows of the rebuild-path hybrid (same oracle)
-    "search_hybrid_rrf_incremental" -> ((s, dir) =>
-      buildServe("search_hybrid_rrf_incremental")(s, dir)()),
     // WARC→HTML main-content extraction: each document's text wrapped
     // in a realistic page (nav, cookie banner, footer — the planted
     // boilerplate) and run through the jusText-style block classifier;
@@ -3040,15 +2988,6 @@ object SparkEntry {
         graft.functions.GraftFunctions.html_main_text(html).as("main_text"))
         .orderBy("doc_id")
     }),
-    // Batched retrieval serving: a query RELATION scored in one plan
-    // from the persisted BM25 index (DPP-pruned postings scan); each
-    // query's rows bit-identical to the single-query call
-    "bm25_multi_query" -> ((s, dir) =>
-      buildServe("bm25_multi_query")(s, dir)()),
-    // Multi-query hybrid fusion: both batched serve paths fused with
-    // per-query_id ranking windows (the production serving shape)
-    "search_hybrid_rrf_multi" -> ((s, dir) =>
-      buildServe("search_hybrid_rrf_multi")(s, dir)()),
     // Training-data ops: nearest-centroid (Rocchio) classifier over the
     // embedding column — per-class exact integer-sum mean vectors,
     // broadcast cosine argmax on the held-out slice. (The synthetic
@@ -3059,9 +2998,6 @@ object SparkEntry {
       graft.text.Classifier.centroidPredict(
         Demo.table(s, dir, "embeddings"), "embedding", "vec_id", "label")
         .orderBy("vec_id")),
-    // Train-once/serve-many twin for the centroid classifier: the
-    // persisted (label, cv) model serves bit-identical predictions
-    "classify_embedding_centroid_from_model" -> ((s, dir) => buildServe("classify_embedding_centroid_from_model")(s, dir)()),
     // Training-data ops: DSIR importance weights (hashed unigram+bigram
     // log-likelihood ratio vs the lang='en' seed slice) — the trained
     // data-selection step between crawling and training
@@ -3163,9 +3099,6 @@ object SparkEntry {
         "text", "doc_id", merges)
         .orderBy("doc_id")
     }),
-    // Train-once/serve-many: encoding served from the persisted merge
-    // table — must be bit-identical to bpe_encode (same oracle)
-    "bpe_encode_from_model" -> ((s, dir) => buildServe("bpe_encode_from_model")(s, dir)()),
     // BYTE-level BPE (GPT-2/tiktoken lineage): the alphabet is the 256
     // UTF-8 bytes as hex-pair symbols, so every string is representable
     // (no unk by construction) — the merge loop and oracle CTE chain are
@@ -3188,8 +3121,6 @@ object SparkEntry {
         "text", "doc_id", merges)
         .orderBy("doc_id")
     }),
-    // Train-once/serve-many byte twin — bit-identical to bpe_byte_encode
-    "bpe_byte_encode_from_model" -> ((s, dir) => buildServe("bpe_byte_encode_from_model")(s, dir)()),
     // The FULL production byte-BPE composition (GPT-2 encoder.py):
     // regex PRE-TOKENIZATION (contractions, space-carrying runs,
     // case-sensitive) → UTF-8 bytes → merges. Oracle re-derives the
@@ -3218,8 +3149,6 @@ object SparkEntry {
         Demo.table(s, dir, "documents"), "text", "doc_id", merges)
         .orderBy("doc_id")
     }),
-    "bpe_byte_pretok_encode_from_model" -> ((s, dir) =>
-      buildServe("bpe_byte_pretok_encode_from_model")(s, dir)()),
     // Tokenizer-eval mart: BYTES PER TOKEN by language for the
     // production (pretok byte-BPE) tokenizer — the compression metric
     // tokenizer papers report, next to fertility's pieces-per-word
@@ -3257,14 +3186,6 @@ object SparkEntry {
         Demo.table(s, dir, "documents"), "text", "doc_id", merges)
         .orderBy("doc_id")
     }),
-    // Tokenizer artifact interop: export → import → serve (GPT-2
-    // vocab.bpe + encoder.json round trip; same oracle as the ids path)
-    "bpe_gpt2_roundtrip_encode_ids" -> ((s, dir) =>
-      buildServe("bpe_gpt2_roundtrip_encode_ids")(s, dir)()),
-    "bpe_hf_roundtrip_encode_ids" -> ((s, dir) =>
-      buildServe("bpe_hf_roundtrip_encode_ids")(s, dir)()),
-    "bpe_specials_roundtrip_encode_ids" -> ((s, dir) =>
-      buildServe("bpe_specials_roundtrip_encode_ids")(s, dir)()),
     // Training-data ops: unigram-LM (SentencePiece) tokenizer trained
     // in-engine by deterministic Viterbi-EM over a bounded type sample
     // — the third tokenizer family (wordpiece, BPE, unigram). The
@@ -3286,12 +3207,6 @@ object SparkEntry {
         "text", "doc_id", model, maxPieceLen = 8)
         .orderBy("doc_id")
     }),
-    // Train-once/serve-many: unigram encoding served from the persisted
-    // vocabulary — bit-identical to tokenize_unigram (same oracle)
-    "tokenize_unigram_from_model" -> ((s, dir) =>
-      buildServe("tokenize_unigram_from_model")(s, dir)()),
-    "tokenize_unigram_hf_roundtrip" -> ((s, dir) =>
-      buildServe("tokenize_unigram_hf_roundtrip")(s, dir)()),
     // WordPiece TRAINING (likelihood-scored merges — the third
     // tokenizer family's trainer, completing {BPE, Unigram, WordPiece}
     // × {train, serve, artifact interop}): the oracle replays every
@@ -3308,10 +3223,6 @@ object SparkEntry {
         Demo.table(s, dir, "documents"), "text", topK = 256,
         numMerges = 24)
         .orderBy("id")),
-    "tokenize_wordpiece" -> ((s, dir) =>
-      buildServe("tokenize_wordpiece")(s, dir)()),
-    "wordpiece_hf_roundtrip_encode_ids" -> ((s, dir) =>
-      buildServe("wordpiece_hf_roundtrip_encode_ids")(s, dir)()),
     // BYTES PER PIECE by language for the trained WordPiece vocab —
     // the compression metric next to the BPE family's
     // tokenizer_compression_by_lang and DemoVocab fertility, so all
@@ -3356,10 +3267,6 @@ object SparkEntry {
       graft.embeddings.Pca.project(Demo.table(s, dir, "embeddings"),
         "embedding", "vec_id", cachedPcaModel(s, dir))
         .orderBy("vec_id")),
-    // Train-once/serve-many: projection served from the persisted
-    // integer model — bit-identical to embed_pca_project (same oracle)
-    "embed_pca_project_from_model" -> ((s, dir) =>
-      buildServe("embed_pca_project_from_model")(s, dir)()),
     // Whitened (unit-variance, decorrelated) projection — the standard
     // representation fed to clustering/SemDeDup/OPQ; scales are the
     // IEEE √λ of the shared fit's Rayleigh quotients
@@ -3678,21 +3585,6 @@ object SparkEntry {
         "embedding", "vec_id", k = 5, nlist = 8, nprobe = 2, cb,
         m = 8, ksub = 16, rerankK = 50)
     }),
-    // Training-data ops: the PERSISTED compressed index layouts. Each
-    // invocation (re)writes the cluster-partitioned index — SQ8 codes +
-    // scale, or m-byte PQ codes, never the float vectors — then serves
-    // top-k FROM the parquet layout with dynamic partition pruning on
-    // the probed cells (asserted in EmbeddingIndexSpec). Oracles are the
-    // in-memory twins: persistence must not change a single value.
-    "ann_ivf_sq8_index_topk" -> ((s, dir) => buildServe("ann_ivf_sq8_index_topk")(s, dir)()),
-    "ann_ivf_pq_index_topk" -> ((s, dir) => buildServe("ann_ivf_pq_index_topk")(s, dir)()),
-    // The INCREMENTAL index grown over 3 epochs — served rows must be
-    // bit-identical to the full rebuild (same oracle as
-    // ann_ivf_pq_index_topk); plus its per-cell staleness gauge
-    "ann_index_incremental" -> ((s, dir) => buildServe("ann_index_incremental")(s, dir)()),
-    "ann_index_reindex" -> ((s, dir) => buildServe("ann_index_reindex")(s, dir)()),
-    "ann_index_staleness" -> ((s, dir) => buildServe("ann_index_staleness")(s, dir)()),
-    "ann_index_delete" -> ((s, dir) => buildServe("ann_index_delete")(s, dir)()),
     // Training-data ops: the TRAINED production tiers, driver-checked.
     // kmeansCentroids / trainedCodebook are bit-deterministic (bounded
     // md5-ordered sample, no RNG), so the DuckDB oracle replays the
@@ -3725,17 +3617,6 @@ object SparkEntry {
         emb.filter(col("vec_id") < EmbeddingOps.DemoQueryCount), emb,
         "embedding", "vec_id", k = 5, cb, m = 8, ksub = 16)
     }),
-    // Training-data ops: the ENTIRE production serving path in one
-    // driver-checked query — trained coarse centroids + trained PQ
-    // codebook + PERSISTED compressed index (DPP-pruned probe, ADC on
-    // stored codes) + exact float rerank of the bounded candidate list.
-    // IVF8,PQ8,Refine(Flat) end to end; the oracle replays every stage.
-    "ann_production_topk" -> ((s, dir) => buildServe("ann_production_topk")(s, dir)()),
-    // OPQ production: the full OPQ8,IVF8,PQ8,Refine(Flat) factory path
-    // (see buildServe) — rotated-space coarse quantizer + rotated
-    // codes, original-float rerank; oracle replays the whole chain
-    "ann_opq_production_topk" -> ((s, dir) =>
-      buildServe("ann_opq_production_topk")(s, dir)()),
     // OPQ: learned rotation (PCA-allocated init + Procrustes
     // alternation, driver-trained on the bounded sample) before PQ —
     // rotated-space ADC top-k; the oracle replays the ENTIRE
@@ -3747,7 +3628,7 @@ object SparkEntry {
       // embed_pca_components discipline); opq_recall shares the cache
       val model = graft.embeddings.Opq.train(emb, "embedding", "vec_id",
         m = 8, ksub = 16)
-      opqCache.put((s, dir), model)
+      shared.put((s, dir, OpqTag), new Cell(model))
       graft.embeddings.Opq.adcTopK(
         emb.filter(col("vec_id") < EmbeddingOps.DemoQueryCount), emb,
         "embedding", "vec_id", k = 5, model)
@@ -4042,11 +3923,6 @@ object SparkEntry {
         Demo.table(s, dir, "documents"), "text", "doc_id", "lang",
         softmaxWeightsDf(s, dir), lrLabel, lrWeightsDf(s, dir))
         .orderBy("doc_id")),
-    // Streaming deploy-time twin: the same four gates served from
-    // persisted artifacts over micro-batch epochs (see buildServe) —
-    // gated by the UNCHANGED batch oracle, so bit-exactness is the gate
-    "curate_quality_stack_streaming" -> ((s, dir) =>
-      buildServe("curate_quality_stack_streaming")(s, dir)()),
     // The ablation MART over the stack's reason columns: per
     // (lang, source), each gate's pass count and the kept fraction —
     // the FineWeb-style curation-review surface (one conditional

@@ -141,21 +141,6 @@ object CorpusPipeline {
     finishFromKeepers(keepers(docs, textCol, idCol, minTokens), bench,
       textCol, idCol, langCol, targetShares, outFraction, budget)
 
-  /** [[prepare]] with the semantic stage spliced in between dedup and
-    * decontamination: text keepers → [[semanticKeepers]] over their
-    * embeddings → decontamination → mixture → packing. */
-  def prepareSemantic(docs: DataFrame, embeddings: DataFrame,
-      bench: DataFrame, textCol: String, idCol: String,
-      vecCol: String, vecIdCol: String,
-      cents: Array[(Long, Array[Double], Double)], threshold: Double,
-      langCol: String, minTokens: Int = 10,
-      targetShares: Map[String, Double], outFraction: Double = 0.5,
-      budget: Int = 512): DataFrame =
-    finishFromKeepers(
-      semanticKeepers(keepers(docs, textCol, idCol, minTokens),
-        embeddings, idCol, vecCol, vecIdCol, cents, threshold),
-      bench, textCol, idCol, langCol, targetShares, outFraction, budget)
-
   /** Row counts after each stage — the run report a pipeline emits.
     * Each stage is persisted before the six count() actions run (the
     * CC loop alone re-executes its upstream once per round otherwise)

@@ -102,7 +102,7 @@ object Pipeline {
     } catch {
       case e: Throwable =>
         throw new RuntimeException(
-          s"Pipeline run $runId failed after ${(System.nanoTime() - t0) / 1e9}%.1f s",
+          f"Pipeline run $runId failed after ${(System.nanoTime() - t0) / 1e9}%.1f s",
           e)
     }
   }

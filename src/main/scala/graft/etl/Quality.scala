@@ -6,41 +6,8 @@ import org.apache.spark.sql.functions._
 /**
  * Data-quality assertions — the reference's dbt test layer
  * (dbt/tests/ and dbt/models/ schema.yml files) as Spark checks.
- * Each check returns the VIOLATING rows (empty = pass), mirroring dbt's
- * convention that a test query returning rows fails.
  */
 object Quality {
-
-  /** assert_no_duplicate_abns.sql: ABNs appearing more than once. */
-  def duplicateAbns(dim: DataFrame): DataFrame =
-    dim.groupBy("abn").agg(count(lit(1)).as("n")).filter(col("n") > 1)
-
-  /** assert_valid_confidence_scores.sql: scores outside [0,1] or null. */
-  def invalidConfidence(dim: DataFrame,
-      scoreCol: String = "match_confidence_score"): DataFrame =
-    dim.filter(col(scoreCol).isNull ||
-      col(scoreCol) < 0.0 || col(scoreCol) > 1.0)
-
-  /** assert_minimum_match_rate.sql: fails (returns one row) when
-    * matches/web < minRate. */
-  def belowMatchRate(web: DataFrame, matches: DataFrame,
-      minRate: Double = 0.20): DataFrame = {
-    val rate = matches.agg(count(lit(1))).crossJoin(web.agg(count(lit(1))))
-      .toDF("m", "w")
-      .select((col("m") / col("w")).as("match_rate"))
-    rate.filter(col("match_rate") < minRate)
-  }
-
-  /** accepted_values checks (schema.yml): rows whose column value is
-    * outside the allowed set (nulls pass, as in dbt). */
-  def notAccepted(df: DataFrame, column: String, allowed: Seq[String]): DataFrame =
-    df.filter(col(column).isNotNull && !col(column).isInCollection(allowed))
-
-  /** accepted_range check (dbt_utils.accepted_range). */
-  def outOfRange(df: DataFrame, column: String,
-      lo: Double, hi: Double): DataFrame =
-    df.filter(col(column).isNotNull &&
-      (col(column) < lo || col(column) > hi))
 
   /** Source-freshness check (dbt sources.yml:27-29: `warn_after` 24 h,
     * `error_after` 48 h on the web source's load timestamp): one row with
@@ -65,9 +32,13 @@ object Quality {
           .when(col("age_hours") > warnAfterHours, "warn")
           .otherwise("pass"))
 
-  /** All dim_companies checks as ONE one-row DataFrame (a single job:
-    * one row-level aggregate + the duplicate-key sub-aggregate), instead
-    * of dimChecks' six actions — and oracle-checkable. */
+  /** All dim_companies checks as ONE one-row DataFrame of violation
+    * counts (a single job: one row-level aggregate + the duplicate-key
+    * sub-aggregate), oracle-checkable. The counts are dbt's tests:
+    * assert_no_duplicate_abns.sql (`duplicate_abns`),
+    * assert_valid_confidence_scores.sql (scores outside [0,1] or null,
+    * `invalid_confidence`), and schema.yml's accepted_values on status,
+    * state and source (nulls pass, as in dbt). */
   def report(dim: DataFrame): DataFrame = {
     def cnt(cond: org.apache.spark.sql.Column) =
       sum(when(cond, 1L).otherwise(0L))
@@ -89,16 +60,4 @@ object Quality {
       .agg(count(lit(1)).as("duplicate_abns"))
     dups.crossJoin(rowLevel)
   }
-
-  /** Run all dim_companies checks; returns (checkName → violationCount). */
-  def dimChecks(dim: DataFrame): Map[String, Long] = Map(
-    "no_duplicate_abns" -> duplicateAbns(dim).count(),
-    "valid_confidence" -> invalidConfidence(dim).count(),
-    "accepted_status" -> notAccepted(dim, "entity_status",
-      Seq("Active", "Cancelled")).count(),
-    "accepted_state" -> notAccepted(dim, "state",
-      graft.functions.Text.ValidStates).count(),
-    "accepted_source" -> notAccepted(dim, "data_source",
-      Seq("MATCHED", "ABR_ONLY", "MERGED", "WEB_ONLY")).count(),
-    "confidence_range" -> outOfRange(dim, "match_confidence_score", 0, 1).count())
 }

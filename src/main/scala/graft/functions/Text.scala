@@ -264,11 +264,6 @@ object Text {
     when(uni === 0, lit(0.0)).otherwise(inter.cast("double") / uni)
   }
 
-  /** Hybrid final score = wFuzzy*fuzzy + wLlm*llm (entity_match.py:569). */
-  def hybridScore(fuzzy: Column, llm: Column,
-      wFuzzy: Double = 0.7, wLlm: Double = 0.3): Column =
-    lit(wFuzzy) * fuzzy + lit(wLlm) * llm
-
   /** Completeness = mean of non-null indicators over `cols`
     * (int_matched_companies.sql:52-59). */
   def completenessScore(cols: Seq[Column]): Column =
@@ -279,7 +274,4 @@ object Text {
   def confidenceBucket(score: Column,
       hi: Double = 0.90, lo: Double = 0.75): Column =
     when(score >= hi, "High").when(score >= lo, "Medium").otherwise("Low")
-
-  /** Text truncation (parse_commoncrawl.py:221). */
-  def truncateText(c: Column, n: Int): Column = substring(c, 1, n)
 }

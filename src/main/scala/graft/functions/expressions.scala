@@ -65,12 +65,14 @@ object TokenizerAdapters extends Serializable {
 
   /** Unigram-LM Viterbi segmentation of one word — the model blob is a
     * string LITERAL riding the plan (cluster-safe; no side files),
-    * parsed once per JVM and memoized ([[graft.text.UnigramLm]]). */
+    * parsed once per JVM and memoized ([[graft.text.UnigramLm]]); the
+    * row-stable UTF8String is the memo key and is only stringified on
+    * a miss. */
   def unigramWordPieces(word: UTF8String, blob: UTF8String,
       maxPieceLen: Int): ArrayData =
     ArrayData.toArrayData(
-      graft.text.UnigramLm.wordPiecesBlob(word.toString, blob.toString,
-        maxPieceLen).map(UTF8String.fromString))
+      graft.text.UnigramLm.wordPiecesBlob(word.toString, blob,
+        blob.toString, maxPieceLen).map(UTF8String.fromString))
 
   /** Byte-BPE symbols of one word under a merge-table blob
     * ([[graft.text.Bpe.mergeBlob]]) — rank-sequential kernel, cost

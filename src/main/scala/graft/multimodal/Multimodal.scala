@@ -107,10 +107,6 @@ object Multimodal {
       .mapPartitions(_.map { case (id, bytes) => decodeOne(id, bytes) })
   }
 
-  /** Former name of [[decodeImages]], kept for source compatibility. */
-  def decodeImagesStub(df: DataFrame, binCol: String,
-      idCol: String): Dataset[DecodedMedia] = decodeImages(df, binCol, idCol)
-
   /**
    * Decode audio payloads via the same typed-mapPartitions shape as
    * [[decodeImages]]: RIFF/WAVE PCM through the pure-JVM [[Wav]] parser

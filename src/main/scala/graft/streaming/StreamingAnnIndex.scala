@@ -173,40 +173,22 @@ object StreamingAnnIndex {
 
   /** ATOMIC serving-path swap: `<servingRoot>/CURRENT` names the live
     * (indexDir, modelPath) pair; readers resolve it per query via
-    * [[current]]. The swap writes `CURRENT.tmp` and RENAMES it over
-    * `CURRENT` with `Options.Rename.OVERWRITE` (FileContext — the
-    * atomic-rename contract on POSIX and HDFS), so a reader sees the
-    * OLD pair or the NEW pair, never a partial file. Crash windows:
-    * die before the rename → CURRENT untouched, the orphan tmp is
-    * overwritten by the next publish; die after → the swap is
+    * [[current]]. The swap is a [[CurrentPointer]] rename, so a reader
+    * sees the OLD pair or the NEW pair, never a partial file. Crash
+    * windows: die before the rename → CURRENT untouched, the orphan tmp
+    * is overwritten by the next publish; die after → the swap is
     * complete. The retrain cycle is therefore: [[reindex]] to a fresh
     * dir → [[publish]] → retire the old dir at leisure. */
   def publish(spark: SparkSession, servingRoot: String, indexDir: String,
-      modelPath: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(servingRoot)
-    val fs = root.getFileSystem(conf)
-    fs.mkdirs(root)
-    val tmp = new org.apache.hadoop.fs.Path(root, "CURRENT.tmp")
-    val cur = new org.apache.hadoop.fs.Path(root, "CURRENT")
-    val out = fs.create(tmp, true)
-    out.write(s"$indexDir\n$modelPath\n".getBytes("UTF-8"))
-    out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(root.toUri, conf)
-      .rename(tmp, cur, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+      modelPath: String): Unit =
+    CurrentPointer.write(spark, servingRoot, indexDir, modelPath)
 
-  /** Resolve the live (indexDir, modelPath) pair under `servingRoot`. */
-  def current(spark: SparkSession, servingRoot: String): (String, String) = {
-    val cur = new org.apache.hadoop.fs.Path(servingRoot, "CURRENT")
-    val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(cur)
-    val bytes = new java.io.ByteArrayOutputStream()
-    org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 4096, true)
-    val lines = new String(bytes.toByteArray, "UTF-8").split("\n")
-    require(lines.length >= 2, s"malformed CURRENT pointer at $servingRoot")
-    (lines(0), lines(1))
-  }
+  /** Resolve the live (indexDir, modelPath) pair under `servingRoot`;
+    * a malformed pointer throws `IllegalArgumentException`. */
+  def current(spark: SparkSession, servingRoot: String): (String, String) =
+    CurrentPointer.read(spark, servingRoot).getOrElse(
+      throw new java.io.FileNotFoundException(
+        s"no CURRENT pointer at $servingRoot"))
 
   /** STALENESS report — per coarse cell, current occupancy vs the
     * training-time balance persisted with the model: (cluster, n_train,

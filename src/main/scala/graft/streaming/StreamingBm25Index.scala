@@ -63,14 +63,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
  */
 object StreamingBm25Index {
 
-  /** One batch's postings under the fixed bucket count: (bucket, term,
-    * doc_id, tf, dl) — the rebuild path's grain minus the denormalized
-    * df (merge-on-read derives it; see the object doc). */
-  def postingsRows(batch: DataFrame, textCol: String, idCol: String,
-      buckets: Int): DataFrame =
-    postingsFromToks(batch.select(col(idCol).as("doc_id"),
-      TextDedup.tokens(col(textCol)).as("toks")), buckets)
-
   private def postingsFromToks(toks: DataFrame, buckets: Int): DataFrame =
     toks
       .select(col("doc_id"), explode(col("toks")).as("term"),

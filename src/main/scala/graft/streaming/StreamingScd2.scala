@@ -17,8 +17,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
  *    [[GrowingIndex.commit]] discipline);
  *  - `open-<e>/` — the full OPEN set after epoch e (small: one row per
  *    live key), rewritten per epoch;
- *  - `CURRENT` — atomic pointer (tmp + FileContext rename, the
- *    [[StreamingAnnIndex.publish]] discipline) naming the committed
+ *  - `CURRENT` — the atomic [[CurrentPointer]] naming the committed
  *    epoch and its open-set path.
  *
  * Exactly-once across crash replays: the pointer is swapped LAST.
@@ -34,37 +33,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
  */
 object StreamingScd2 {
 
-  private def pointerPaths(dir: String) =
-    (new org.apache.hadoop.fs.Path(dir, "CURRENT.tmp"),
-      new org.apache.hadoop.fs.Path(dir, "CURRENT"))
-
-  /** Atomic pointer publish: (epoch, openPath), swapped by rename. */
-  private def publish(spark: SparkSession, dir: String, epoch: Long,
-      openPath: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(conf)
-    fs.mkdirs(root)
-    val (tmp, cur) = pointerPaths(dir)
-    val out = fs.create(tmp, true)
-    out.write(s"$epoch\n$openPath\n".getBytes("UTF-8"))
-    out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(root.toUri, conf)
-      .rename(tmp, cur, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
   /** The committed (epoch, openPath), if any epoch has committed. */
-  def current(spark: SparkSession, dir: String): Option[(Long, String)] = {
-    val (_, cur) = pointerPaths(dir)
-    val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(cur)) return None
-    val in = fs.open(cur)
-    val bytes = new java.io.ByteArrayOutputStream()
-    org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 4096, true)
-    val lines = new String(bytes.toByteArray, "UTF-8").split("\n")
-    require(lines.length >= 2, s"malformed CURRENT pointer at $dir")
-    Some((lines(0).toLong, lines(1)))
-  }
+  def current(spark: SparkSession, dir: String): Option[(Long, String)] =
+    CurrentPointer.read(spark, dir).map { case (epoch, openPath) =>
+      (epoch.toLong, openPath)
+    }
 
   /** Fold one snapshot epoch into the persisted history (idempotent:
     * already-committed epochs return immediately; see object doc). */
@@ -90,7 +63,7 @@ object StreamingScd2 {
       val openPath = s"$dir/open-$batchId"
       merged.filter(col("valid_to").isNull)
         .write.mode("overwrite").parquet(openPath)
-      publish(spark, dir, batchId, openPath)
+      CurrentPointer.write(spark, dir, batchId.toString, openPath)
     } finally merged.unpersist()
   }
 

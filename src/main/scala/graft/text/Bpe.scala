@@ -894,41 +894,13 @@ object Bpe {
     model
   }
 
-  // Reference-first memo: the kernel's blob argument is a plan LITERAL,
-  // so every row of a task sees the SAME UTF8String instance — the
-  // ThreadLocal front hits on reference identity without ever touching
-  // the (potentially sub-MB) blob text. Behind it, the UnigramLm-style
-  // bounded shared LRU keyed by blob CONTENT (4 entries — one parse
-  // per distinct model per JVM, never one entry per blob ever seen).
-  private val kernelCacheLocal =
-    new ThreadLocal[(AnyRef, MergeModel)] {
-      override def initialValue(): (AnyRef, MergeModel) = (null, null)
-    }
-  private val kernelCacheShared =
-    new java.util.LinkedHashMap[String, MergeModel](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, MergeModel]): Boolean =
-        size() > 4
-    }
+  private val models = new BlobMemo(parseBlob)
 
   /** Resolve a blob to its parsed model: `blobRef` is the raw argument
     * object (reference-compared), `blobStr` is evaluated only on a
-    * ThreadLocal miss. */
-  def modelForBlob(blobRef: AnyRef, blobStr: => String): MergeModel = {
-    val hit = kernelCacheLocal.get()
-    if (hit._1 eq blobRef) return hit._2
-    val b = blobStr
-    val shared = kernelCacheShared.synchronized(kernelCacheShared.get(b))
-    val parsed =
-      if (shared != null) shared
-      else {
-        val m = parseBlob(b)
-        kernelCacheShared.synchronized(kernelCacheShared.put(b, m))
-        m
-      }
-    kernelCacheLocal.set((blobRef, parsed))
-    parsed
-  }
+    * memo miss ([[BlobMemo]]). */
+  def modelForBlob(blobRef: AnyRef, blobStr: => String): MergeModel =
+    models(blobRef, blobStr)
 
   /**
    * Apply the merge table to one word's byte symbols — EXACTLY the

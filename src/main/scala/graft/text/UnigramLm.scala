@@ -296,53 +296,25 @@ object UnigramLm {
       .map(e => e.piece + FieldSep + e.scoreU)
       .mkString(EntrySep.toString)
 
-  // Bounded memo, two tiers. Per-THREAD last-entry front: the common
-  // case (one model literal per task) hits without any lock. Shared
-  // 4-entry LRU behind it: if two plans with DIFFERENT model blobs
-  // interleave tasks on one executor — or one plan carries two model
-  // literals and alternates them per row — a 1-entry cache would
-  // re-parse the full blob on every call (a severe perf cliff, values
-  // still correct); the LRU keeps each distinct model parsed once while
-  // staying bounded (the r10 leak fix: never one entry per blob ever
-  // seen by a long-lived JVM).
-  private val blobCacheLocal =
-    new ThreadLocal[(String, Map[String, Long])] {
-      override def initialValue(): (String, Map[String, Long]) =
-        ("", Map.empty)
-    }
-  private val blobCacheShared =
-    new java.util.LinkedHashMap[String, Map[String, Long]](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Map[String, Long]]): Boolean =
-        size() > 4
-    }
+  private val models = new BlobMemo[Map[String, Long]]({ b =>
+    if (b.isEmpty) Map.empty
+    else b.split(EntrySep).iterator.map { e =>
+      val i = e.indexOf(FieldSep)
+      e.substring(0, i) -> e.substring(i + 1).toLong
+    }.toMap
+  })
 
-  /** Parse a model blob (bounded memo per executor JVM — one parse per
-    * distinct model, all tasks of a plan share the map). */
-  def modelFromBlob(b: String): Map[String, Long] = {
-    val hit = blobCacheLocal.get()
-    if (hit._1 == b) return hit._2
-    val shared = blobCacheShared.synchronized(blobCacheShared.get(b))
-    val parsed =
-      if (shared != null) shared
-      else {
-        val p =
-          if (b.isEmpty) Map.empty[String, Long]
-          else b.split(EntrySep).iterator.map { e =>
-            val i = e.indexOf(FieldSep)
-            e.substring(0, i) -> e.substring(i + 1).toLong
-          }.toMap
-        blobCacheShared.synchronized(blobCacheShared.put(b, p))
-        p
-      }
-    blobCacheLocal.set((b, parsed))
-    parsed
-  }
+  /** Kernel entry: Viterbi pieces of one word under a blob model.
+    * `blobRef` is the plan literal the [[BlobMemo]] keys on; `blobStr`,
+    * its text, is evaluated only on a memo miss. */
+  def wordPiecesBlob(word: String, blobRef: AnyRef, blobStr: => String,
+      maxPieceLen: Int): Array[String] =
+    segment(word, models(blobRef, blobStr), maxPieceLen)
 
-  /** Kernel entry: Viterbi pieces of one word under a blob model. */
+  /** [[wordPiecesBlob]] keyed on the blob string itself. */
   def wordPiecesBlob(word: String, blobStr: String,
       maxPieceLen: Int): Array[String] =
-    segment(word, modelFromBlob(blobStr), maxPieceLen)
+    wordPiecesBlob(word, blobStr, blobStr, maxPieceLen)
 
   // ---------------------------------------------------------- encoding
 

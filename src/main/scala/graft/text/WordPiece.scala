@@ -509,53 +509,26 @@ object WordPiece {
       idOf: java.util.HashMap[String, java.lang.Long], unkId: Long,
       maxChars: Int)
 
-  // Reference-first bounded memo (the [[Bpe.modelForBlob]] discipline):
-  // the blob is a plan LITERAL, so every row of a task sees the SAME
-  // argument instance — the per-thread front hits on reference identity
-  // without touching the (potentially sub-MB at 30k pieces) blob text;
-  // behind it a 4-entry shared LRU keyed by CONTENT keeps one parse per
-  // distinct model per JVM, never one entry per blob ever seen.
-  private val blobCacheLocal = new ThreadLocal[(AnyRef, Parsed)] {
-    override def initialValue(): (AnyRef, Parsed) = (null, null)
-  }
-  private val blobCacheShared =
-    new java.util.LinkedHashMap[String, Parsed](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Parsed]): Boolean = size() > 4
+  private val models = new BlobMemo[Parsed]({ b =>
+    val parts = b.split(EntrySep)
+    val maxChars = parts(0).toInt
+    val unkId = parts(1).toLong
+    val idOf = new java.util.HashMap[String, java.lang.Long](parts.length * 2)
+    val pieces = Seq.newBuilder[String]
+    var i = 2
+    while (i < parts.length) {
+      val e = parts(i)
+      val j = e.lastIndexOf(FieldSep)
+      val piece = e.substring(0, j)
+      idOf.put(piece, java.lang.Long.valueOf(e.substring(j + 1).toLong))
+      pieces += piece
+      i += 1
     }
-
-  private def parsedForBlob(blobRef: AnyRef, blobStr: => String): Parsed = {
-    val hit = blobCacheLocal.get()
-    if ((hit._1 ne null) && (hit._1 eq blobRef)) return hit._2
-    val b = blobStr
-    val shared = blobCacheShared.synchronized(blobCacheShared.get(b))
-    val parsed =
-      if (shared != null) shared
-      else {
-        val parts = b.split(EntrySep)
-        val maxChars = parts(0).toInt
-        val unkId = parts(1).toLong
-        val idOf = new java.util.HashMap[String, java.lang.Long](parts.length * 2)
-        val pieces = Seq.newBuilder[String]
-        var i = 2
-        while (i < parts.length) {
-          val e = parts(i)
-          val j = e.lastIndexOf(FieldSep)
-          val piece = e.substring(0, j)
-          idOf.put(piece, java.lang.Long.valueOf(e.substring(j + 1).toLong))
-          pieces += piece
-          i += 1
-        }
-        val p = Parsed(
-          Tokenizer.Vocab(pieces.result().filterNot(q =>
-            q.startsWith("[") && q.endsWith("]"))),
-          idOf, unkId, maxChars)
-        blobCacheShared.synchronized(blobCacheShared.put(b, p))
-        p
-      }
-    blobCacheLocal.set((blobRef, parsed))
-    parsed
-  }
+    Parsed(
+      Tokenizer.Vocab(pieces.result().filterNot(q =>
+        q.startsWith("[") && q.endsWith("]"))),
+      idOf, unkId, maxChars)
+  })
 
   private val preTokenRe = java.util.regex.Pattern.compile("[a-z0-9]+")
 
@@ -573,7 +546,7 @@ object WordPiece {
   def textIdsBlob(text: String, blobRef: AnyRef,
       blobStr: => String): Array[Long] = {
     if (text == null) return Array.empty
-    val p = parsedForBlob(blobRef, blobStr)
+    val p = models(blobRef, blobStr)
     val m = preTokenRe.matcher(text.toLowerCase(java.util.Locale.ROOT))
     val out = new scala.collection.mutable.ArrayBuffer[Long](32)
     while (m.find()) {

@@ -201,5 +201,39 @@ class CacheHygieneSpec extends SparkSpec {
     assert(after == before)
     assert(!DatasetBridge.cacheIsEmpty(spark))
     SparkEntry.releaseSharedFrames(spark, dir)
+
+    // Counts and model fits go with the frames, and only the released
+    // dir's entries go: another dir's frame stays persisted and its
+    // entries are not rebuilt.
+    val builds = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
+    def entries(d: String): (DataFrame, AnyRef, AnyRef) = (
+      SparkEntry.cachedFrame(spark, d, "spec_frame") {
+        builds(s"$d frame") += 1
+        spark.range(3).select(org.apache.spark.sql.functions.lit(d).as("dir"))
+      },
+      SparkEntry.cached(spark, d, "spec_count") {
+        builds(s"$d count") += 1
+        java.lang.Long.valueOf(3L)
+      },
+      SparkEntry.cached(spark, d, "spec_model") {
+        builds(s"$d model") += 1
+        Array(1.0, 2.0)
+      })
+    val other = s"$dir-other"
+    val (mine, _, _) = entries(dir)
+    val (theirs, theirCount, theirModel) = entries(other)
+    assert(mine.count() == 3 && theirs.count() == 3)
+    SparkEntry.releaseSharedFrames(spark, dir)
+    val none = org.apache.spark.storage.StorageLevel.NONE
+    assert(mine.storageLevel == none, "released frame still persisted")
+    assert(theirs.storageLevel != none, "another dir's frame was unpersisted")
+    val (_, count2, model2) = entries(other)
+    assert((count2 eq theirCount) && (model2 eq theirModel))
+    entries(dir)
+    assert(builds.toMap == Seq("frame", "count", "model").flatMap(k =>
+      Seq(s"$dir $k" -> 2, s"$other $k" -> 1)).toMap)
+    SparkEntry.releaseSharedFrames(spark, dir)
+    SparkEntry.releaseSharedFrames(spark, other)
+    assert(DatasetBridge.cacheIsEmpty(spark))
   }
 }

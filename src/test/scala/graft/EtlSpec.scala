@@ -72,8 +72,9 @@ class EtlSpec extends SparkSpec {
     val matched = Golden.matchedCompanies(
       Match.run(web, abr, Match.JaccardTokens, cfg), web, abr, minScore = 0.6)
     val dim = Golden.dimCompanies(matched, abr)
-    val checks = Quality.dimChecks(dim)
-    assert(checks.values.forall(_ == 0L), s"violations: $checks")
+    val report = Quality.report(dim).head()
+    val checks = report.schema.fieldNames.map(f => f -> report.getAs[Long](f)).toMap
+    assert(checks.size == 5 && checks.values.forall(_ == 0L), s"violations: $checks")
     assert(dim.filter(col("data_source") === "MATCHED").count() > 0)
     assert(dim.filter(col("data_source") === "ABR_ONLY").count() > 0)
   }

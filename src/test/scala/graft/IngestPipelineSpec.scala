@@ -110,6 +110,16 @@ class IngestPipelineSpec extends SparkSpec {
     assert(result.matchStats.count() === 1)
   }
 
+  test("pipeline run: a failing stage is wrapped with the run id and elapsed seconds") {
+    val e = intercept[RuntimeException] {
+      Pipeline.run(spark.range(3).toDF("x"), Demo.abrRaw(spark, sf()),
+        runId = "badweb")
+    }
+    assert(e.getMessage.matches("""Pipeline run badweb failed after \d+\.\d s"""),
+      e.getMessage)
+    assert(e.getCause != null)
+  }
+
   test("retry: exponential backoff, rethrows after attempts exhausted") {
     val calls = new AtomicInteger(0)
     intercept[IllegalStateException] {

@@ -164,14 +164,14 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("decode stub: deterministic, partition-parallel, typed output") {
-    val out = Multimodal.decodeImagesStub(
+    val out = Multimodal.decodeImages(
       docs.repartition(3), "payload", "doc_id")
     val rows = out.collect().sortBy(_.id)
     assert(rows.length === docs.count())
     assert(rows.forall(r => r.width >= 64 && r.height >= 64 && r.channels == 3))
     assert(rows.forall(r => r.brightness >= 0.0 && r.brightness <= 1.0))
     // determinism across runs/partitionings
-    val again = Multimodal.decodeImagesStub(
+    val again = Multimodal.decodeImages(
       docs.repartition(7), "payload", "doc_id").collect().sortBy(_.id)
     assert(rows.toSeq === again.toSeq)
   }

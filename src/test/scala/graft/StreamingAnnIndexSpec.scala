@@ -272,6 +272,22 @@ class StreamingAnnIndexSpec extends SparkSpec {
     assert(!new java.io.File(s"$root/CURRENT.tmp").exists())
   }
 
+  test("current: a torn, appended or emptied CURRENT pointer fails loudly (ANN and SCD2)") {
+    // written around Hadoop (no .crc), as a torn or foreign writer would
+    val root = java.nio.file.Files.createTempDirectory("annbadptr").toString
+    val corrupt = Seq("", "/idx/v1\n", "/idx/v1\n/mod", "/idx/v1\n/model/v1\n/x\n",
+      "\n/model/v1\n", "/idx/v1\n\n")
+    corrupt.foreach { body =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/CURRENT"),
+        body.getBytes("UTF-8"))
+      Seq[() => Any](() => StreamingAnnIndex.current(spark, root),
+        () => graft.streaming.StreamingScd2.current(spark, root)).foreach { read =>
+        val e = intercept[IllegalArgumentException](read())
+        assert(e.getMessage.contains("malformed CURRENT pointer"), body)
+      }
+    }
+  }
+
   test("model round-trips exactly; staleness report hand-checked") {
     val (indexDir, outDir, modelDir) = freshDirs()
     val train = vecs(
