@@ -3,6 +3,10 @@ package graft.text
 import graft.operators.{Materialized, Sampling}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, LongType, StringType,
+  StructField, StructType}
+
+import scala.jdk.CollectionConverters._
 
 /**
  * Supervised quality classifier — binary logistic regression over
@@ -37,41 +41,41 @@ import org.apache.spark.sql.functions._
  *  - the step η·g/n is one double expression rounded to 6 dp and
  *    SUBTRACTED in decimal (never re-rounding the accumulated weight).
  *
- * Scale shape (restructured in the round-15 optimization pass; values
- * bit-identical — see the micro-unit note below): the feature relation
- * is ONE doc-grain map-side projection (doc_id, y, distinct-cell
- * array), materialized once; each GD iteration is ONE map-side pass
- * over it — the ≤ `buckets`+1-row model rides IN the plan as an array
- * literal of exact micro-units (the model is collected per iteration
- * anyway, as a LocalRelation), z/σ/err are computed in-row, and the
- * gradient is a single partial-aggregated hash aggregation over the
- * exploded cells (a `-2` sentinel cell carries the intercept gradient
- * in the same pass). The previous shape paid, per iteration, a
- * broadcast join + doc-grain aggregation + a checkpoint + a doc_id
- * join + two aggregations (~6 exchanges); this one pays ONE exchange
- * of (cell, err) pairs. Gradient shuffle keys are 8-byte cell ids,
- * cost linear in corpus grams per iteration, and the model is
- * plan-literal-sized at ANY corpus size.
+ * Scale shape: the feature relation is ONE doc-grain map-side
+ * projection (doc_id, y, distinct-cell array), materialized once. The
+ * model is bounded (≤ buckets·K + K weights) and stays on the driver
+ * as dense micro-unit arrays for the whole descent. Each iteration is
+ * ONE map-side pass over the features — the model rides IN the plan as
+ * array literals, z/σ/err are computed in-row — and one
+ * partial-aggregated hash aggregation over the exploded cells (a `-2`
+ * sentinel cell carries the intercept gradient in the same pass), on
+ * which Spark also rounds each 6-dp step. The driver collects the
+ * ≤ buckets+1 step rows and subtracts them in exact micro-units: two
+ * Spark jobs per iteration, one exchange of (cell, err) pairs, cost
+ * linear in corpus grams, and a plan-literal-sized model at ANY corpus
+ * size. The weight table is built once, after the last step.
  *
  * Micro-unit equivalence: a DECIMAL(18,6) weight is exactly k/10⁶ for
- * integer k, so in-row sums run on LONG micro-units. Every boundary to
- * double replays the decimal semantics exactly: for a scale-6 decimal
- * with |unscaled| < 2⁵², `Decimal.toDouble` IS `(double)unscaled/1e6`
- * (java.math.BigDecimal.doubleValue's fast path), and both sides of
- * the equivalence are correctly-rounded conversions of the same
- * rational — per-doc |z| is bounded by buckets · iters · step ≈ 10¹⁰
- * micro-units, far under 2⁵² at any corpus size. The descent's
- * per-iteration weight-update expressions (`delta`, the decimal
- * subtraction) are unchanged. The train/test split is the
- * deterministic md5 bucket ([[Sampling.bucket]]); documents with zero
- * grams are excluded (no evidence, matching [[Dsir.importanceWeights]]).
- * Documents are assumed id-unique (the library-wide doc grain).
+ * integer k, so in-row sums and the driver's update run on LONG
+ * micro-units. Every boundary to double replays the decimal semantics
+ * exactly: for a scale-6 decimal with |unscaled| < 2⁵², `Decimal.toDouble`
+ * IS `(double)unscaled/1e6` (java.math.BigDecimal.doubleValue's fast
+ * path), and both sides of the equivalence are correctly-rounded
+ * conversions of the same rational — per-doc |z| is bounded by
+ * buckets · iters · step ≈ 10¹⁰ micro-units, far under 2⁵² at any
+ * corpus size. The train/test split is the deterministic md5 bucket
+ * ([[Sampling.bucket]]); documents with zero grams are excluded (no
+ * evidence, matching [[Dsir.importanceWeights]]). Training documents
+ * must be id-unique (the library-wide doc grain); both trainers reject
+ * a slice that is not. A weight table is validated when it is decoded
+ * for scoring: a null, out-of-range or duplicate row is an error.
  */
 object LogisticRegression {
 
   private val Dec = "decimal(18,6)"
   private val Dec28 = "decimal(28,6)"
-  private def zeroDec: Column = lit(0).cast(Dec)
+  /** |w| · 10⁶ bound of a DECIMAL(18,6). */
+  private val MaxMicro = 1000000000000000000L
 
   /** Doc-grain PRESENCE features: (doc_id, y, _bk, cells) with `cells`
     * the DISTINCT hashed gram cells (each ∈ [0, buckets)) — one row per
@@ -91,14 +95,23 @@ object LogisticRegression {
   private def microOf(d: java.math.BigDecimal): Long =
     d.movePointRight(6).longValueExact()
 
+  /** The DECIMAL(18,6) value of `m` micro-units. */
+  private def decOf(m: Long): java.math.BigDecimal =
+    java.math.BigDecimal.valueOf(m, 6)
+
+  /** A bounded model as dense micro-units: `classes` in UTF-8-byte
+    * order, one intercept per class in `b`, and the row-major
+    * buckets×K cell-weight matrix `w` (absent cells are 0). */
+  private final case class Dense(classes: Seq[String], b: Array[Long],
+      w: Array[Long])
+
   /** Σ_{c ∈ cells} wMicro(c) as one codegen'd kernel call — the exact
     * decimal z-sum in long micro-units (cells ∈ [0, buckets) by
     * construction, so the dense array lookup covers every cell; absent
-    * weights are the 0 the old left-join coalesced). The k=1 case of
+    * weights are 0). The k=1 case of
     * [[graft.functions.VectorAdapters.softmaxZ]] — LONG sums are
-    * associative, so the kernel is bit-identical to the interpreted
-    * aggregate fold it replaces (round-16 optimization: the fold was
-    * CodegenFallback in the per-gram hot path). */
+    * associative, so the kernel is bit-identical to an exact decimal
+    * fold. */
   private def zSumMicro(wMicro: Array[Long]): Column =
     element_at(graft.functions.GraftFunctions.softmax_z(col("cells"),
       typedLit(Seq(0L)), typedLit(wMicro.toSeq)), 1)
@@ -106,44 +119,49 @@ object LogisticRegression {
   /** The 6-dp sigmoid column of the model (b, z) — byte-identical to
     * `round(1/(1+exp(-(b::double + zsum::double))), 6)::decimal(18,6)`
     * over the exact decimals (see the micro-unit note in the object
-    * doc). `zm` is the micro-unit z-sum column. */
-  private def sigmoid6(bDouble: Double, zm: Column): Column =
-    round(lit(1.0) / (lit(1.0) +
-      exp(-(lit(bDouble) + zm.cast("double") / lit(1e6)))), 6).cast(Dec)
+    * doc). `bMicro` is the intercept, `zm` the micro-unit z-sum
+    * column. */
+  private def sigmoid6(bMicro: Long, zm: Column): Column =
+    round(lit(1.0) / (lit(1.0) + exp(-(lit(decOf(bMicro).doubleValue) +
+      zm.cast("double") / lit(1e6)))), 6).cast(Dec)
 
-  /** Dense per-class micro-unit weights collected from a bounded
-    * weight frame: (classes present as intercept rows in UTF-8-byte
-    * order when `sortClasses`, per-class intercepts, the row-major
-    * buckets×K flat cell-weight matrix). Rows with cells outside
-    * [0, buckets) or classes without an intercept row are ignored —
-    * exactly the rows the previous join-shaped scoring could never
-    * match. A MALFORMED table with duplicate (cell, cls) rows resolves
-    * last-write-wins here where the former join-shaped scoring
-    * duplicated rows — engine-written models are (cell, cls)-unique by
-    * construction (one aggregate row per key per iteration), so this
-    * only diverges on hand-edited/corrupt model files (round-15
-    * advice, documented). */
-  private def collectSoftmax(weights: DataFrame, buckets: Int)
-      : (Seq[String], Array[Long], Array[Long]) = {
-    val rows = weights.select(col("cell"), col("cls"), col("w")).collect()
-    val classes = utf8Sorted(
-      rows.filter(r => !r.isNullAt(0) && r.getLong(0) == -1L)
-        .map(_.getString(1)).toSeq.distinct)
+  /** The one weight-table decoder: (cell, cls, w) rows — `cls` is the
+    * class column of a softmax table, a constant for a binary one —
+    * into a [[Dense]] model, validated as it is read. A null key or
+    * weight, a cell outside [0, buckets) other than the intercept's −1
+    * (e.g. a model trained with another `buckets`), a duplicate
+    * (cell, cls) row, a duplicate intercept, or a cell row of a class
+    * without an intercept throws a named IllegalArgumentException. A
+    * table with no intercept row at all decodes to no classes. */
+  private def decode(weights: DataFrame, cls: Column, buckets: Int)
+      : Dense = {
+    val rows = weights.select(col("cell"), cls.as("cls"), col("w"))
+      .collect()
+    def bad(why: String): Nothing =
+      throw new IllegalArgumentException(s"malformed LR weight table: $why")
+    val seen = scala.collection.mutable.HashSet.empty[(Long, String)]
+    rows.foreach { r =>
+      if (r.anyNull) bad(s"null cell, cls or w in row $r")
+      val key = (r.getLong(0), r.getString(1))
+      if (key._1 != -1L && (key._1 < 0 || key._1 >= buckets))
+        bad(s"cell ${key._1} outside [0, $buckets) — was the model " +
+          s"trained with buckets = $buckets?")
+      if (!seen.add(key))
+        bad(if (key._1 == -1L) s"duplicate intercept for class '${key._2}'"
+          else s"duplicate row for cell ${key._1}, class '${key._2}'")
+    }
+    val classes = utf8Sorted(seen.toSeq.collect { case (-1L, c) => c })
     val idx = classes.zipWithIndex.toMap
     val k = classes.size
-    val b = new Array[Long](k)
-    val w = Array.fill(buckets * math.max(k, 1))(0L)
-    rows.foreach { r =>
-      if (!r.isNullAt(0) && !r.isNullAt(2)) {
-        val cell = r.getLong(0)
-        idx.get(r.getString(1)).foreach { ki =>
-          val m = microOf(r.getDecimal(2))
-          if (cell == -1L) b(ki) = m
-          else if (cell >= 0 && cell < buckets) w(cell.toInt * k + ki) = m
-        }
-      }
+    val m = Dense(classes, new Array[Long](k), new Array[Long](buckets * k))
+    if (k > 0) rows.foreach { r =>
+      val cell = r.getLong(0)
+      val ki = idx.getOrElse(r.getString(1),
+        bad(s"cell $cell has class '${r.getString(1)}' without an intercept"))
+      if (cell == -1L) m.b(ki) = microOf(r.getDecimal(2))
+      else m.w(cell.toInt * k + ki) = microOf(r.getDecimal(2))
     }
-    (classes, b, w)
+    m
   }
 
   /** Ascending by UTF-8 bytes — the comparison Spark's string ordering
@@ -167,139 +185,128 @@ object LogisticRegression {
     xs.sorted(Ordering.comparatorToOrdering(cmp))
   }
 
+  /** The training slice's two fixed-cost scalars from ONE bounded
+    * aggregate: n, the training-document count baked into every step
+    * literal, and the class alphabet (`alphabet`, an aggregate or a
+    * literal string array). The same aggregate enforces the doc grain
+    * the descent assumes — one row per non-null doc_id — so the check
+    * costs no job. */
+  private def trainingSlice(trainer: String, idCol: String,
+      feats: DataFrame, alphabet: Column): (Long, Seq[String]) = {
+    val meta = feats.agg(count(lit(1)), countDistinct(col("doc_id")),
+      alphabet).head()
+    val n = meta.getLong(0)
+    if (meta.getLong(1) != n)
+      throw new IllegalArgumentException(s"$trainer: $idCol must be " +
+        s"unique and non-null over the training slice, but its $n " +
+        s"documents carry ${meta.getLong(1)} distinct non-null ids")
+    require(n > 0, "no training documents with at least one gram")
+    (n, meta.getSeq[String](2))
+  }
+
+  /** The full-batch descent both trainers share, with the model on the
+    * driver. `errs` maps the current model to the doc-grain frame
+    * (cells, then one decimal error column p − y per class, in
+    * `classes` order). Each iteration sums the errors per cell (the
+    * −2 sentinel carrying the intercepts), lets Spark round each step
+    * `round(η·g/n, 6)::decimal(18,6)`, collects the ≤ buckets+1 step
+    * rows and subtracts them in micro-units — exactly
+    * `(coalesce(w, 0) − step)::decimal(18,6)`, overflow included.
+    * Returns the model and, ascending, the cells that carry a gradient
+    * (every cell of a training document): the weight table's rows. */
+  private def descend(feats: DataFrame, n: Long, classes: Seq[String],
+      buckets: Int, iters: Int, step: Double)(errs: Dense => DataFrame)
+      : (Dense, Seq[Int]) = {
+    val k = classes.size
+    val m = Dense(classes, new Array[Long](k), new Array[Long](buckets * k))
+    val hasGrad = new Array[Boolean](buckets)
+    val g = (0 until k).map(i => s"__g$i")
+    def minus(wm: Long, d: java.math.BigDecimal): Long = {
+      val x = if (d == null) MaxMicro else wm - microOf(d)
+      if (math.abs(x) >= MaxMicro)
+        throw new ArithmeticException(s"LR weight update overflows $Dec")
+      x
+    }
+    for (_ <- 1 to iters) {
+      val e = errs(m)
+      val errCols = e.columns.tail.toSeq.map(col)
+      val sums = errCols.zip(g).map { case (c, gi) =>
+        sum(c.cast(Dec28)).as(gi) }
+      e.select(explode(concat(col("cells"), array(lit(-2L)))).as("cell")
+          +: errCols: _*)
+        .groupBy("cell").agg(sums.head, sums.tail: _*)
+        .select(col("cell") +: g.map(gi => round(lit(step) *
+          col(gi).cast("double") / lit(n), 6).cast(Dec)): _*)
+        .collect().foreach { r =>
+          val cell = r.getLong(0).toInt
+          val (arr, off) =
+            if (cell == -2) (m.b, 0)
+            else { hasGrad(cell) = true; (m.w, cell * k) }
+          for (i <- 0 until k)
+            arr(off + i) = minus(arr(off + i), r.getDecimal(i + 1))
+        }
+    }
+    (m, (0 until buckets).filter(hasGrad))
+  }
+
   /**
    * The trained model: `(cell, w)` rows with `cell = -1` holding the
    * intercept, weights DECIMAL(18,6) — exactly the values scoring
    * sums, so a persisted model serves bit-identically. ≤ `buckets`+1
-   * rows at any corpus size.
+   * rows at any corpus size, ordered by cell; a local relation built
+   * once from the driver-held model after the last step.
    */
   def trainWeights(docs: DataFrame, textCol: String, idCol: String,
       label: Column, buckets: Int = 256, iters: Int = 24,
       step: Double = 3.0, trainBuckets: Long = 8000): DataFrame = {
     require(buckets > 0, s"buckets must be positive, got $buckets")
     require(iters > 0, s"iters must be positive, got $iters")
-    val spark = docs.sparkSession
     // the corpus-sized relation every iteration re-reads: materialized
     // once at DOC grain (one array row per document)
     val feats = Materialized(
       featFrame(docs, textCol, idCol, label, buckets)
         .filter(col("_bk") < trainBuckets)
         .select("doc_id", "y", "cells"))
-    // n = train docs with ≥1 gram; a driver SCALAR (one bounded
-    // aggregate), baked into the step expression as a literal. The same
-    // aggregate enforces the doc grain every iteration assumes: one row
-    // per non-null doc_id.
-    val stats = feats.agg(count(lit(1)), countDistinct(col("doc_id"))).head()
-    val n = stats.getLong(0)
-    if (stats.getLong(1) != n)
-      throw new IllegalArgumentException(s"trainWeights: $idCol must be " +
-        s"unique and non-null over the training slice, but its $n " +
-        s"documents carry ${stats.getLong(1)} distinct non-null ids")
-    require(n > 0, "no training documents with at least one gram")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("cell",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("w",
-        org.apache.spark.sql.types.DecimalType(18, 6), nullable = true)))
-    def local(rows: Seq[Row]): DataFrame =
-      spark.createDataFrame(
-        new java.util.ArrayList(java.util.Arrays.asList(rows: _*)), schema)
-    var rows: Seq[Row] = Seq(Row(-1L, new java.math.BigDecimal("0.000000")))
-    var w: DataFrame = local(rows)
-    for (_ <- 1 to iters) {
-      // the bounded model as driver values (it IS a LocalRelation):
-      // intercept double via BigDecimal.doubleValue — the same
-      // conversion `cast(b as double)` performs — and dense micro-unit
-      // cell weights
-      val bD = rows.find(_.getLong(0) == -1L).get.getDecimal(1).doubleValue
-      val wMicro = new Array[Long](buckets)
-      rows.foreach { r =>
-        val cell = r.getLong(0)
-        if (cell >= 0 && cell < buckets) wMicro(cell.toInt) = microOf(r.getDecimal(1))
-      }
-      // ONE map-side pass: z and σ in-row, err = p − y (exact decimal),
-      // gradient over exploded cells with the −2 sentinel carrying the
-      // intercept roll-up — a single partial-aggregated exchange
-      val grads = feats
-        .select(concat(col("cells"), array(lit(-2L))).as("cs"), col("y"),
-          zSumMicro(wMicro).as("__zm"))
-        .select(col("cs"),
-          (sigmoid6(bD, col("__zm")) - col("y")).cast(Dec).as("err"))
-        .select(explode(col("cs")).as("cell"), col("err"))
-        .groupBy("cell").agg(sum(col("err").cast(Dec28)).as("g"))
-      val gc = grads.filter(col("cell") >= 0)
-      val gb = grads.filter(col("cell") === -2).select(col("g"))
-      // the weight-update expressions are UNCHANGED from the join-shaped
-      // trainer — same decimal subtraction, same 6-dp step rounding
-      val wc = w.filter(col("cell") >= 0)
-      val wb = w.filter(col("cell") === -1).select(col("w").as("b"))
-      def delta: Column =
-        round(lit(step) * col("g").cast("double") / lit(n), 6).cast(Dec)
-      val newC = gc.join(broadcast(wc), Seq("cell"), "left")
-        .select(col("cell"),
-          (coalesce(col("w"), zeroDec) - delta).cast(Dec).as("w"))
-      val newB = gb.crossJoin(broadcast(wb))
-        .select(lit(-1L).as("cell"), (col("b") - delta).cast(Dec).as("w"))
-      // The updated model comes back through the driver as a LOCAL
-      // relation — a BOUNDED collect (≤ buckets+1 rows by construction,
-      // like the Lloyd trainer's centroid loop). Deliberately NOT a
-      // checkpoint: a checkpointed frame carries its origin plan's
-      // sizeInBytes estimate, and with per-iteration joins those
-      // BigInt products COMPOUND across iterations (the stats visitor
-      // multiplies child sizes), turning planning time exponential by
-      // ~iteration 12. A local relation has exact tiny stats, every
-      // broadcast below it is trivially cheap, and the values are
-      // identical (exact decimals). Rows sorted by cell so the literal
-      // relation — and therefore every downstream plan — is
-      // deterministic.
-      rows = newC.unionByName(newB).collect().sortBy(_.getLong(0)).toSeq
-      w = local(rows)
+    // one class: the sigmoid's error p(y=1) − y
+    val (n, classes) = trainingSlice("trainWeights", idCol, feats,
+      typedLit(Seq("1")))
+    val (m, cells) = descend(feats, n, classes, buckets, iters, step) {
+      cur => feats.select(col("cells"), (sigmoid6(cur.b(0),
+        zSumMicro(cur.w)) - col("y")).cast(Dec).as("__err0"))
     }
-    w
+    docs.sparkSession.createDataFrame(
+      (Row(-1L, decOf(m.b(0))) +: cells.map(c => Row(c.toLong, decOf(m.w(c)))))
+        .asJava,
+      StructType(Seq(StructField("cell", LongType, nullable = false),
+        StructField("w", DecimalType(18, 6), nullable = true))))
   }
 
   /** Score `feats` (doc-grain rows from [[featFrame]]) against a
     * weight table from [[trainWeights]] — a pure map-side projection:
-    * the bounded model is collected (≤ buckets+1 rows by construction)
-    * and rides in the plan as a micro-unit array literal; z, σ and the
-    * gate are in-row. Output: (doc_id, label_true, prob, label_pred),
-    * prob the 6-dp sigmoid — bit-identical to the former join-shaped
-    * scoring (micro-unit note in the object doc). NOTE: scoring is
-    * per-ROW — under duplicate doc_ids each row is scored
-    * independently, where the former groupBy/join shape merged per-id
-    * z-sums; the library-wide doc grain assumes id-unique documents
-    * (round-15 advice, documented rather than asserted: the uniqueness
-    * check would cost a corpus-wide exchange per serve). */
+    * the bounded model is decoded (≤ buckets+1 rows by construction,
+    * validated by [[decode]]) and rides in the plan as a micro-unit
+    * array literal; z, σ and the gate are in-row. Output: (doc_id,
+    * label_true, prob, label_pred), prob the 6-dp sigmoid. NOTE:
+    * scoring is per-ROW — under duplicate doc_ids each row is scored
+    * independently; the library-wide doc grain assumes id-unique
+    * documents (documented rather than asserted: the uniqueness check
+    * would cost a corpus-wide exchange per serve). */
   private def score(feats: DataFrame, weights: DataFrame,
       buckets: Int): DataFrame = {
-    val rows = weights.select(col("cell"), col("w")).collect()
-    val bOpt = rows.find(r => !r.isNullAt(0) && r.getLong(0) == -1L &&
-      !r.isNullAt(1))
-    bOpt match {
-      case None =>
-        // no intercept row: the former crossJoin against an empty
-        // intercept relation produced zero rows — preserve that
-        feats.select(col("doc_id"), col("y").as("label_true"),
-          lit(0.0).as("prob"), lit(0L).as("label_pred"))
-          .filter(lit(false))
-      case Some(bRow) =>
-        val bD = bRow.getDecimal(1).doubleValue
-        val wMicro = new Array[Long](buckets)
-        rows.foreach { r =>
-          if (!r.isNullAt(0) && !r.isNullAt(1)) {
-            val cell = r.getLong(0)
-            if (cell >= 0 && cell < buckets)
-              wMicro(cell.toInt) = microOf(r.getDecimal(1))
-          }
-        }
-        feats
-          .select(col("doc_id"), col("y"), zSumMicro(wMicro).as("__zm"))
-          .select(col("doc_id"), col("y"),
-            sigmoid6(bD, col("__zm")).as("p"))
-          .select(col("doc_id"), col("y").as("label_true"),
-            col("p").cast("double").as("prob"),
-            when(col("p") >= 0.5, 1L).otherwise(0L).as("label_pred"))
-    }
+    val m = decode(weights, lit("1"), buckets)
+    if (m.classes.isEmpty)
+      // no intercept row: nothing to score against — an empty result
+      feats.select(col("doc_id"), col("y").as("label_true"),
+        lit(0.0).as("prob"), lit(0L).as("label_pred"))
+        .filter(lit(false))
+    else
+      feats
+        .select(col("doc_id"), col("y"), zSumMicro(m.w).as("__zm"))
+        .select(col("doc_id"), col("y"),
+          sigmoid6(m.b(0), col("__zm")).as("p"))
+        .select(col("doc_id"), col("y").as("label_true"),
+          col("p").cast("double").as("prob"),
+          when(col("p") >= 0.5, 1L).otherwise(0L).as("label_pred"))
   }
 
   /** Train on the `bucket(id) < trainBuckets` slice, predict the rest. */
@@ -394,26 +401,19 @@ object LogisticRegression {
   /** The in-row softmax chain over a plan-literal model: appends
     * `__p` — the array of per-class 6-dp probabilities in `classes`
     * order. Each stage binds its intermediate so every expression is
-    * evaluated once per document, exactly as the former per-level
-    * window/join chain did: z (exact micro-units) → z_max (exact
+    * evaluated once per document: z (exact micro-units) → z_max (exact
     * comparison) → e = round(exp(Δz), 6) → den (exact decimal sum) →
     * p = round(e/den, 6).
     *
-    * Round-16 shape: the per-GRAM fold runs as the codegen'd
+    * The per-GRAM fold runs as the codegen'd
     * [[graft.functions.GraftFunctions.softmax_z]] kernel (exact LONG
-    * sums — associative, so bit-identical to the interpreted
-    * aggregate/zip_with chain it replaces, which allocated a K-wide
-    * boxed array per gram and dropped the hot loop out of codegen —
-    * the round-15 regression), and the per-CLASS tail (exp, the exact
-    * decimal denominator, the 6-dp division) is unrolled into K plain
-    * columns — every expression a codegen'd built-in, none of it HOF.
-    * The scalar expressions are verbatim the previous per-element
-    * lambdas, so every rounded value is unchanged. */
-  private def withSoftmaxProbs(feats: DataFrame, classes: Seq[String],
-      bMicro: Array[Long], wFlat: Array[Long]): DataFrame = {
-    val k = classes.size
+    * sums), and the per-CLASS tail (exp, the exact decimal denominator,
+    * the 6-dp division) is unrolled into K plain columns — every
+    * expression a codegen'd built-in, none of it HOF. */
+  private def withSoftmaxProbs(feats: DataFrame, m: Dense): DataFrame = {
+    val k = m.classes.size
     val zt = graft.functions.GraftFunctions.softmax_z(col("cells"),
-      typedLit(bMicro.toSeq), typedLit(wFlat.toSeq))
+      typedLit(m.b.toSeq), typedLit(m.w.toSeq))
     val eCols = (0 until k).map(i => s"__e$i")
     val withE = (0 until k).foldLeft(
       feats.withColumn("__zt", zt)
@@ -447,25 +447,20 @@ object LogisticRegression {
    * rounded to 6 dp; the denominator is an exact decimal sum over the
    * bounded class set; the probability and the step are each one
    * double expression rounded to 6 dp — every iteration replays
-   * bit-for-bit as oracle CTEs. (The round-15 optimization pass moved
-   * the per-iteration logits/softmax/gradient chain in-row over the
-   * doc-grain feature frame with the model as a plan literal of exact
-   * micro-units; round 16 replaced its interpreted HOF fold with the
-   * codegen'd softmax_z kernel and the K-way posexplode with K sum
-   * columns — same values at every step, see the object doc and
-   * [[withSoftmaxProbs]]; the weight-update expressions are unchanged.)
+   * bit-for-bit as oracle CTEs.
    *
-   * Scale shape: per iteration ONE map-side pass over the doc-grain
-   * feature frame (z/softmax/err in-row against the ≤ buckets·K + K
-   * entry plan-literal model) and one partial-aggregated CELL hash
-   * aggregation carrying K per-class decimal sum columns — the −2
-   * sentinel cell carries the per-class intercept gradient in the same
-   * exchange, and the (cell, cls) grain is recovered by unpivoting the
-   * BOUNDED ≤ buckets+1-row aggregate. Cost linear in corpus grams per
-   * iteration (the gradient exchange no longer multiplies rows by K),
-   * and the model is plan-literal-sized at any corpus size (the
+   * Scale shape: the descent of [[trainWeights]] with K error columns
+   * — per iteration ONE map-side pass over the doc-grain feature frame
+   * (logits/softmax/err in-row against the ≤ buckets·K + K entry
+   * plan-literal model, see [[withSoftmaxProbs]]) and one
+   * partial-aggregated CELL hash aggregation carrying K per-class
+   * decimal sum columns (the −2 sentinel cell carries the per-class
+   * intercept gradient), collected as ≤ buckets+1 rows and applied on
+   * the driver. Cost linear in corpus grams per iteration (the
+   * gradient exchange does not multiply rows by K), and the model is
+   * plan-literal-sized at any corpus size (the
    * [[Classifier.nbPredictHashed]] bound with a discriminative
-   * objective).
+   * objective). Output rows are ordered by (cell, cls).
    */
   def trainSoftmaxWeights(docs: DataFrame, textCol: String, idCol: String,
       labelCol: String, buckets: Int = 256, iters: Int = 12,
@@ -474,7 +469,6 @@ object LogisticRegression {
     require(buckets > 0, s"buckets must be positive, got $buckets")
     require(iters > 0, s"iters must be positive, got $iters")
     require(maxClasses >= 2, s"maxClasses must be >= 2, got $maxClasses")
-    val spark = docs.sparkSession
     // guard BEFORE featurization (the `maxLlmBand` discipline): a caller
     // who wires a high-cardinality column (URL, doc_id) as labelCol would
     // otherwise collect millions of rows to the driver and build a
@@ -482,136 +476,72 @@ object LogisticRegression {
     // one narrow column — instead of the materialized doc×cell feature
     // frame also protects the featurization itself from a pathological
     // label column and costs one narrow scan, not a second pass over the
-    // feature frame (round-12 verdict, What's wrong #2); limit(max+1)
-    // bounds the check itself
+    // feature frame; limit(max+1) bounds the check itself
     val kCount = docs.select(col(labelCol)).distinct()
       .limit(maxClasses + 1).count()
     require(kCount <= maxClasses,
       s"trainSoftmaxWeights found more than $maxClasses distinct " +
         s"labels in '$labelCol' — a softmax langid/classifier label " +
-        "set is small by design (the model is buckets×K rows, collected " +
-        "per iteration); check the label column, or raise maxClasses " +
+        "set is small by design (the model is buckets×K rows, held on " +
+        "the driver); check the label column, or raise maxClasses " +
         "explicitly if the cardinality is intended")
     val feats = Materialized(
       featFrameMulti(docs, textCol, idCol, labelCol, buckets)
         .filter(col("_bk") < trainBuckets)
         .select("doc_id", "y", "cells"))
-    // ONE bounded job for both fixed-cost scalars: the training-doc
-    // count (baked into the step literal) and the class alphabet
-    // (≤ maxClasses strings by the guard above), sorted so the initial
-    // model — and every downstream plan — is deterministic
-    val meta = feats.agg(countDistinct(col("doc_id")),
-      sort_array(collect_set(col("y")))).head()
-    val n = meta.getLong(0)
-    require(n > 0, "no training documents with at least one gram")
-    val classes = meta.getSeq[String](1)
+    // the class alphabet (≤ maxClasses strings by the guard above),
+    // sorted so the model — and every downstream plan — is deterministic
+    val (n, classes) = trainingSlice("trainSoftmaxWeights", idCol, feats,
+      sort_array(collect_set(col("y"))))
     require(classes.size >= 2,
       s"softmax needs at least 2 classes, got ${classes.size}")
     val k = classes.size
-    val clsIdx = classes.zipWithIndex.toMap
-    val classesLit = typedLit(classes)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("cell",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("cls",
-        org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("w",
-        org.apache.spark.sql.types.DecimalType(18, 6), nullable = true)))
-    def local(rows: Seq[Row]): DataFrame =
-      spark.createDataFrame(
-        new java.util.ArrayList(java.util.Arrays.asList(rows: _*)), schema)
-    var rows: Seq[Row] = classes.map(c => Row(
-      -1L, c, new java.math.BigDecimal("0.000000")))
-    var w: DataFrame = local(rows)
-    for (_ <- 1 to iters) {
-      // dense micro-unit model from the collected rows (class set is
-      // constant across iterations: intercept gradients cover every
-      // class every iteration)
-      val bMicro = new Array[Long](k)
-      val wFlat = new Array[Long](buckets * k)
-      rows.foreach { r =>
-        val cell = r.getLong(0)
-        val ki = clsIdx(r.getString(1))
-        val m = microOf(r.getDecimal(2))
-        if (cell == -1L) bMicro(ki) = m
-        else if (cell >= 0 && cell < buckets) wFlat(cell.toInt * k + ki) = m
-      }
-      // ONE map-side pass: probabilities in-row, per-class err array
-      // (K codegen'd element_at pulls — identical decimal values to the
-      // former zip_with), gradient as K per-class decimal SUM columns
-      // over the exploded (cell | −2 sentinel) rows — a single
-      // partial-aggregated CELL exchange per iteration. The former
-      // (r15) shape posexploded every exploded cell K ways and hash-
-      // aggregated corpus-grams × K rows under a (cell, STRING cls)
-      // key; K sum columns aggregate the same addends per (cell, class)
-      // without the K× row blow-up (decimal addition is exact and
-      // commutative, so each g is bit-identical), and the (cell, cls)
-      // grain is recovered by unpivoting the BOUNDED ≤ buckets+1-row
-      // aggregate.
-      val grads = withSoftmaxProbs(feats, classes, bMicro, wFlat)
-        .select(concat(col("cells"), array(lit(-2L))).as("cs"),
-          array(classes.zipWithIndex.map { case (c, i) =>
-            (element_at(col("__p"), i + 1) -
-              when(col("y") === c, 1L).otherwise(0L)).cast(Dec)
-          }: _*).as("__errs"))
-        .select(explode(col("cs")).as("cell"), col("__errs"))
-        .groupBy("cell")
-        .agg(sum(element_at(col("__errs"), 1).cast(Dec28)).as("__g0"),
-          (1 until k).map(i =>
-            sum(element_at(col("__errs"), i + 1).cast(Dec28))
-              .as(s"__g$i")): _*)
-        .select(col("cell"),
-          posexplode(array((0 until k).map(i => col(s"__g$i")): _*)))
-        .select(col("cell"),
-          element_at(classesLit, col("pos") + 1).as("cls"),
-          col("col").as("g"))
-      val gc = grads.filter(col("cell") >= 0)
-      val gb = grads.filter(col("cell") === -2).select(col("cls"), col("g"))
-      // weight-update expressions unchanged from the join-shaped trainer
-      val wc = w.filter(col("cell") >= 0)
-      val wb = w.filter(col("cell") === -1)
-        .select(col("cls"), col("w").as("b"))
-      def delta: Column =
-        round(lit(step) * col("g").cast("double") / lit(n), 6).cast(Dec)
-      val newC = gc.join(broadcast(wc), Seq("cell", "cls"), "left")
-        .select(col("cell"), col("cls"),
-          (coalesce(col("w"), zeroDec) - delta).cast(Dec).as("w"))
-      val newB = gb.join(broadcast(wb), Seq("cls"))
-        .select(lit(-1L).as("cell"), col("cls"),
-          (col("b") - delta).cast(Dec).as("w"))
-      // the LocalRelation round-trip of [[trainWeights]] (bounded at
-      // buckets·K + K rows), sorted by (cell, cls) for determinism
-      rows = newC.unionByName(newB).collect()
-        .sortBy(r => (r.getLong(0), r.getString(1))).toSeq
-      w = local(rows)
+    val (m, cells) = descend(feats, n, classes, buckets, iters, step) {
+      cur => withSoftmaxProbs(feats, cur).select(col("cells") +:
+        classes.zipWithIndex.map { case (c, i) =>
+          (element_at(col("__p"), i + 1) -
+            when(col("y") === c, 1L).otherwise(0L)).cast(Dec).as(s"__err$i")
+        }: _*)
     }
-    w
+    // rows in (cell, cls) order, cls compared as Scala Strings
+    val byName = classes.indices.sortBy(classes)
+    docs.sparkSession.createDataFrame(
+      (for (c <- -1 +: cells; i <- byName) yield Row(c.toLong, classes(i),
+        decOf(if (c < 0) m.b(i) else m.w(c * k + i)))).asJava,
+      StructType(Seq(StructField("cell", LongType, nullable = false),
+        StructField("cls", StringType, nullable = false),
+        StructField("w", DecimalType(18, 6), nullable = true))))
   }
 
   /** Score doc-grain `feats` (held-out docs) against a softmax weight
-    * table — a pure map-side projection: the bounded model is
-    * collected and rides in the plan as micro-unit array literals;
-    * argmax class with ties to the ascending class name (classes are
-    * UTF-8-byte sorted — Spark's own string order — so the in-row
-    * first-max matches the former `orderBy(p desc, cls asc)` ranking).
+    * table — a pure map-side projection: the bounded model is decoded
+    * (validated by [[decode]]) and rides in the plan as micro-unit
+    * array literals; argmax class with ties to the ascending class name
+    * (classes are UTF-8-byte sorted — Spark's own string order — so the
+    * in-row first-max is the `orderBy(p desc, cls asc)` ranking).
     * Output: (doc_id, label_true, label_pred, prob) — prob the 6-dp
     * softmax of the predicted class. */
   private def scoreSoftmax(feats: DataFrame, weights: DataFrame,
       buckets: Int): DataFrame = {
-    val (classes, bMicro, wFlat) = collectSoftmax(weights, buckets)
-    if (classes.isEmpty)
-      // no intercept rows: the former dense crossJoin against an empty
-      // intercept relation produced zero rows — preserve that
+    val m = decode(weights, col("cls"), buckets)
+    if (m.classes.isEmpty)
+      // no intercept rows: nothing to score against — an empty result
       feats.select(col("doc_id"), col("y").as("label_true"),
         lit(null).cast("string").as("label_pred"), lit(0.0).as("prob"))
         .filter(lit(false))
     else {
-      val classesLit = typedLit(classes)
-      withSoftmaxProbs(feats, classes, bMicro, wFlat)
+      val classesLit = typedLit(m.classes)
+      // label_pred is never null (__i ∈ [1, K]); the coalesce says so to
+      // the optimizer. A nullable label_pred lets a consumer's inferred
+      // isnotnull(label_pred) (any join or group on it) be pushed down
+      // with the whole softmax chain inlined twice per class: a filter
+      // whose generated code grows beyond Janino's 64 KB method limit.
+      withSoftmaxProbs(feats, m)
         .withColumn("__i",
           array_position(col("__p"), array_max(col("__p"))).cast("int"))
         .select(col("doc_id"), col("y").as("label_true"),
-          element_at(classesLit, col("__i")).as("label_pred"),
+          coalesce(element_at(classesLit, col("__i")), lit(m.classes.head))
+            .as("label_pred"),
           element_at(col("__p"), col("__i")).cast("double").as("prob"))
     }
   }

@@ -1,9 +1,6 @@
 package graft
 
 import graft.dedup.ConnectedComponents
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
-import java.util.concurrent.atomic.AtomicInteger
 
 /** ConnectedComponents.label finishes on the driver once the edge set
   * fits: labeling a small graph that needs several star-contraction
@@ -11,28 +8,6 @@ import java.util.concurrent.atomic.AtomicInteger
   * signature probe and the AQE stage jobs of every round. */
 class ConnectedComponentsJobSpec extends SparkSpec {
   import spark.implicits._
-
-  /** Spark jobs started while `body` runs, counted through a job group so
-    * jobs of anything else sharing the session are not charged. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = "cc-job-budget"
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, group, interruptOnCancel = false)
-    try body
-    finally {
-      sc.clearJobGroup()
-      org.apache.spark.graft.ListenerDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get()
-  }
 
   test("chains of 2-8 nodes label in at most 10 jobs") {
     // chains of 2..8 nodes laid end to end, plus isolated nodes

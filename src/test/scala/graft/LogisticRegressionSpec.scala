@@ -135,6 +135,120 @@ class LogisticRegressionSpec extends SparkSpec {
       "text", "doc_id", col("y"), buckets = 16, iters = 1).count() > 0)
   }
 
+  test("softmax: duplicate training doc_ids are rejected") {
+    val docs = (0L until 40L).map(i =>
+      (i, s"tok${i % 7} tok${i % 11} filler words here",
+        Seq("x", "y", "z")((i % 3).toInt)))
+    val dup = splitIds(1, train = true).head
+    val withDup = (docs :+ ((dup, "another text under the same id", "x")))
+      .toDF("doc_id", "text", "lang")
+    val e = intercept[IllegalArgumentException] {
+      LogisticRegression.trainSoftmaxWeights(withDup, "text", "doc_id",
+        "lang", buckets = 16, iters = 1)
+    }
+    assert(e.getMessage.contains("doc_id must be unique"), e.getMessage)
+    assert(LogisticRegression.trainSoftmaxWeights(
+      docs.toDF("doc_id", "text", "lang"), "text", "doc_id", "lang",
+      buckets = 16, iters = 1).count() > 0)
+  }
+
+  test("each descent iteration costs at most 2 Spark jobs, binary and softmax") {
+    val docs = (0L until 200L).map(i =>
+      (i, s"tok${i % 7} tok${i % 11} filler words here", i % 3 == 0,
+        Seq("x", "y", "z")((i % 3).toInt))).toDF("doc_id", "text", "y", "lang")
+    def binary(iters: Int): Int = jobsOf {
+      LogisticRegression.trainWeights(docs, "text", "doc_id", col("y"),
+        buckets = 16, iters = iters)
+    }
+    def softmax(iters: Int): Int = jobsOf {
+      LogisticRegression.trainSoftmaxWeights(docs, "text", "doc_id", "lang",
+        buckets = 16, iters = iters)
+    }
+    val (b1, b4) = (binary(1), binary(4))
+    val (s1, s4) = (softmax(1), softmax(4))
+    assert(b4 - b1 <= 6, s"binary: $b1 jobs at 1 iteration, $b4 at 4")
+    assert(s4 - s1 <= 6, s"softmax: $s1 jobs at 1 iteration, $s4 at 4")
+  }
+
+  test("a malformed weight table is rejected by both scorers when decoded") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val docs = (0L until 60L).map(i =>
+      (i, s"tok${i % 7} tok${i % 11} filler words here", i % 3 == 0,
+        Seq("x", "y")((i % 2).toInt))).toDF("doc_id", "text", "y", "lang")
+    val dir = java.nio.file.Files.createTempDirectory("lrbad").toString
+    def d(s: String) = new java.math.BigDecimal(s)
+    def table(name: String, rows: Seq[Row], softmax: Boolean): String = {
+      val schema = StructType(Seq(StructField("cell", LongType)) ++
+        (if (softmax) Seq(StructField("cls", StringType)) else Nil) ++
+        Seq(StructField("w", DecimalType(18, 6))))
+      val path = s"$dir/$name-${if (softmax) "softmax" else "binary"}"
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+        .coalesce(1).write.parquet(path)
+      path
+    }
+    def binary(path: String) = LogisticRegression.predictFromModel(docs,
+      "text", "doc_id", col("y"), path, buckets = 16).collect()
+    def softmax(path: String) = LogisticRegression.softmaxPredictFromModel(
+      docs, "text", "doc_id", "lang", path, buckets = 16).collect()
+    // (name, binary rows, softmax rows, expected message)
+    val cases = Seq(
+      ("dup-intercept",
+        Seq(Row(-1L, d("0.1")), Row(-1L, d("0.2")), Row(3L, d("0.5"))),
+        Seq(Row(-1L, "x", d("0.1")), Row(-1L, "x", d("0.2")),
+          Row(-1L, "y", d("0.3"))),
+        "duplicate intercept"),
+      ("dup-cell",
+        Seq(Row(-1L, d("0.1")), Row(3L, d("0.5")), Row(3L, d("0.6"))),
+        Seq(Row(-1L, "x", d("0.1")), Row(-1L, "y", d("0.2")),
+          Row(3L, "y", d("0.5")), Row(3L, "y", d("0.6"))),
+        "duplicate row for cell 3"),
+      ("null-cell",
+        Seq(Row(-1L, d("0.1")), Row(null, d("0.5"))),
+        Seq(Row(-1L, "x", d("0.1")), Row(-1L, "y", d("0.2")),
+          Row(null, "x", d("0.5"))),
+        "null cell, cls or w"),
+      ("null-w",
+        Seq(Row(-1L, d("0.1")), Row(3L, null)),
+        Seq(Row(-1L, "x", d("0.1")), Row(-1L, "y", null)),
+        "null cell, cls or w"),
+      ("cell-out-of-range",
+        Seq(Row(-1L, d("0.1")), Row(16L, d("0.5"))),
+        Seq(Row(-1L, "x", d("0.1")), Row(-1L, "y", d("0.2")),
+          Row(20L, "x", d("0.5"))),
+        "outside [0, 16)"),
+      ("negative-cell",
+        Seq(Row(-1L, d("0.1")), Row(-3L, d("0.5"))),
+        Seq(Row(-1L, "x", d("0.1")), Row(-1L, "y", d("0.2")),
+          Row(-3L, "y", d("0.5"))),
+        "outside [0, 16)"))
+    cases.foreach { case (name, bin, soft, msg) =>
+      Seq(("binary", () => binary(table(name, bin, softmax = false))),
+          ("softmax", () => softmax(table(name, soft, softmax = true))))
+        .foreach { case (scorer, run) =>
+          val e = intercept[IllegalArgumentException](run())
+          assert(e.getMessage.contains("malformed LR weight table") &&
+            e.getMessage.contains(msg), s"$name / $scorer: ${e.getMessage}")
+        }
+    }
+    // a softmax cell row of a class with no intercept row
+    val orphan = intercept[IllegalArgumentException](softmax(table("orphan",
+      Seq(Row(-1L, "x", d("0.1")), Row(3L, "z", d("0.5"))), softmax = true)))
+    assert(orphan.getMessage.contains("without an intercept"),
+      orphan.getMessage)
+    // well-formed tables score, and a table with no intercept row still
+    // scores to an empty result
+    assert(binary(table("ok", Seq(Row(-1L, d("0.1")), Row(3L, d("0.5"))),
+      softmax = false)).nonEmpty)
+    assert(softmax(table("ok", Seq(Row(-1L, "x", d("0.1")),
+      Row(-1L, "y", d("0.2")), Row(3L, "y", d("0.5"))), softmax = true))
+      .nonEmpty)
+    assert(binary(table("no-intercept", Seq(Row(3L, d("0.5"))),
+      softmax = false)).isEmpty)
+    assert(softmax(table("no-intercept", Seq(Row(3L, "x", d("0.5"))),
+      softmax = true)).isEmpty)
+  }
+
   // ------------------------------------------------- multiclass softmax
 
   /** ids pre-sorted into the engine's own md5 train/held-out slices so
@@ -188,6 +302,17 @@ class LogisticRegressionSpec extends SparkSpec {
     assert(accNb < 0.67,
       s"NB should fall for the duplicated filler evidence, acc $accNb")
     assert(accLr > accNb, s"LR $accLr must beat NB $accNb")
+  }
+
+  test("softmax serving compiles under whole-stage codegen with no fallback") {
+    // both queries join or group on the predicted label; a nullable
+    // label let the inferred isnotnull filter inline the softmax chain
+    // into one generated method past the 64 KB limit
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try Seq("ccnet_lang_triage", "curate_quality_stack_multilingual")
+      .foreach(q => assert(SparkEntry.queries(q)(spark, sf()).collect()
+        .nonEmpty, q))
+    finally spark.conf.unset("spark.sql.codegen.fallback")
   }
 
   test("softmax model bounded at buckets*K + K rows; serve-from-disk bit-identical") {
