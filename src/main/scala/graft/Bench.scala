@@ -5,9 +5,9 @@ import org.apache.spark.sql.SparkSession
   * (same warmup and timing) and leave the per-query file unwritten. */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val unknown = args.filterNot(SparkEntry.queries.contains)
-    if (unknown.nonEmpty) throw new IllegalArgumentException(
-      s"Bench: unknown query name(s): ${unknown.mkString(", ")}")
+    val selected = (if (args.isEmpty) SparkEntry.registry
+      else QuerySpec.resolve("Bench", args.toSeq.distinct, SparkEntry.byName))
+      .sortBy(_.name)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local("graft-bench")
     // A FAILED run must never masquerade as a fast success: the r15
@@ -44,13 +44,11 @@ object Bench {
 
     // Per query: median of 3 runs (sorted name order) — the first run
     // pays any per-query persist/codegen, the median reports steady
-    // state. Persisted-artifact queries (SparkEntry.buildServe) are
+    // state. Persisted-artifact queries (QuerySpec.build) are
     // timed in two phases: build (train + write) and serve (read +
     // query) — a deployment pays build once and serve per request, so
     // the conflated number overstated serving cost.
     val perQueryRuns = 3
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(q => args.isEmpty || args.contains(q._1))
     case class Suite(perQuery: Seq[(String, Double)],
         buildServe: Seq[(String, Double, Double)]) {
       def total: Double = perQuery.map(_._2).sum
@@ -58,8 +56,9 @@ object Bench {
     def runSuite(): Suite = {
       val per = Seq.newBuilder[(String, Double)]
       val bs = Seq.newBuilder[(String, Double, Double)]
-      selected.foreach { case (name, fn) =>
-        SparkEntry.buildServe.get(name) match {
+      selected.foreach { q =>
+        val name = q.name
+        q.build match {
           case Some(builder) =>
             val runs = (1 to perQueryRuns).map { _ =>
               var serve: () => org.apache.spark.sql.DataFrame = null
@@ -72,7 +71,7 @@ object Bench {
             bs += ((name, m._2, m._3))
           case None =>
             val times = (1 to perQueryRuns)
-              .map(_ => time(name)(fn(spark, sfDir).count())).sorted
+              .map(_ => time(name)(q.run(spark, sfDir).count())).sorted
             per += name -> times(perQueryRuns / 2)
         }
       }
@@ -177,17 +176,14 @@ object Bench {
     }
 
     val total = median.total
-    // Split the guarded exact O(n²) baselines (documented correctness
-    // anchors with fail-fast size guards, NOT the scale path) out of the
-    // headline so a regression in the scale-path operators is never
-    // masked by baseline time. "total" stays the all-queries sum for
-    // round-over-round comparability.
-    val exactBaselines = Set("embedding_cosine_pairs", "ann_topk",
-      "ann_quantized_topk", "quantization_recall", "ann_pq_topk",
-      "pq_recall", "pq_recall_trained", "pq_rerank_recall")
-    val exactSec = results.collect { case (k, v) if exactBaselines(k) => v }.sum
+    // Split the exact baselines (QuerySpec.ExactBaseline) out of the
+    // headline. "total" stays the all-queries sum for round-over-round
+    // comparability.
+    val exact = SparkEntry.registry.filter(_.tags(QuerySpec.ExactBaseline))
+      .map(_.name).sorted
+    val exactSec = results.collect { case (k, v) if exact.contains(k) => v }.sum
     val envelope = s""""suite_runs":$suiteRuns,"total_min":${f(totals.head)},"total_median":${f(totals(suiteRuns / 2))},"total_max":${f(totals.last)}"""
-    println(s"""{"metric":"total","value":${f(total)},"unit":"sec",$envelope,"scale_path_sec":${f(total - exactSec)},"exact_baseline_sec":${f(exactSec)},"build_sec":${f(buildSec)},"serve_sec":${f(serveSec)},"build_serve":$bsJson,"exact_baseline_queries":${exactBaselines.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},"queries":$qs,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${f(total)},"unit":"sec",$envelope,"scale_path_sec":${f(total - exactSec)},"exact_baseline_sec":${f(exactSec)},"build_sec":${f(buildSec)},"serve_sec":${f(serveSec)},"build_serve":$bsJson,"exact_baseline_queries":${exact.map("\"" + _ + "\"").mkString("[", ",", "]")},"queries":$qs,"sf":"$sfDir"}""")
     // The spread rides its OWN short line right before the final
     // totals-only line: on the long per-query line its head was exactly
     // what the driver's ~2 KB tail window truncated (BENCH_r09), so

@@ -1,32 +1,34 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. A failed query
-  * does not stop the dump; after writing everything it can, Verify lists
-  * the failed names on stderr and exits 1. */
+/** Correctness dump: the result of each query in [[SparkEntry.registry]]
+  * → parquet, plus oracle_sql.json (the oracles the registry declares),
+  * for the DuckDB compare (`tools/compare_oracle.py`).
+  * `GRAFT_VERIFY_QUERIES=a,b` restricts both to the named queries, for
+  * fast targeted local gates; an unknown name fails before any query
+  * runs. A failed query does not stop the dump; after writing everything
+  * it can, Verify lists the failed names on stderr and exits 1. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    val selected = sys.env.get("GRAFT_VERIFY_QUERIES") match {
+      case Some(v) => QuerySpec.resolve("GRAFT_VERIFY_QUERIES",
+        v.split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct,
+        SparkEntry.byName)
+      case None => SparkEntry.registry
+    }
     val spark = GraftSession.local("graft-verify")
     new java.io.File(outDir).mkdirs()
-    // Optional comma-separated filter for fast targeted local gates
-    // (the driver runs unfiltered; oracle_sql.json is filtered to match
-    // so compare_oracle only checks the dumped queries).
-    val only = sys.env.get("GRAFT_VERIFY_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def wanted(name: String): Boolean = only.forall(_.contains(name))
-    val failed = SparkEntry.queries.filter(kv => wanted(kv._1)).toSeq
-      .flatMap { case (name, fn) =>
-        try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          None
-        } catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          Some(name)
-        }
+    val failed = selected.flatMap { q =>
+      try {
+        q.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/${q.name}")
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
+        Some(q.name)
       }
+    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -39,7 +41,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => wanted(kv._1))
+    val names = selected.map(_.name).toSet
+    val json = SparkEntry.oracleSql.filter(kv => names(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
