@@ -72,20 +72,19 @@ object SparkEntry {
       val sampled = graft.operators.Sampling.byWeight(
         graft.dedup.TextDedup.softDedupWeights(quality, "text", "doc_id"),
         "doc_id", "weight")
-      val merges = graft.text.Bpe.trainBytes(
-        graft.text.Bpe.pretokenSample(docs, "text", 256), 24)
-      val blob = lit(graft.text.Bpe.mergeBlob(merges))
-      val relIds = flatten(transform(graft.text.Bpe.pretokens(col("text")),
-        w => graft.functions.GraftFunctions.bpe_byte_ids(w, blob)))
-      sampled.join(quality.select("doc_id", "lang", "text"), "doc_id")
-        .select(col("doc_id"), col("lang"), col("n_copies"),
-          col("weight"), relIds.as("__ids"))
-        .select(col("doc_id"), col("lang"), col("n_copies"),
-          col("weight"),
-          size(col("__ids")).cast("long").as("n_tokens"),
-          md5(array_join(transform(col("__ids"),
-            i => i.cast("string")), " ")).as("ids_md5"))
+      graft.text.Bpe.encodeDocsIdsBlob(
+        sampled.join(quality.select("doc_id", "lang", "text"), "doc_id"),
+        "text", "doc_id", releaseBlob(s, dir),
+        carry = Seq("lang", "n_copies", "weight"))
+        .withColumnRenamed("n_bpe_tokens", "n_tokens")
     }
+
+  /** The release mart's byte-BPE id blob: 24 merges trained on the
+    * pretokens of `documents`, once per (session, dir). */
+  private def releaseBlob(s: SparkSession, dir: String): String =
+    cached[String](s, dir, "release_blob")(graft.text.Bpe.mergeBlob(
+      graft.text.Bpe.trainBytes(graft.text.Bpe.pretokenSample(
+        Demo.table(s, dir, "documents"), "text", 256), 24)))
 
   /** Corpus sizes feeding size-derived parameters (semdedup nlist):
     * counted ONCE per (session, dir) instead of once per query
@@ -535,7 +534,7 @@ object SparkEntry {
     * the oracle replays byte-for-byte. */
   private def multilineDocs(s: SparkSession, dir: String): DataFrame =
     Demo.table(s, dir, "documents")
-      .withColumn("__toks", TextDedup.tokens(col("text")))
+      .withColumn("__toks", TextAnalysis.tokens(col("text")))
       .withColumn("__nl",
         greatest(lit(1), expr("(size(__toks) + 7) DIV 8")))
       .withColumn("mtext",
@@ -599,7 +598,7 @@ object SparkEntry {
     * exist (the synthetic corpus's lang/source columns are independent
     * of the text, so only text-derived labels are learnable here). */
   private def lrLabel: Column =
-    array_contains(graft.dedup.TextDedup.tokens(col("text")), "spark")
+    array_contains(TextAnalysis.tokens(col("text")), "spark")
 
   /** The dedup-eval mart's planted ground-truth corpus and its
     * five-family detected-pair frame, shared by `dedup_eval_report` and
@@ -1189,7 +1188,7 @@ object SparkEntry {
       val path = tmpIndexDir("bpebytemerges", dir)
       graft.text.Bpe.writeByteMerges(s, Demo.table(s, dir, "documents"),
         "text", numMerges = 24, topK = 256, path)
-      () => graft.text.Bpe.encodeDocsBytesKernel(
+      () => graft.text.Bpe.encodeDocsBytes(
         Demo.table(s, dir, "documents"), "text", "doc_id",
         graft.text.Bpe.loadMerges(s, path))
         .orderBy("doc_id")
@@ -1202,7 +1201,7 @@ object SparkEntry {
       graft.text.Bpe.writeBytePretokMerges(s,
         Demo.table(s, dir, "documents"), "text", numMerges = 24,
         topK = 256, path)
-      () => graft.text.Bpe.encodeBytesPretokFromModelKernel(s,
+      () => graft.text.Bpe.encodeBytesPretokFromModel(s,
         Demo.table(s, dir, "documents"), "text", "doc_id", path)
         .orderBy("doc_id")
     })
@@ -1263,7 +1262,7 @@ object SparkEntry {
             when(col("doc_id") % 3 === 0, lit("<|endoftext|>"))
               .otherwise(lit("")),
             col("text"), lit("<|endoftext|>"), col("text")).as("text"))
-        graft.text.Gpt2Artifacts.encodeDocsIdsSpecials(
+        graft.text.Gpt2Artifacts.encodeDocsIds(
           planted, "text", "doc_id", model)
           .orderBy("doc_id")
       }
@@ -1949,7 +1948,7 @@ SELECT node, r AS rank_u FROM r10 ORDER BY node"""),
     // Lateral/explode: corpus token frequencies, deterministic top-50
     query("token_freq_top50")((s, dir) =>
       Demo.table(s, dir, "documents")
-        .select(explode(TextDedup.tokens(col("text"))).as("token"))
+        .select(explode(TextAnalysis.tokens(col("text"))).as("token"))
         .groupBy("token").agg(count(lit(1)).as("n"))
         .orderBy(desc("n"), asc("token")).limit(50))
       .oracle(OracleSql.tokenFreqTop50),
@@ -2145,7 +2144,7 @@ SELECT node, r AS rank_u FROM r10 ORDER BY node"""),
     query("approx_distinct_tokens")((s, dir) =>
       Demo.table(s, dir, "documents")
         .select(col("lang"),
-          explode(TextDedup.tokens(col("text"))).as("tok"))
+          explode(TextAnalysis.tokens(col("text"))).as("tok"))
         .groupBy("lang")
         .agg(graft.functions.GraftFunctions
           .hll_registers(col("tok"), 10).as("regs"),
@@ -3151,18 +3150,14 @@ FROM bkt"""),
     query("corpus_release_sequences", Soak)((s, dir) => {
       val docs = Demo.table(s, dir, "documents")
       val counted = releaseCounted(s, dir)
-      val merges = graft.text.Bpe.trainBytes(
-        graft.text.Bpe.pretokenSample(docs, "text", 256), 24)
-      val blob = lit(graft.text.Bpe.mergeBlob(merges))
       val corpus = docs.select("doc_id", "lang", "text").unionByName(
         docs.filter(col("doc_id") % 5 === 0)
           .select((col("doc_id") + 10000).as("doc_id"), col("lang"),
             col("text")))
       val ids = counted.select("doc_id").join(corpus, "doc_id")
         .select(col("doc_id"),
-          posexplode(flatten(transform(
-            graft.text.Bpe.pretokens(col("text")),
-            w => graft.functions.GraftFunctions.bpe_byte_ids(w, blob)))))
+          posexplode(graft.functions.GraftFunctions.bpe_text_ids(
+            col("text"), lit(releaseBlob(s, dir)))))
         .toDF("doc_id", "pos", "id")
       val frags = graft.text.SequencePacking.packSplit(counted,
         col("n_tokens"), "doc_id", budget = 512, shardCol = "lang")
@@ -3206,7 +3201,7 @@ FROM bkt"""),
     // count (ties → min id), the keeper rule real pipelines use
     query("dedup_keep_longest")((s, dir) =>
       TextDedup.keepersByQuality(Demo.table(s, dir, "documents"),
-        "doc_id", size(TextDedup.tokens(col("text"))).cast("long"),
+        "doc_id", size(TextAnalysis.tokens(col("text"))).cast("long"),
         ccLabelsDf(s, dir))
         .orderBy("doc_id"))
       .oracle(DedupOracles.keepLongest),
@@ -3239,7 +3234,7 @@ FROM bkt"""),
     // (duplicate-line and duplicate-3-gram fractions, mean word length —
     // the classic corpus-filter rules)
     query("quality_repetition")((s, dir) => {
-      val toks = TextDedup.tokens(col("text"))
+      val toks = TextAnalysis.tokens(col("text"))
       val lines = filter(split(col("text"), "\n"), x => trim(x) =!= "")
       val total3 = greatest(size(toks) - 2, lit(0))
       Demo.table(s, dir, "documents")
@@ -3716,7 +3711,7 @@ FROM bkt"""),
       val merges = graft.text.Bpe.trainBytes(
         graft.text.Bpe.wordSample(Demo.table(s, dir, "documents"),
           "text", 256), 24)
-      graft.text.Bpe.encodeDocsBytesKernel(Demo.table(s, dir, "documents"),
+      graft.text.Bpe.encodeDocsBytes(Demo.table(s, dir, "documents"),
         "text", "doc_id", merges)
         .orderBy("doc_id")
     })
@@ -3752,7 +3747,7 @@ FROM bkt"""),
       val merges = graft.text.Bpe.trainBytes(
         graft.text.Bpe.pretokenSample(Demo.table(s, dir, "documents"),
           "text", 256), 24)
-      graft.text.Bpe.encodeDocsBytesPretokKernel(
+      graft.text.Bpe.encodeDocsBytesPretok(
         Demo.table(s, dir, "documents"), "text", "doc_id", merges)
         .orderBy("doc_id")
     })
@@ -3766,7 +3761,7 @@ FROM bkt"""),
         graft.text.Bpe.pretokenSample(docsT, "text", 256), 24)
       docsT.select(col("doc_id"), col("lang"),
         octet_length(col("text")).cast("long").as("b"))
-        .join(graft.text.Bpe.encodeDocsBytesPretokKernel(docsT, "text",
+        .join(graft.text.Bpe.encodeDocsBytesPretok(docsT, "text",
           "doc_id", merges).select("doc_id", "n_bpe_tokens"), "doc_id")
         .groupBy("lang")
         .agg(sum(col("b")).as("n_bytes"),
@@ -3792,7 +3787,7 @@ FROM bkt"""),
       val merges = graft.text.Bpe.trainBytes(
         graft.text.Bpe.pretokenSample(Demo.table(s, dir, "documents"),
           "text", 256), 24)
-      graft.text.Bpe.encodeDocsBytesPretokIdsKernel(
+      graft.text.Bpe.encodeDocsBytesPretokIds(
         Demo.table(s, dir, "documents"), "text", "doc_id", merges)
         .orderBy("doc_id")
     })
@@ -3950,7 +3945,7 @@ FROM bkt"""),
           "text", 256), 24)
       graft.text.SequencePacking.packCounted(
         Demo.table(s, dir, "documents"),
-        graft.text.Bpe.tokenCountColBytesPretokKernel("text", merges),
+        graft.text.Bpe.tokenCountColBytesPretok("text", merges),
         "doc_id", budget = 512, shardCol = "lang")
         .orderBy("doc_id")
     })
@@ -4715,7 +4710,7 @@ FROM bkt"""),
         count(lit(1)).as("n_docs"),
         count_distinct(col("lang")).as("n_langs"),
         count_distinct(col("source")).as("n_sources"),
-        sum(size(TextDedup.tokens(col("text"))).cast("long"))
+        sum(size(TextAnalysis.tokens(col("text"))).cast("long"))
           .as("total_tokens"),
         sum(col("n_chars")).as("total_chars"))
       val dups = TextDedup.exactGroups(d, "text", "doc_id")

@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.operators.Materialized
+import graft.text.TextAnalysis
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -51,7 +52,7 @@ object DedupEval {
     val base = Materialized(docs
       .groupBy(col(textCol).as("text"))
       .agg(min(col(idCol)).as("origin")))
-    val toks = TextDedup.tokens(col("text"))
+    val toks = TextAnalysis.tokens(col("text"))
     val n = size(toks)
     // ⌊0.8·n⌋ in INTEGER arithmetic (n·8 − (n·8 mod 10)) / 10 — the
     // oracle's `//`; the division is exact (numerator a multiple of 10)

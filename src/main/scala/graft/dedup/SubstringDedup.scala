@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.text.TextAnalysis
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -197,7 +198,7 @@ object SubstringDedup {
         coalesce(col("text_excised"), lit("")).as("text_excised"))
     val untouched = base.join(candDocs, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), lit(0L).as("n_tokens_removed"),
-        array_join(TextDedup.tokens(col("text")), " ").as("text_excised"))
+        array_join(TextAnalysis.tokens(col("text")), " ").as("text_excised"))
     candOut.unionByName(untouched)
   }
 }

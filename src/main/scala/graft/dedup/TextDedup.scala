@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.text.TextAnalysis
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -28,14 +29,10 @@ object TextDedup {
   /** Large prime modulus for the shared shingle/token hash. */
   val P = 1000000007L
 
-  /** Lowercased whitespace tokens of a text column. */
-  def tokens(c: Column): Column =
-    filter(split(lower(c), "\\s+"), x => x =!= "")
-
   /** Distinct word n-gram shingles. Documents with fewer than n tokens
     * yield an empty array. */
   def shingles(c: Column, n: Int = 3): Column = {
-    val toks = tokens(c)
+    val toks = TextAnalysis.tokens(c)
     when(size(toks) >= n,
       array_distinct(transform(sequence(lit(0), size(toks) - n),
         i => concat_ws(" ", slice(toks, i + 1, lit(n))))))

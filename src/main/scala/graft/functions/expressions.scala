@@ -85,12 +85,6 @@ object TokenizerAdapters extends Serializable {
       graft.text.Bpe.wordByteSymbolsBlob(word.toString, blob,
         blob.toString).map(UTF8String.fromString))
 
-  /** [[bpeByteSymbols]] emitting the [[graft.text.Bpe.byteVocab]]
-    * TOKEN IDS (long) instead of symbol strings. */
-  def bpeByteIds(word: UTF8String, blob: UTF8String): ArrayData =
-    ArrayData.toArrayData(
-      graft.text.Bpe.wordByteIdsBlob(word.toString, blob, blob.toString))
-
   /** TEXT-level byte-BPE ids with special-token support
     * ([[graft.text.Bpe.textIdsBlob]]): specials split first and emit
     * their own ids, segments pretokenize + encode in the kernel. */
@@ -1010,10 +1004,10 @@ object GraftFunctions {
   /** Byte-BPE symbols of one WORD column under a trained merge-table
     * blob ([[graft.text.Bpe.mergeBlob]] — rides the plan as a string
     * literal, parsed once per JVM): the rank-SEQUENTIAL kernel, bit-
-    * identical to the replace fold at any table size but O(len²) per
-    * word INDEPENDENT of the merge count — the serving path that
-    * survives production (≥32k-merge) tables, where the fold's
-    * numMerges-deep expression tree dies at plan analysis. */
+    * identical to the driver reference [[graft.text.Bpe.encodeWordBytes]]
+    * below [[graft.text.Bpe.MaxPretokenBytes]], and O(len²) per word
+    * INDEPENDENT of the merge count — the serving path that survives
+    * production (≥32k-merge) tables. */
   def bpe_byte_symbols(word: Column, blob: Column): Column =
     col(StaticInvoke(TokenizerAdapters.getClass,
       ArrayType(StringType, containsNull = false), "bpeByteSymbols",
@@ -1021,22 +1015,12 @@ object GraftFunctions {
       inputTypes = Seq(StringType, StringType),
       propagateNull = true, returnNullable = false))
 
-  /** [[bpe_byte_symbols]] emitting [[graft.text.Bpe.byteVocab]] token
-    * IDS — the stream a training run consumes, without a plan-literal
-    * map lookup per token. */
-  def bpe_byte_ids(word: Column, blob: Column): Column =
-    col(StaticInvoke(TokenizerAdapters.getClass,
-      ArrayType(LongType, containsNull = false), "bpeByteIds",
-      Seq(expr(word), expr(blob)),
-      inputTypes = Seq(StringType, StringType),
-      propagateNull = true, returnNullable = false))
-
-  /** TEXT-level byte-BPE ids with SPECIAL-TOKEN support — the verbatim
-    * serving path for published tokenizers ([[graft.text.Bpe.textIdsBlob]]
-    * under a [[graft.text.Bpe.mergeBlobWithSpecials]] blob): specials
-    * split first and emit their section ids, the text between them
-    * pretokenizes (GPT-2 regex, in-kernel) and encodes through the
-    * bounded byte kernel. One StaticInvoke per document. */
+  /** TEXT-level byte-BPE token ids — the one id kernel
+    * ([[graft.text.Bpe.textIdsBlob]]): under a
+    * [[graft.text.Bpe.mergeBlobWithSpecials]] blob specials split first
+    * and emit their section ids; the text between them pretokenizes
+    * (GPT-2 regex, in-kernel) and encodes through the bounded byte
+    * kernel. One StaticInvoke per document. */
   def bpe_text_ids(text: Column, blob: Column): Column =
     col(StaticInvoke(TokenizerAdapters.getClass,
       ArrayType(LongType, containsNull = false), "bpeTextIds",

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import graft.dedup.TextDedup
-import graft.text.Relevance
+import graft.text.{Relevance, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -97,7 +96,7 @@ object StreamingBm25Index {
     // Materialized(persist-strategy) form each batch's frame stayed
     // registered until releaseAll, growing the cache over a long stream
     val toks = batch.select(col(idCol).as("doc_id"),
-        TextDedup.tokens(col(textCol)).as("toks"))
+        TextAnalysis.tokens(col(textCol)).as("toks"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       GrowingIndex.commit(batch, postingsFromToks(toks, buckets),
@@ -251,7 +250,7 @@ object StreamingBm25Index {
     val survivors = spark.read.parquet(corpusDir)
     survivors
       .select(col("batch_id").cast("long").as("batch_id"),
-        size(TextDedup.tokens(col(textCol))).cast("long").as("dl"))
+        size(TextAnalysis.tokens(col(textCol))).cast("long").as("dl"))
       .groupBy("batch_id")
       .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
       .withColumn("buckets", lit(buckets))

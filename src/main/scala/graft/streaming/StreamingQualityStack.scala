@@ -77,7 +77,7 @@ object StreamingQualityStack {
       .groupBy("w1", "w2").agg(count(lit(1)).as("c"))
       .write.mode("overwrite").parquet(pairsPath(artifactDir))
     reference
-      .select(explode(graft.dedup.TextDedup.tokens(col(textCol))).as("tok"))
+      .select(explode(TextAnalysis.tokens(col(textCol))).as("tok"))
       .agg(count_distinct(col("tok")).as("vsz"))
       .write.mode("overwrite").parquet(vocabPath(artifactDir))
     // thresholds from the reference corpus's own fluency distribution

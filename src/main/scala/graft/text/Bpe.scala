@@ -1,6 +1,5 @@
 package graft.text
 
-import graft.dedup.TextDedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -42,11 +41,14 @@ import org.apache.spark.sql.functions._
  * filtered from words on both sides.
  *
  * Scale shape: the corpus-wide work is ONE token explode + hash
- * aggregation (training) and ONE map-side projection (encoding — the
- * merge chain is `numMerges` codegen'd string replaces inside a
- * `transform` lambda; no shuffle, no join, no driver state at encode
- * time). The driver holds only the ≤ topK sampled types and the merge
- * table.
+ * aggregation (training) and ONE map-side projection (encoding; no
+ * shuffle, no join, no driver state at encode time). Byte-level
+ * encoding is one rank-sequential kernel call per word (symbols) or
+ * per document (token ids), with the merge table riding the plan as a
+ * literal blob, so its cost is independent of the merge count. The
+ * char-level encoders fold the table into `numMerges` codegen'd string
+ * replaces inside a `transform` lambda, capped at demo size. The
+ * driver holds only the ≤ topK sampled types and the merge table.
  */
 object Bpe {
 
@@ -411,9 +413,10 @@ object Bpe {
     unseal(s)
   }
 
-  /** [[encodeWord]] over the byte alphabet — the driver twin of the
-    * byte-level Column encoder; `decodeByteSymbols(encodeWordBytes(w,
-    * m)).sameElements(w)` for EVERY w and m (no unk). */
+  /** [[encodeWord]] over the byte alphabet — the driver reference the
+    * byte-level kernel is held to (and the chain the DuckDB oracles
+    * replay); `decodeByteSymbols(encodeWordBytes(w, m)).sameElements(w)`
+    * for EVERY w and m (no unk). */
   def encodeWordBytes(word: String, merges: Seq[Merge]): Array[String] = {
     var s = sealBytes(word)
     merges.foreach { m =>
@@ -424,10 +427,10 @@ object Bpe {
   }
 
   /** Bounded deterministic word-type sample: top `topK` types by
-    * (frequency desc, word asc) over [[TextDedup.tokens]] — a ≤ topK-row
+    * (frequency desc, word asc) over [[TextAnalysis.tokens]] — a ≤ topK-row
     * driver collect, the documented bounded-training-sample pattern. */
   def wordSample(docs: DataFrame, textCol: String, topK: Int): Seq[(String, Long)] =
-    docs.select(explode(TextDedup.tokens(col(textCol))).as("word"))
+    docs.select(explode(TextAnalysis.tokens(col(textCol))).as("word"))
       .where(!col("word").contains(O) && !col("word").contains(C))
       .groupBy("word").agg(count(lit(1)).as("freq"))
       .orderBy(col("freq").desc, col("word").asc)
@@ -465,24 +468,23 @@ object Bpe {
   }
 
   /** Fold a merge table over an already-sealed Column (codegen'd string
-    * replaces) and unseal to the symbol array — shared by the char- and
-    * byte-level encoders.
+    * replaces) and unseal to the symbol array — the CHAR-level encoder.
     *
     * SCALE LIMIT (by construction): the expression tree is `numMerges`
     * replace calls deep, so a production-size (≥32k-merge) table blows
     * whole-stage codegen's JVM method limits and Catalyst analysis long
-    * before data is touched — guarded below. The byte-level serving
-    * paths use the rank-sequential KERNEL ([[applySequential]] via
-    * `GraftFunctions.bpe_byte_symbols`) instead, whose cost is
-    * independent of the merge count; this fold remains the demo-size
-    * char-level encoder and the kernel's spec-level parity anchor. */
+    * before data is touched — guarded below. The byte-level encoders
+    * run the rank-sequential kernel ([[applyInts]] via
+    * `GraftFunctions.bpe_byte_symbols` / `bpe_text_ids`) instead, whose
+    * cost is independent of the merge count. The kernel does not serve
+    * the char alphabet: char symbols may contain the blob separators. */
   private def foldMerges(sealed0: org.apache.spark.sql.Column,
       merges: Seq[Merge]): org.apache.spark.sql.Column = {
     require(merges.size <= 512,
       s"foldMerges inlines one replace per merge into the plan; " +
         s"${merges.size} merges would exceed codegen/analysis limits — " +
-        "use the kernel path (encodeDocsBytesPretokKernel / " +
-        "GraftFunctions.bpe_byte_symbols) for production-size tables")
+        "the char-level encoders are demo-size; the byte-level encoders " +
+        "serve production-size tables through the kernel")
     val merged = merges.foldLeft(sealed0) { (cc, m) =>
       org.apache.spark.sql.functions.replace(cc,
         lit(O + m.left + C + O + m.right + C),
@@ -504,25 +506,25 @@ object Bpe {
     foldMerges(regexp_replace(w, "(?s)(.)", O + "$1" + C), merges)
   }
 
-  /** Byte-level Column encoder: `hex(encode(w, UTF-8))` is the
-    * UPPERCASE hex of the word's UTF-8 bytes — the engine twin of
-    * [[sealBytes]]; `(..)` brackets each byte's hex pair (the hex
-    * string's length is always even, and hex digits are ASCII, so none
-    * of the char alphabet's DOTALL/code-point subtleties apply). */
-  private def encodeWordBytesCol(w: org.apache.spark.sql.Column,
-      merges: Seq[Merge]): org.apache.spark.sql.Column =
-    foldMerges(
-      regexp_replace(hex(encode(w, "UTF-8")), "(..)", O + "$1" + C),
-      merges)
+  /** Column expression: the byte-BPE symbol ARRAY of one word under a
+    * [[mergeBlob]] literal — one kernel call ([[wordByteSymbolsBlob]]). */
+  private def byteSymbolsCol(merges: Seq[Merge])
+      : org.apache.spark.sql.Column => org.apache.spark.sql.Column = {
+    val b = lit(mergeBlob(merges))
+    w => graft.functions.GraftFunctions.bpe_byte_symbols(w, b)
+  }
+
+  /** Lowercased whitespace words minus marker-bracket carriers — the
+    * word stream of the char-level and whitespace-byte encoders. */
+  private def words(textCol: String): org.apache.spark.sql.Column =
+    filter(TextAnalysis.tokens(col(textCol)),
+      t => !t.contains(O) && !t.contains(C))
 
   /** Per-document BPE token count under `merges` — the countExpr that
     * feeds [[SequencePacking.packCounted]]/[[SequencePacking.shardByTokenBudget]]
     * with TRAINED-tokenizer counts instead of the whitespace proxy. */
-  def tokenCountCol(textCol: String, merges: Seq[Merge]): org.apache.spark.sql.Column = {
-    val toks = filter(TextDedup.tokens(col(textCol)),
-      t => !t.contains(O) && !t.contains(C))
-    size(flatten(transform(toks, w => encodeWordCol(w, merges))))
-  }
+  def tokenCountCol(textCol: String, merges: Seq[Merge]): org.apache.spark.sql.Column =
+    size(flatten(transform(words(textCol), w => encodeWordCol(w, merges))))
 
   /**
    * Apply a trained merge table to every document — map-side only.
@@ -531,15 +533,15 @@ object Bpe {
    */
   def encodeDocs(docs: DataFrame, textCol: String, idCol: String,
       merges: Seq[Merge]): DataFrame =
-    encodeDocsWith(docs, textCol, idCol, w => encodeWordCol(w, merges))
+    encodeDocsWith(docs, idCol, words(textCol),
+      w => encodeWordCol(w, merges))
 
-  /** [[encodeDocs]] over the byte alphabet — identical map-side shape
-    * (one projection, `numMerges` codegen'd replaces per word, no
-    * shuffle, no driver state at encode time). */
+  /** [[encodeDocs]] over the byte alphabet — same output columns, one
+    * kernel call per word at any table size. */
   def encodeDocsBytes(docs: DataFrame, textCol: String, idCol: String,
       merges: Seq[Merge]): DataFrame =
-    encodeDocsWith(docs, textCol, idCol,
-      w => encodeWordBytesCol(w, merges))
+    encodeDocsWith(docs, idCol, words(textCol),
+      byteSymbolsCol(merges))
 
   /** Per-document PRETOK-BYTE token count under `merges` — the
     * production tokenizer's counts for
@@ -547,30 +549,23 @@ object Bpe {
     * [[tokenCountCol]]). */
   def tokenCountColBytesPretok(textCol: String,
       merges: Seq[Merge]): org.apache.spark.sql.Column =
-    size(flatten(transform(pretokens(col(textCol)),
-      w => encodeWordBytesCol(w, merges))))
+    size(flatten(transform(pretokens(col(textCol)), byteSymbolsCol(merges))))
 
   /** [[encodeDocsBytes]] over GPT-2 pretokens — the words differ, the
-    * byte seal and the map-side merge fold are shared. */
+    * byte kernel is shared. */
   def encodeDocsBytesPretok(docs: DataFrame, textCol: String,
       idCol: String, merges: Seq[Merge]): DataFrame =
-    encodeDocsWith(docs, textCol, idCol,
-      w => encodeWordBytesCol(w, merges),
-      words = Some(pretokens(col(textCol))))
+    encodeDocsWith(docs, idCol, pretokens(col(textCol)),
+      byteSymbolsCol(merges))
 
-  private def encodeDocsWith(docs: DataFrame, textCol: String,
-      idCol: String,
-      enc: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-      words: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val toks = words.getOrElse(
-      filter(TextDedup.tokens(col(textCol)),
-        t => !t.contains(O) && !t.contains(C)))
-    val encs = flatten(transform(toks, enc))
-    docs.select(col(idCol).as("doc_id"), encs.as("__e"))
+  private def encodeDocsWith(docs: DataFrame, idCol: String,
+      toks: org.apache.spark.sql.Column,
+      enc: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
+      : DataFrame =
+    docs.select(col(idCol).as("doc_id"), flatten(transform(toks, enc)).as("__e"))
       .select(col("doc_id"),
         size(col("__e")).cast("long").as("n_bpe_tokens"),
         md5(array_join(col("__e"), " ")).as("tokens_md5"))
-  }
 
   /** Persist the trained merge table (train-once/serve-many — the
     * `writeNbModel`/`writeIvfPqIndex` pattern): a single tiny parquet
@@ -642,20 +637,27 @@ object Bpe {
 
   /** [[encodeDocsBytesPretok]] emitting TOKEN IDS instead of symbol
     * strings — the stream a training run actually consumes: pretokens
-    * → byte symbols under the merge fold → [[byteVocab]] ids via a
-    * broadcast-literal map (≤ 256 + numMerges entries, map-side, no
-    * shuffle). Output: doc_id, n_bpe_tokens, ids_md5 (md5 of the
-    * space-joined decimal ids in document order). */
+    * → byte symbols → [[byteVocab]] ids, all inside the text-level id
+    * kernel ([[encodeDocsIdsBlob]]). Output: doc_id, n_bpe_tokens,
+    * ids_md5 (md5 of the space-joined decimal ids in document order). */
   def encodeDocsBytesPretokIds(docs: DataFrame, textCol: String,
-      idCol: String, merges: Seq[Merge]): DataFrame = {
-    val symToId = byteVocab(merges).map { case (i, s) => (s, i) }.toMap
-    val syms = flatten(transform(pretokens(col(textCol)),
-      w => encodeWordBytesCol(w, merges)))
-    val ids = transform(syms,
-      s => element_at(typedlit(symToId), s).cast("string"))
-    docs.select(col(idCol).as("doc_id"),
-      size(ids).cast("long").as("n_bpe_tokens"),
-      md5(array_join(ids, " ")).as("ids_md5"))
+      idCol: String, merges: Seq[Merge]): DataFrame =
+    encodeDocsIdsBlob(docs, textCol, idCol, mergeBlob(merges))
+
+  /** The one token-id projection: every document's id stream from the
+    * text-level kernel ([[textIdsBlob]] via `bpe_text_ids`) under an id
+    * blob ([[mergeBlob]], [[mergeBlobWithIds]] or
+    * [[mergeBlobWithSpecials]]), as `doc_id`, the `carry` columns,
+    * `n_bpe_tokens` and `ids_md5` (md5 of the space-joined decimal ids
+    * in document order). */
+  private[graft] def encodeDocsIdsBlob(docs: DataFrame, textCol: String,
+      idCol: String, blob: String, carry: Seq[String] = Nil): DataFrame = {
+    val ids = graft.functions.GraftFunctions.bpe_text_ids(col(textCol), lit(blob))
+    docs.select((col(idCol).as("doc_id") +: carry.map(col)) :+ ids.as("__ids"): _*)
+      .select((col("doc_id") +: carry.map(col)) ++ Seq(
+        size(col("__ids")).cast("long").as("n_bpe_tokens"),
+        md5(array_join(transform(col("__ids"), i => i.cast("string")), " "))
+          .as("ids_md5")): _*)
   }
 
   /** [[writeMerges]] for the pretokenized byte trainer — same tiny
@@ -904,8 +906,8 @@ object Bpe {
 
   /**
    * Apply the merge table to one word's byte symbols — EXACTLY the
-   * sequential rank-order replace fold ([[encodeWordBytes]] /
-   * [[foldMerges]]), computed SPARSELY: repeatedly find the smallest
+   * sequential rank-order replace fold of [[encodeWordBytes]],
+   * computed SPARSELY: repeatedly find the smallest
    * rank GREATER than the last applied one whose pair is adjacent
    * somewhere in the word, apply that merge in one leftmost
    * non-overlapping pass, and continue.
@@ -923,7 +925,7 @@ object Bpe {
    * PRIMITIVE probes per word (packed-long keys over interned symbol
    * ints: no per-probe allocation), INDEPENDENT of the merge count.
    * This is the serving path that survives a production 50k-merge
-   * table; the fold is `numMerges` nested replaces and dies at
+   * table; a Column fold of `numMerges` nested replaces dies at
    * analysis time. The quadratic is in the INPUT length — the serving
    * entry points call [[applyIntsBounded]], which chunks overlong
    * pretokens at [[MaxPretokenBytes]] so per-document work stays
@@ -1114,8 +1116,9 @@ object Bpe {
    * Pretokenization happens IN the kernel (same Java regex the Column
    * path compiles to), so one StaticInvoke serves the whole document;
    * marker-bracket carriers are dropped exactly as [[pretokens]] does.
-   * Models without specials degrade to pretokenize + encode — the
-   * plain [[encodeDocsBytesPretokIdsKernel]] stream.
+   * Models without specials degrade to pretokenize + encode: the
+   * concatenated [[wordByteIdsBlob]] ids of the pretokens (pinned by
+   * `Gpt2ArtifactsSpec`).
    */
   def textIdsBlob(text: String, blobRef: AnyRef,
       blobStr: => String): Array[Long] = {
@@ -1174,65 +1177,12 @@ object Bpe {
     out.toArray
   }
 
-  /** [[encodeWordBytes]] through the kernel structures — the driver
-    * twin of the Column kernel (spec parity anchor at table sizes the
-    * replace fold cannot reach). */
+  /** [[encodeWordBytes]] through the kernel structures — the kernel's
+    * driver-side entry, which specs check word by word against
+    * [[encodeWordBytes]]. */
   def encodeWordBytesKernel(word: String, merges: Seq[Merge]): Array[String] =
     applySequential(byteSymbolArray(word),
       parseBlob(mergeBlob(merges)))
-
-  /** [[encodeDocsBytes]] served through the KERNEL — bit-identical
-    * output (same oracle), one codegen'd StaticInvoke per word instead
-    * of a numMerges-deep replace chain; still map-side only. */
-  def encodeDocsBytesKernel(docs: DataFrame, textCol: String,
-      idCol: String, merges: Seq[Merge]): DataFrame = {
-    val b = lit(mergeBlob(merges))
-    encodeDocsWith(docs, textCol, idCol,
-      w => graft.functions.GraftFunctions.bpe_byte_symbols(w, b))
-  }
-
-  /** [[encodeDocsBytesPretok]] served through the KERNEL —
-    * bit-identical output (same oracle); the PRODUCTION serving path:
-    * survives ≥32k-merge tables where the fold dies at plan analysis. */
-  def encodeDocsBytesPretokKernel(docs: DataFrame, textCol: String,
-      idCol: String, merges: Seq[Merge]): DataFrame = {
-    val b = lit(mergeBlob(merges))
-    encodeDocsWith(docs, textCol, idCol,
-      w => graft.functions.GraftFunctions.bpe_byte_symbols(w, b),
-      words = Some(pretokens(col(textCol))))
-  }
-
-  /** [[encodeDocsBytesPretokIds]] served through the ID KERNEL —
-    * bit-identical output (same oracle); ids come from the model's own
-    * vocab map instead of a plan-literal map lookup per token. */
-  def encodeDocsBytesPretokIdsKernel(docs: DataFrame, textCol: String,
-      idCol: String, merges: Seq[Merge]): DataFrame = {
-    val b = lit(mergeBlob(merges))
-    val ids = flatten(transform(pretokens(col(textCol)),
-      w => graft.functions.GraftFunctions.bpe_byte_ids(w, b)))
-    docs.select(col(idCol).as("doc_id"),
-      size(ids).cast("long").as("n_bpe_tokens"),
-      md5(array_join(transform(ids, i => i.cast("string")), " "))
-        .as("ids_md5"))
-  }
-
-  /** [[tokenCountColBytesPretok]] through the KERNEL — the production
-    * tokenizer's counts for `SequencePacking.packCounted` at any table
-    * size. */
-  def tokenCountColBytesPretokKernel(textCol: String,
-      merges: Seq[Merge]): org.apache.spark.sql.Column = {
-    val b = lit(mergeBlob(merges))
-    size(flatten(transform(pretokens(col(textCol)),
-      w => graft.functions.GraftFunctions.bpe_byte_symbols(w, b))))
-  }
-
-  /** [[encodeBytesPretokFromModel]] through the KERNEL — bit-identical
-    * to encoding with the freshly trained table (same oracle). */
-  def encodeBytesPretokFromModelKernel(spark: SparkSession,
-      docs: DataFrame, textCol: String, idCol: String,
-      path: String): DataFrame =
-    encodeDocsBytesPretokKernel(docs, textCol, idCol,
-      loadMerges(spark, path))
 
   // ------------------------------------------------ oracle SQL emission
 
@@ -1379,9 +1329,8 @@ v$k AS MATERIALIZED (SELECT word, freq, replace(sym, '$O' || lhs || '$C$O' || rh
     s"regexp_replace($e, '(.)', '$O\\1$C', 'g')"
 
   /** Byte-level seal of SQL expression `e`: `hex(encode(e))` is the
-    * UPPERCASE hex of the UTF-8 bytes (DuckDB twin of Spark's
-    * `hex(encode(…, 'UTF-8'))` — verified byte-identical), `(..)`
-    * brackets each byte's hex pair. */
+    * UPPERCASE hex of the UTF-8 bytes (the SQL twin of [[sealBytes]]),
+    * `(..)` brackets each byte's hex pair. */
   private def byteSealSql(e: String): String =
     s"regexp_replace(hex(encode($e)), '(..)', '$O\\1$C', 'g')"
 
@@ -1539,7 +1488,7 @@ SELECT d.doc_id, coalesce(a.n, 0) AS n_bpe_tokens,
 FROM documents d LEFT JOIN ia a ON d.doc_id = a.doc_id
 ORDER BY d.doc_id"""
 
-  /** Oracle for [[Gpt2Artifacts.encodeDocsIdsSpecials]] over a corpus
+  /** Oracle for [[Gpt2Artifacts.encodeDocsIds]] over a corpus
     * with PLANTED special markers: each document becomes
     * `[special if doc_id%3=0] ‖ text ‖ special ‖ text`; the oracle
     * replays training (shared CTEs), splits each planted text on the

@@ -1,6 +1,5 @@
 package graft.text
 
-import graft.dedup.TextDedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -22,7 +21,7 @@ object Chunking {
     require(chunkSize > 0 && overlap >= 0 && overlap < chunkSize,
       "need 0 <= overlap < chunkSize")
     val step = chunkSize - overlap
-    val toks = TextDedup.tokens(col(textCol))
+    val toks = TextAnalysis.tokens(col(textCol))
     val n = size(col("toks"))
     // nchunks = ceil(n / step) in integer math (identical across engines)
     docs.select(col(idCol).as("doc_id"), toks.as("toks"))

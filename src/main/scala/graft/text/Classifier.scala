@@ -1,6 +1,5 @@
 package graft.text
 
-import graft.dedup.TextDedup
 import graft.embeddings.EmbeddingOps
 import graft.operators.Sampling
 import org.apache.spark.sql.{Column, DataFrame}
@@ -82,7 +81,7 @@ object Classifier {
     * a persisted model reproduces in-memory scores bit-for-bit). */
   private def nbTrain(trainDocs: DataFrame): (DataFrame, DataFrame) = {
     val trainToks = trainDocs.select(col("label_true").as("label"),
-      explode(TextDedup.tokens(col("text"))).as("term"))
+      explode(TextAnalysis.tokens(col("text"))).as("term"))
     // model-sized (non-zero cells only) and feeds THREE consumers
     // (class totals, vocab size, term weights): materialized so the
     // corpus-sized token explode runs once, not once per consumer
@@ -111,7 +110,7 @@ object Classifier {
     // test tokens keep multiplicity: the model join below multiplies
     // n_t(d) in by emitting one row per token INSTANCE
     val testToks = testDocs.select(col("doc_id"),
-      explode(TextDedup.tokens(col("text"))).as("term"))
+      explode(TextAnalysis.tokens(col("text"))).as("term"))
     // the model pivoted per TERM (≤ |labels| cells each) so scoring
     // joins the corpus-sized token stream ONCE — s_match and len_v both
     // fall out of the same explode: the p == 0 row marks each token

@@ -50,7 +50,7 @@ object Dsir {
   /** Compositional Column-expression twin of the kernel (per-gram md5
     * lambda) — kept for the row-identity spec, not the hot path. */
   private[graft] def gramCellsExpr(c: Column, buckets: Int): Column = {
-    val toks = TextDedup.tokens(c)
+    val toks = TextAnalysis.tokens(c)
     val bigrams = when(size(toks) >= 2,
       transform(sequence(lit(0), size(toks) - 2),
         i => concat_ws(" ", slice(toks, i + 1, lit(2)))))

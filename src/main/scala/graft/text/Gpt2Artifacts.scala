@@ -29,7 +29,7 @@ import org.apache.spark.sql.DataFrame
  * markers are carried on [[Model.specials]] and served VERBATIM —
  * encode splits on them first (they never merge across, the HF
  * added-token semantics) and emits the file's id for each occurrence
- * ([[encodeDocsIdsSpecials]] / [[graft.text.Bpe.textIdsBlob]]).
+ * ([[encodeDocsIds]] / [[graft.text.Bpe.textIdsBlob]]).
  * `tokenizer.json` round-trips them through `added_tokens`; the GPT-2
  * two-file format declares no specials in-band (encoder.py hardcodes
  * them), so [[load]] takes the special STRINGS as a parameter and
@@ -294,21 +294,18 @@ object Gpt2Artifacts {
     Model(merges, ids.result(), specials)
   }
 
-  /** Serve token IDS under a LOADED model through the kernel — the
-    * file's own id assignment rides the blob's id-override section.
-    * Output schema matches [[Bpe.encodeDocsBytesPretokIds]] (same
-    * oracle when the model round-trips a trained table). */
+  /** Serve token IDS under a LOADED model through the text-level id
+    * kernel — the verbatim serving path for published tokenizers: the
+    * file's own id assignment rides the blob's id-override section, and
+    * the model's SPECIAL TOKENS split first and emit the file's ids
+    * ([[graft.text.Bpe.textIdsBlob]]). A model without specials serves
+    * the plain pretokenize + encode stream. Output schema matches
+    * [[Bpe.encodeDocsBytesPretokIds]] (same oracle when the model
+    * round-trips a trained table). */
   def encodeDocsIds(docs: DataFrame, textCol: String, idCol: String,
-      model: Model): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val b = lit(Bpe.mergeBlobWithIds(model.merges, model.symToId))
-    val ids = flatten(transform(Bpe.pretokens(col(textCol)),
-      w => graft.functions.GraftFunctions.bpe_byte_ids(w, b)))
-    docs.select(col(idCol).as("doc_id"),
-      size(ids).cast("long").as("n_bpe_tokens"),
-      md5(array_join(transform(ids, i => i.cast("string")), " "))
-        .as("ids_md5"))
-  }
+      model: Model): DataFrame =
+    Bpe.encodeDocsIdsBlob(docs, textCol, idCol,
+      Bpe.mergeBlobWithSpecials(model.merges, model.symToId, model.specials))
 
   /** Inverse of the id stream under a LOADED model — the decode every
     * serving stack needs for inspection/round-trips, honoring the
@@ -345,23 +342,5 @@ object Gpt2Artifacts {
     }
     flush()
     out.toString
-  }
-
-  /** [[encodeDocsIds]] honoring the model's SPECIAL TOKENS — the
-    * verbatim serving path for published tokenizers on real corpora:
-    * specials split first and emit the file's own ids
-    * ([[graft.text.Bpe.textIdsBlob]]); a model without specials
-    * produces the identical stream to [[encodeDocsIds]]. Same output
-    * schema (doc_id, n_bpe_tokens, ids_md5). */
-  def encodeDocsIdsSpecials(docs: DataFrame, textCol: String,
-      idCol: String, model: Model): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val b = lit(Bpe.mergeBlobWithSpecials(model.merges, model.symToId,
-      model.specials))
-    val ids = graft.functions.GraftFunctions.bpe_text_ids(col(textCol), b)
-    docs.select(col(idCol).as("doc_id"),
-      size(ids).cast("long").as("n_bpe_tokens"),
-      md5(array_join(transform(ids, i => i.cast("string")), " "))
-        .as("ids_md5"))
   }
 }

@@ -1,6 +1,5 @@
 package graft.text
 
-import graft.dedup.TextDedup
 import graft.operators.Materialized
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -30,7 +29,7 @@ object LanguageModel {
   /** Exploded (doc_id, w1, w2) bigram stream over whitespace tokens;
     * documents with fewer than 2 tokens contribute no rows. */
   def bigrams(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val toks = TextDedup.tokens(col(textCol))
+    val toks = TextAnalysis.tokens(col(textCol))
     docs.select(col(idCol).as("doc_id"), toks.as("toks"))
       .where(size(col("toks")) >= 2)
       .select(col("doc_id"), explode(
@@ -57,7 +56,7 @@ object LanguageModel {
     val model = pairCnt.join(
       pairCnt.groupBy("w1").agg(sum(col("c")).as("n")), "w1")
     val vocab = docs
-      .select(explode(TextDedup.tokens(col(textCol))).as("tok"))
+      .select(explode(TextAnalysis.tokens(col(textCol))).as("tok"))
       .agg(count_distinct(col("tok")).as("vsz"))
     val logp = log((col("c") + alpha) / (col("n") + lit(alpha) * col("vsz")))
     bg.join(model, Seq("w1", "w2"))
@@ -96,7 +95,7 @@ object LanguageModel {
    */
   def scoreDocsPerGroup(docs: DataFrame, textCol: String, idCol: String,
       groupCol: String, alpha: Double = 0.5): DataFrame = {
-    val toks = TextDedup.tokens(col(textCol))
+    val toks = TextAnalysis.tokens(col(textCol))
     val base = docs.select(col(idCol).as("doc_id"),
       col(groupCol).as("__g"), toks.as("toks"))
     // two consumers (pair counts + the scoring join): materialize once
@@ -150,7 +149,7 @@ object LanguageModel {
     val pairCnt = bigrams(target, textCol, idCol)
       .groupBy("w1", "w2").agg(count(lit(1)).as("c"))
     val vocab = target
-      .select(explode(TextDedup.tokens(col(textCol))).as("tok"))
+      .select(explode(TextAnalysis.tokens(col(textCol))).as("tok"))
       .agg(count_distinct(col("tok")).as("vsz"))
     scoreDocsFromRelations(docs, textCol, idCol, pairCnt, vocab, alpha)
   }
@@ -190,7 +189,7 @@ object LanguageModel {
   /** Exploded (doc_id, w1, w2, w3) trigram stream; documents with
     * fewer than 3 tokens contribute no rows. */
   def trigrams(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val toks = TextDedup.tokens(col(textCol))
+    val toks = TextAnalysis.tokens(col(textCol))
     docs.select(col(idCol).as("doc_id"), toks.as("toks"))
       .where(size(col("toks")) >= 3)
       .select(col("doc_id"), explode(
@@ -398,7 +397,7 @@ object LanguageModel {
     * than 5 tokens contribute no rows. */
   def fivegrams(docs: DataFrame, textCol: String,
       idCol: String): DataFrame = {
-    val toks = TextDedup.tokens(col(textCol))
+    val toks = TextAnalysis.tokens(col(textCol))
     docs.select(col(idCol).as("doc_id"), toks.as("toks"))
       .where(size(col("toks")) >= 5)
       .select(col("doc_id"), explode(

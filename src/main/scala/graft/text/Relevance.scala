@@ -33,7 +33,7 @@ object Relevance {
     * Output: doc_id, term, tf, df, tfidf (rounded to 6 dp). */
   def tfidf(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
     val toks = docs.select(col(idCol).as("doc_id"),
-      explode(TextDedup.tokens(col(textCol))).as("term"))
+      explode(TextAnalysis.tokens(col(textCol))).as("term"))
     val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n_docs"))
@@ -72,7 +72,7 @@ object Relevance {
   def writeBm25Index(docs: DataFrame, textCol: String, idCol: String,
       path: String, buckets: Int = 64): Unit = {
     require(buckets > 0, "bucket count must be positive")
-    val toksArr = TextDedup.tokens(col(textCol))
+    val toksArr = TextAnalysis.tokens(col(textCol))
     val base = docs.select(col(idCol).as("doc_id"), toksArr.as("toks"))
       .select(col("doc_id"), explode(col("toks")).as("term"),
         size(col("toks")).cast("long").as("dl"))
@@ -308,7 +308,7 @@ object Relevance {
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val qTerms = query.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct
     require(qTerms.nonEmpty, "query must contain at least one token")
-    val toksArr = TextDedup.tokens(col(textCol))
+    val toksArr = TextAnalysis.tokens(col(textCol))
     // postings are filtered to the query's terms BEFORE any aggregation —
     // the explode emits only query-term hits, so every downstream shuffle
     // is proportional to those postings, not the corpus vocabulary

@@ -1,6 +1,5 @@
 package graft.text
 
-import graft.dedup.TextDedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -169,7 +168,7 @@ object UnigramLm {
     * at encode time such words still segment via the fallback path. */
   def sampleWords(docs: DataFrame, textCol: String,
       topK: Int): Seq[(String, Long)] =
-    docs.select(explode(TextDedup.tokens(col(textCol))).as("word"))
+    docs.select(explode(TextAnalysis.tokens(col(textCol))).as("word"))
       .where(!col("word").contains(FieldSep.toString) &&
         !col("word").contains(EntrySep.toString) &&
         !col("word").contains(Sep.toString))
@@ -328,7 +327,7 @@ object UnigramLm {
   def encodeDocs(docs: DataFrame, textCol: String, idCol: String,
       model: Seq[Entry], maxPieceLen: Int = MaxPieceLen): DataFrame = {
     val b = lit(blob(model))
-    val pieces = flatten(transform(TextDedup.tokens(col(textCol)),
+    val pieces = flatten(transform(TextAnalysis.tokens(col(textCol)),
       w => graft.functions.GraftFunctions.unigram_word_pieces(w, b, maxPieceLen)))
     docs.select(col(idCol).as("doc_id"), pieces.as("__p"))
       .select(col("doc_id"),

@@ -10,12 +10,14 @@ import org.apache.spark.sql.functions._
  *  1. the INCREMENTAL trainer (`trainSealed`, heap + per-word diffs)
  *     produces the bit-identical merge sequence to the reference
  *     recount-everything loop the DuckDB oracles replay;
- *  2. the rank-SEQUENTIAL serving kernel (`applySequential` via
- *     `bpe_byte_symbols`) is bit-identical to the replace fold and the
- *     driver fold on every testdata document;
- *  3. both survive a ≥32k-merge TRAINED table — the size at which the
- *     numMerges-deep replace fold dies at plan analysis (and is now
- *     guarded against).
+ *  2. the rank-SEQUENTIAL kernel — the only byte-level encoder, per word
+ *     (`bpe_byte_symbols`) and per document (`bpe_text_ids`) — is
+ *     bit-identical on every testdata document to the replace fold
+ *     `Bpe.encodeWordBytes`, the driver reference that applies each
+ *     merge in rank order with `String.replace` (ids via `byteVocab`);
+ *  3. both survive a ≥32k-merge TRAINED table, and the byte encoders
+ *     take tables past the 512 merges at which the char-level Column
+ *     fold is guarded.
  */
 class BpeKernelSpec extends SparkSpec {
 
@@ -97,17 +99,64 @@ class BpeKernelSpec extends SparkSpec {
 
   // -------------------------------------------------- kernel parity
 
+  private val pretokPattern = java.util.regex.Pattern.compile(Bpe.Gpt2Pretok)
+
+  /** Driver pretokens: the GPT-2 regex, marker-bracket carriers dropped. */
+  private def driverPretokens(text: String): Seq[String] = {
+    val m = pretokPattern.matcher(text)
+    Iterator.continually(m.find()).takeWhile(identity).map(_ => m.group())
+      .filter(w => !w.contains(Bpe.Open) && !w.contains(Bpe.Close)).toSeq
+  }
+
+  /** Driver whitespace words: lowercased, split on whitespace runs. */
+  private def driverWords(text: String): Seq[String] =
+    text.toLowerCase(java.util.Locale.ROOT).split("\\s+")
+      .filter(w => w.nonEmpty && !w.contains(Bpe.Open) &&
+        !w.contains(Bpe.Close)).toSeq
+
+  private def md5Hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString
+
+  /** Every testdata document's engine `(n, md5)` row equals the driver
+    * reference's token count and space-joined digest. */
+  private def assertDriverRows(engine: org.apache.spark.sql.DataFrame,
+      reference: String => Seq[Any]): Unit = {
+    val got = engine.collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
+    val texts = docs.select("doc_id", "text").collect()
+    assert(texts.nonEmpty && got.size == texts.length)
+    texts.foreach { r =>
+      val toks = reference(r.getString(1))
+      assert(got(r.getLong(0)) == ((toks.length.toLong,
+        md5Hex(toks.mkString(" ")))), s"doc ${r.getLong(0)}")
+    }
+  }
+
+  private def driverPretokSyms(merges: Seq[Merge])(text: String): Seq[String] =
+    driverPretokens(text).flatMap(w => Bpe.encodeWordBytes(w, merges))
+
+  private def driverPretokIds(merges: Seq[Merge]): String => Seq[Long] = {
+    val symToId = Bpe.byteVocab(merges).map(_.swap).toMap
+    text => driverPretokSyms(merges)(text).map(symToId)
+  }
+
+  private def assertDriverCounts(merges: Seq[Merge]): Unit = {
+    val got = docs.select(col("doc_id"), col("text"),
+      Bpe.tokenCountColBytesPretok("text", merges)).collect()
+    assert(got.nonEmpty)
+    got.foreach { r =>
+      assert(r.getInt(2) == driverPretokSyms(merges)(r.getString(1)).length,
+        s"doc ${r.getLong(0)}")
+    }
+  }
+
   test("kernel ≡ replace fold ≡ driver fold on every testdata document (pretok path)") {
     val merges = Bpe.trainBytes(Bpe.pretokenSample(docs, "text", 256), 24)
-    val viaFold = Bpe.encodeDocsBytesPretok(docs, "text", "doc_id", merges)
-      .orderBy("doc_id").collect()
-    val viaKernel = Bpe.encodeDocsBytesPretokKernel(docs, "text", "doc_id",
-      merges).orderBy("doc_id").collect()
-    assert(viaFold.length == viaKernel.length && viaFold.length > 0)
-    viaFold.zip(viaKernel).foreach { case (f, k) =>
-      assert(f == k, s"doc ${f.get(0)}: fold=$f kernel=$k")
-    }
-    // driver twin on the distinct pretokens of the corpus
+    assertDriverRows(Bpe.encodeDocsBytesPretok(docs, "text", "doc_id", merges),
+      driverPretokSyms(merges))
+    // driver kernel entry on the distinct pretokens of the corpus
     val words = docs.select(explode(Bpe.pretokens(col("text"))).as("w"))
       .distinct().collect().map(_.getString(0))
     assert(words.length > 10)
@@ -119,29 +168,35 @@ class BpeKernelSpec extends SparkSpec {
 
   test("kernel ≡ replace fold on the whitespace-word byte path") {
     val merges = Bpe.trainBytes(Bpe.wordSample(docs, "text", 256), 24)
-    val viaFold = Bpe.encodeDocsBytes(docs, "text", "doc_id", merges)
-      .orderBy("doc_id").collect()
-    val viaKernel = Bpe.encodeDocsBytesKernel(docs, "text", "doc_id",
-      merges).orderBy("doc_id").collect()
-    viaFold.zip(viaKernel).foreach { case (f, k) => assert(f == k) }
+    assertDriverRows(Bpe.encodeDocsBytes(docs, "text", "doc_id", merges),
+      t => driverWords(t).flatMap(w => Bpe.encodeWordBytes(w, merges)))
   }
 
   test("id kernel ≡ literal-map id path on every testdata document") {
+    // the literal map: byteVocab's symbol → id over the driver fold
     val merges = Bpe.trainBytes(Bpe.pretokenSample(docs, "text", 256), 24)
-    val viaMap = Bpe.encodeDocsBytesPretokIds(docs, "text", "doc_id",
-      merges).orderBy("doc_id").collect()
-    val viaKernel = Bpe.encodeDocsBytesPretokIdsKernel(docs, "text",
-      "doc_id", merges).orderBy("doc_id").collect()
-    viaMap.zip(viaKernel).foreach { case (m, k) => assert(m == k) }
+    assertDriverRows(
+      Bpe.encodeDocsBytesPretokIds(docs, "text", "doc_id", merges),
+      driverPretokIds(merges))
   }
 
   test("kernel count column ≡ fold count column") {
-    val merges = Bpe.trainBytes(Bpe.pretokenSample(docs, "text", 256), 24)
-    val both = docs.select(
-      Bpe.tokenCountColBytesPretok("text", merges).as("a"),
-      Bpe.tokenCountColBytesPretokKernel("text", merges).as("b"))
-      .collect()
-    both.foreach(r => assert(r.getInt(0) == r.getInt(1)))
+    assertDriverCounts(
+      Bpe.trainBytes(Bpe.pretokenSample(docs, "text", 256), 24))
+  }
+
+  test("byte encoders take a 513+-merge table and match the driver reference") {
+    // past the char fold's 512-merge guard: testdata pretokens (real
+    // frequencies, so their merges rank first) plus the synthetic words
+    val merges = Bpe.trainBytes(
+      Bpe.pretokenSample(docs, "text", 256) ++ bigSample.take(1500), 600)
+    assert(merges.size > 512)
+    assertDriverRows(Bpe.encodeDocsBytesPretok(docs, "text", "doc_id", merges),
+      driverPretokSyms(merges))
+    assertDriverRows(
+      Bpe.encodeDocsBytesPretokIds(docs, "text", "doc_id", merges),
+      driverPretokIds(merges))
+    assertDriverCounts(merges)
   }
 
   test("kernel is exactly sequential on adversarial tables (re-created pair, duplicate pair ranks)") {
@@ -190,18 +245,18 @@ class BpeKernelSpec extends SparkSpec {
     }
 
     // the COLUMN kernel path analyzes and executes at 32k merges —
-    // the exact size where the replace fold dies (guard below)
+    // a size at which a Column replace fold dies at plan analysis
     import spark.implicits._
     val df = bigSample.take(64).map(_._1).toDF("text")
       .withColumn("doc_id", monotonically_increasing_id())
-    val viaPlan = Bpe.encodeDocsBytesPretokKernel(df, "text", "doc_id",
+    val viaPlan = Bpe.encodeDocsBytesPretok(df, "text", "doc_id",
       merges).orderBy("doc_id").collect()
     val blob = Bpe.mergeBlob(merges)
     assert(blob.length < 2 * 1024 * 1024, "blob should stay sub-MB-ish")
     assert(viaPlan.length == 64 && viaPlan.forall(_.getLong(1) > 0))
 
     // ids are total at production size too
-    val viaIds = Bpe.encodeDocsBytesPretokIdsKernel(df, "text", "doc_id",
+    val viaIds = Bpe.encodeDocsBytesPretokIds(df, "text", "doc_id",
       merges).orderBy("doc_id").collect()
     assert(viaIds.length == 64 && viaIds.forall(_.getLong(1) > 0))
 
@@ -233,11 +288,15 @@ class BpeKernelSpec extends SparkSpec {
   }
 
   test("the replace fold refuses production-size tables with a named limit") {
-    val merges = (0 until 513).map(i => Merge(i, f"$i%02X", "00", 1L))
+    // the char-level Column encoders inline one replace per merge
+    val merges = (0 until 513).map(i => Merge(i, s"x$i", "y", 1L))
     val e = intercept[IllegalArgumentException] {
-      Bpe.encodeDocsBytesPretok(docs, "text", "doc_id", merges).collect()
+      Bpe.encodeDocs(docs, "text", "doc_id", merges).collect()
     }
-    assert(e.getMessage.contains("kernel"))
+    assert(e.getMessage.contains("513 merges would exceed"))
+    intercept[IllegalArgumentException] {
+      docs.select(Bpe.tokenCountCol("text", merges)).collect()
+    }
   }
 
   test("decodeIds inverts the id stream: ids → text, byte-exact; unknown ids refuse") {

@@ -68,7 +68,7 @@ class BpeSpec extends SparkSpec {
     val enc = Bpe.encodeDocs(docs, "text", "doc_id", merges)
       .agg(sum("n_bpe_tokens")).collect()(0).getLong(0)
     val bounds = docs.select(
-      sum(size(graft.dedup.TextDedup.tokens(col("text")))).cast("long"),
+      sum(size(graft.text.TextAnalysis.tokens(col("text")))).cast("long"),
       sum(length(regexp_replace(col("text"), "\\s+", ""))).cast("long"))
       .collect()(0)
     val (nWords, nChars) = (bounds.getLong(0), bounds.getLong(1))

@@ -78,7 +78,7 @@ class CorpusPipelineSpec extends SparkSpec {
       (103L, ""))                 // invisible to the model gates
     val df = docs.toDF("doc_id", "text")
     val label = array_contains(
-      graft.dedup.TextDedup.tokens(col("text")), "spark")
+      graft.text.TextAnalysis.tokens(col("text")), "spark")
     val w = graft.text.LogisticRegression.trainWeights(
       df, "text", "doc_id", label)
     val out = CorpusPipeline.qualityStack(df, "text", "doc_id", label, w)
@@ -119,7 +119,7 @@ class CorpusPipelineSpec extends SparkSpec {
     }
     val df = docs.toDF("doc_id", "text", "lang", "source")
     val label = array_contains(
-      graft.dedup.TextDedup.tokens(col("text")), "spark")
+      graft.text.TextAnalysis.tokens(col("text")), "spark")
     val w = graft.text.LogisticRegression.trainWeights(
       df, "text", "doc_id", label)
     val stack = CorpusPipeline.qualityStack(df, "text", "doc_id", label, w)
@@ -174,7 +174,7 @@ class CorpusPipelineSpec extends SparkSpec {
       (100L until 112L).map(i => (i, minXx, "xx"))).toDF(
       "doc_id", "text", "lang")
     val label = array_contains(
-      graft.dedup.TextDedup.tokens(col("text")), "spark")
+      graft.text.TextAnalysis.tokens(col("text")), "spark")
     val lrW = graft.text.LogisticRegression.trainWeights(
       docs, "text", "doc_id", label)
     val smW = graft.text.LogisticRegression.trainSoftmaxWeights(

@@ -82,7 +82,7 @@ class Gpt2ArtifactsSpec extends SparkSpec {
     val dir = tmp("serve")
     Gpt2Artifacts.export(merges, dir)
     val loaded = Gpt2Artifacts.load(dir)
-    val direct = Bpe.encodeDocsBytesPretokIdsKernel(docs, "text",
+    val direct = Bpe.encodeDocsBytesPretokIds(docs, "text",
       "doc_id", merges).orderBy("doc_id").collect()
     val viaFiles = Gpt2Artifacts.encodeDocsIds(docs, "text", "doc_id",
       loaded).orderBy("doc_id").collect()
@@ -115,7 +115,7 @@ class Gpt2ArtifactsSpec extends SparkSpec {
     // digests ≠ the byteVocab path
     val viaFiles = Gpt2Artifacts.encodeDocsIds(docs, "text", "doc_id",
       loaded).orderBy("doc_id").collect()
-    val direct = Bpe.encodeDocsBytesPretokIdsKernel(docs, "text",
+    val direct = Bpe.encodeDocsBytesPretokIds(docs, "text",
       "doc_id", merges).orderBy("doc_id").collect()
     viaFiles.zip(direct).foreach { case (f, d) =>
       assert(f.getLong(1) == d.getLong(1)) // same token counts
@@ -133,7 +133,7 @@ class Gpt2ArtifactsSpec extends SparkSpec {
     assert(m.merges.map(x => (x.rank, x.left, x.right)) ==
       merges.map(x => (x.rank, x.left, x.right)))
     assert(m.symToId == Bpe.byteVocab(merges).map(_.swap).toMap)
-    val direct = Bpe.encodeDocsBytesPretokIdsKernel(docs, "text",
+    val direct = Bpe.encodeDocsBytesPretokIds(docs, "text",
       "doc_id", merges).orderBy("doc_id").collect()
     val viaJson = Gpt2Artifacts.encodeDocsIds(docs, "text", "doc_id", m)
       .orderBy("doc_id").collect()
@@ -205,13 +205,33 @@ class Gpt2ArtifactsSpec extends SparkSpec {
       // emitted verbatim — byte-exact round trip
       assert(Gpt2Artifacts.decodeIds(ids, m) == t, s"decode of '$t'")
     }
-    // a model WITHOUT specials degrades to the plain pretok-id stream
-    val plain = Gpt2Artifacts.Model(m.merges, m.symToId)
-    val a = Gpt2Artifacts.encodeDocsIdsSpecials(docs, "text", "doc_id", plain)
-      .orderBy("doc_id").collect()
-    val b = Gpt2Artifacts.encodeDocsIds(docs, "text", "doc_id", plain)
-      .orderBy("doc_id").collect()
-    a.zip(b).foreach { case (x, y) => assert(x == y) }
+    // encodeDocsIds serves every row of a frame the same way: (count,
+    // md5 of the space-joined ids) of the expectation
+    def assertServed(frame: org.apache.spark.sql.DataFrame,
+        model: Gpt2Artifacts.Model): Unit = {
+      val served = Gpt2Artifacts.encodeDocsIds(frame, "text", "doc_id", model)
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getString(2)))
+        .toMap
+      val texts = frame.select("doc_id", "text").collect()
+      assert(texts.nonEmpty && served.size == texts.length)
+      texts.foreach { r =>
+        val ids = expected(r.getString(1))
+        val hex = java.security.MessageDigest.getInstance("MD5")
+          .digest(ids.mkString(" ")
+            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          .map("%02x".format(_)).mkString
+        assert(served(r.getLong(0)) == ((ids.length.toLong, hex)),
+          s"doc ${r.getLong(0)}")
+      }
+    }
+    // the loaded model's specials split first in the frame path too
+    val s = spark
+    import s.implicits._
+    assertServed(cases.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text"), m)
+    // a model WITHOUT specials degrades to the plain pretok-id stream:
+    // each whole document is one segment of the expectation
+    assertServed(docs, Gpt2Artifacts.Model(m.merges, m.symToId))
   }
 
   test("special tokens: longest match wins at the same position") {

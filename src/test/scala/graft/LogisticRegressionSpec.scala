@@ -27,7 +27,7 @@ class LogisticRegressionSpec extends SparkSpec {
       .parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
     val label = array_contains(
-      graft.dedup.TextDedup.tokens(col("text")), "spark")
+      graft.text.TextAnalysis.tokens(col("text")), "spark")
     val weights = LogisticRegression.trainWeights(docs, "text", "doc_id",
       label)
     val report = LogisticRegression.calibrationReport(docs, "text",

@@ -14,7 +14,7 @@ class StreamingQualityStackSpec extends SparkSpec {
   import spark.implicits._
 
   private def lrLabel =
-    array_contains(graft.dedup.TextDedup.tokens(col("text")), "spark")
+    array_contains(graft.text.TextAnalysis.tokens(col("text")), "spark")
 
   private lazy val docs = spark.read
     .parquet("/root/testdata/sf0.001/documents.parquet")

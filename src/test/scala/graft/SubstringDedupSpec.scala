@@ -51,12 +51,12 @@ class SubstringDedupSpec extends SparkSpec {
   }
 
   test("kernel windows match the compositional slice+concat formulation on real docs") {
-    import graft.dedup.TextDedup
+    import graft.text.TextAnalysis
     val docs = Demo.table(spark, sf("sf0.001"), "documents")
     val k = docs.select(col("doc_id"), posexplode(
       graft.functions.GraftFunctions.token_windows(col("text"), 20, 1))
       .as(Seq("pos", "win")))
-    val toks = TextDedup.tokens(col("text"))
+    val toks = TextAnalysis.tokens(col("text"))
     val e = docs.select(col("doc_id"), toks.as("toks"))
       .filter(size(col("toks")) >= 20)
       .select(col("doc_id"), explode(

@@ -104,12 +104,12 @@ class TextPropertySpec extends SparkSpec {
 
   test("token_windows kernel matches slice+concat on adversarial text") {
     import spark.implicits._
-    import graft.dedup.TextDedup
+    import graft.text.TextAnalysis
     forAll(docGen, n = 40) { s =>
       val df = Seq(s).toDF("text")
       val k = df.select(graft.functions.GraftFunctions
         .token_windows(col("text"), 3, 1)).collect().head.getSeq[String](0)
-      val toks = TextDedup.tokens(col("text"))
+      val toks = TextAnalysis.tokens(col("text"))
       val e = df.select(when(size(toks) >= 3,
         transform(sequence(lit(0), size(toks) - 3),
           i => concat_ws(" ", slice(toks, i + 1, lit(3)))))

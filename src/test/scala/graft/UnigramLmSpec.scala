@@ -124,7 +124,7 @@ class UnigramLmSpec extends SparkSpec {
     val score = model.map(e => e.piece -> e.scoreU).toMap
     val b = lit(UnigramLm.blob(model))
     val kernelRows = docs
-      .select(explode(graft.dedup.TextDedup.tokens(col("text"))).as("w"))
+      .select(explode(graft.text.TextAnalysis.tokens(col("text"))).as("w"))
       .distinct()
       .select(col("w"),
         graft.functions.GraftFunctions.unigram_word_pieces(col("w"), b, 8).as("p"))

@@ -6,6 +6,8 @@ Usage: python3 tools/compare_oracle.py <sfDir> <verifyOutDir>
 Reads oracle_sql.json, registers each parquet table from sfDir as a DuckDB
 view, runs each oracle, and compares to the Spark-dumped parquet:
 columns sorted by name, rows sorted, values compared (exact; NaN==NaN).
+Prints how many oracles it checked; an empty oracle_sql.json is a failure,
+not a vacuous pass.
 """
 import sys, json, glob, os
 import duckdb
@@ -18,6 +20,9 @@ for f in glob.glob(os.path.join(sf_dir, '*.parquet')):
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{f}'")
 
 oracles = json.load(open(os.path.join(out_dir, 'oracle_sql.json')))
+if not oracles:
+    print(f"FAIL: no oracles to check in {os.path.join(out_dir, 'oracle_sql.json')}")
+    sys.exit(1)
 fail = 0
 for name, sql in sorted(oracles.items()):
     spark_path = os.path.join(out_dir, name)
@@ -56,5 +61,6 @@ for name, sql in sorted(oracles.items()):
         print(f"FAIL {name}: value mismatches: {bad[:3]}"); fail += 1
     else:
         print(f"PASS {name} ({len(s)} rows, {len(s.columns)} cols)")
+print(f"checked {len(oracles)} oracles")
 print("ALL PASS" if fail == 0 else f"{fail} FAILURES")
 sys.exit(1 if fail else 0)
