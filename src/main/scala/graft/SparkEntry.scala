@@ -62,12 +62,7 @@ object SparkEntry {
     * packing counts and content together under one oracle. */
   private def releaseCounted(s: SparkSession, dir: String): DataFrame =
     cachedFrame(s, dir, "release_counted") {
-      val docs = Demo.table(s, dir, "documents")
-      val corpus = docs.select("doc_id", "lang", "text").unionByName(
-        docs.filter(col("doc_id") % 5 === 0)
-          .select((col("doc_id") + 10000).as("doc_id"), col("lang"),
-            col("text")))
-      val quality = corpus.filter(
+      val quality = releaseCorpus(s, dir).filter(
         graft.text.TextAnalysis.tokenCount(col("text")) >= 10)
       val sampled = graft.operators.Sampling.byWeight(
         graft.dedup.TextDedup.softDedupWeights(quality, "text", "doc_id"),
@@ -78,6 +73,16 @@ object SparkEntry {
         carry = Seq("lang", "n_copies", "weight"))
         .withColumnRenamed("n_bpe_tokens", "n_tokens")
     }
+
+  /** The release mart's planted-duplicate corpus: `documents`
+    * (doc_id, lang, text) plus a copy of every 5th document re-keyed
+    * +10000, so soft dedup sees sub-1.0 weights (testdata texts are
+    * all-distinct). */
+  private def releaseCorpus(s: SparkSession, dir: String): DataFrame = {
+    val docs = Demo.table(s, dir, "documents").select("doc_id", "lang", "text")
+    docs.unionByName(docs.filter(col("doc_id") % 5 === 0)
+      .withColumn("doc_id", col("doc_id") + 10000))
+  }
 
   /** The release mart's byte-BPE id blob: 24 merges trained on the
     * pretokens of `documents`, once per (session, dir). */
@@ -2446,16 +2451,11 @@ FROM c"""),
     // sub-1.0 weights)
     // Soak: weighted sampling over soft-dedup weights: the digest-agg shape
     // plus a map-side hash filter — must inherit dedup_soft_weights' α
-    query("dedup_soft_sample", Soak)((s, dir) => {
-      val base = Demo.table(s, dir, "documents").select("doc_id", "text")
-      val corpus = base.unionByName(
-        base.filter(col("doc_id") % 5 === 0)
-          .select((col("doc_id") + 10000).as("doc_id"), col("text")))
-      graft.operators.Sampling.byWeight(
-        TextDedup.softDedupWeights(corpus, "text", "doc_id"),
+    query("dedup_soft_sample", Soak)((s, dir) =>
+      graft.operators.Sampling.byWeight(TextDedup.softDedupWeights(
+        releaseCorpus(s, dir).select("doc_id", "text"), "text", "doc_id"),
         "doc_id", "weight")
-        .orderBy("doc_id")
-    })
+        .orderBy("doc_id"))
       .oracle(DedupOracles.softSample),
     // Exact dedup on the CANONICALIZED key — normalize_text composed
     // into the digest, so case/whitespace/NFC variants collapse into
@@ -3148,13 +3148,8 @@ FROM bkt"""),
     // token grain, doc_id-joined to fragments, digested per sequence —
     // the loader's real materialization cost, linear in corpus tokens
     query("corpus_release_sequences", Soak)((s, dir) => {
-      val docs = Demo.table(s, dir, "documents")
       val counted = releaseCounted(s, dir)
-      val corpus = docs.select("doc_id", "lang", "text").unionByName(
-        docs.filter(col("doc_id") % 5 === 0)
-          .select((col("doc_id") + 10000).as("doc_id"), col("lang"),
-            col("text")))
-      val ids = counted.select("doc_id").join(corpus, "doc_id")
+      val ids = counted.select("doc_id").join(releaseCorpus(s, dir), "doc_id")
         .select(col("doc_id"),
           posexplode(graft.functions.GraftFunctions.bpe_text_ids(
             col("text"), lit(releaseBlob(s, dir)))))

@@ -42,15 +42,91 @@ object EmbeddingOps {
 
   private def asDouble(c: Column): Column = c.cast("array<double>")
 
-  /** Vectors with id, double-cast embedding and precomputed norm,
-    * materialized once for the multiple plan consumers (the norm fold
-    * feeds every scoring join). Materialized, not persisted — the
-    * operators return lazy frames with no unpersist point, see
-    * [[graft.operators.Materialized]]. */
-  private[embeddings] def prepared(df: DataFrame, vecCol: String, idCol: String): DataFrame =
+  /** Vectors with id, double-cast embedding, any `carry` columns and
+    * the precomputed norm — (vec_id, v, carry…, nrm) — materialized once
+    * for the multiple plan consumers (the norm fold feeds every scoring
+    * join). Materialized, not persisted — the operators return lazy
+    * frames with no unpersist point, see [[graft.operators.Materialized]]. */
+  private[embeddings] def prepared(df: DataFrame, vecCol: String, idCol: String,
+      carry: Column*): DataFrame =
     graft.operators.Materialized(
-      df.select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v"))
+      df.select(Seq(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v")) ++
+          carry: _*)
         .withColumn("nrm", norm(col("v"))))
+
+  /** The candidate score of every search in this package: the cosine of
+    * two double-array columns from their precomputed norms, rounded to 4
+    * dp at the output boundary. Each payload brings its own norm (float
+    * `nrm`, the SQ8 code norm, the guarded PQ reconstruction norm). */
+  private[embeddings] def roundedCosine(a: Column, an: Column, b: Column,
+      bn: Column): Column =
+    round(dot(a, b) / (an * bn), 4)
+
+  /** A [[prepared]] frame as the query side of a top-k:
+    * (query_id, qv, carry…, qn). */
+  private[embeddings] def querySide(p: DataFrame): DataFrame =
+    p.withColumnsRenamed(Map("vec_id" -> "query_id", "v" -> "qv", "nrm" -> "qn"))
+
+  /** A [[prepared]] frame as the candidate side of a top-k:
+    * (neighbor_id, cv, carry…, cn). */
+  private[embeddings] def candidateSide(p: DataFrame): DataFrame =
+    p.withColumnsRenamed(Map("vec_id" -> "neighbor_id", "v" -> "cv", "nrm" -> "cn"))
+
+  /** The query probe projection of every IVF search: one
+    * (query_id, qv, carry…, qn, cluster) row per probed cell — each
+    * query's `nprobe` nearest centroids. */
+  private[embeddings] def probes(p: DataFrame,
+      cents: Array[(Long, Array[Double], Double)], nprobe: Int): DataFrame =
+    querySide(p).withColumn("cluster",
+      explode(ivfProbes(col("qv"), cents, nprobe)))
+
+  /** The rank of every top-k in this package: drop self pairs, score
+    * (qv, qn) against (cv, cn) by [[roundedCosine]] into `score`, and keep
+    * each query's top k by (score desc, neighbor_id asc), numbered in
+    * `rank`. Output: the `keep` columns, `score`, `rank`. */
+  private[embeddings] def topK(pairs: DataFrame, score: String, k: Int,
+      keep: Seq[String] = Seq("query_id", "neighbor_id")): DataFrame =
+    graft.operators.Relational.topKPerGroup(
+      pairs.filter(col("query_id") =!= col("neighbor_id"))
+        .select(keep.map(col) :+ roundedCosine(col("qv"), col("qn"),
+          col("cv"), col("cn")).as(score): _*),
+      Seq("query_id"), Seq(desc(score), asc("neighbor_id")), k)
+
+  /** IVF top-k over a candidate payload of index rows
+    * (cluster, neighbor_id, cv, cn) — the one step that differs between
+    * the float, SQ8 and PQ indexes: queries probe their `nprobe` cells
+    * and only candidates inside probed cells are scored. An in-memory
+    * top-k passes rows built from the corpus, a from-index top-k rows
+    * read back from parquet (the probe join then prunes the scan to the
+    * probed cluster directories). */
+  private[embeddings] def serveCells(queries: DataFrame, payload: DataFrame,
+      vecCol: String, idCol: String,
+      cents: Array[(Long, Array[Double], Double)], nprobe: Int,
+      score: String, k: Int): DataFrame =
+    topK(probes(prepared(queries, vecCol, idCol), cents, nprobe)
+      .join(payload, "cluster"), score, k)
+
+  /** Recall@k of each named approximate top-k against the exact float
+    * top-k ([[bruteForceTopK]]): ONE row (k, n_queries, name…). Integer
+    * hit counts and ONE double division at the end — a running double
+    * avg would be partition-order-dependent (same discipline as the
+    * decimal-summed TF-IDF/BM25 scores). */
+  private[embeddings] def recallVsExact(queries: DataFrame, corpus: DataFrame,
+      vecCol: String, idCol: String, k: Int,
+      approx: (String, DataFrame)*): DataFrame = {
+    val exact = bruteForceTopK(queries, corpus, vecCol, idCol, k)
+      .select("query_id", "neighbor_id")
+    val hits = approx.map { case (name, a) =>
+      exact.join(a.select("query_id", "neighbor_id"),
+        Seq("query_id", "neighbor_id")).agg(count(lit(1)).as(s"hits_$name"))
+    }
+    hits.foldLeft(exact.agg(countDistinct(col("query_id")).as("n_queries")))(
+        _ crossJoin _)
+      .select(lit(k).as("k") +: col("n_queries") +: approx.map { case (name, _) =>
+        round(col(s"hits_$name").cast("double") / (col("n_queries") * k), 4)
+          .as(name)
+      }: _*)
+  }
 
   /**
    * All vector pairs with cosine ≥ threshold (embedding near-duplicate
@@ -72,8 +148,8 @@ object EmbeddingOps {
     val a = p.select(col("vec_id").as("id_a"), col("v").as("va"), col("nrm").as("na"))
     val b = p.select(col("vec_id").as("id_b"), col("v").as("vb"), col("nrm").as("nb"))
     a.join(b, col("id_a") < col("id_b"))
-      .withColumn("cosine", round(dot(col("va"), col("vb")) /
-        (col("na") * col("nb")), 4))
+      .withColumn("cosine",
+        roundedCosine(col("va"), col("na"), col("vb"), col("nb")))
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")
   }
@@ -85,18 +161,9 @@ object EmbeddingOps {
    * for corpus×corpus at scale, go through LSH/IVF candidates instead.
    */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame,
-      vecCol: String, idCol: String, k: Int): DataFrame = {
-    val q = prepared(queries, vecCol, idCol)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val c = prepared(corpus, vecCol, idCol)
-      .select(col("vec_id").as("neighbor_id"), col("v").as("cv"), col("nrm").as("cn"))
-    val scored = q.join(c, col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", round(dot(col("qv"), col("cv")) /
-        (col("qn") * col("cn")), 4))
-    graft.operators.Relational.topKPerGroup(
-      scored.select("query_id", "neighbor_id", "cosine"),
-      Seq("query_id"), Seq(desc("cosine"), asc("neighbor_id")), k)
-  }
+      vecCol: String, idCol: String, k: Int): DataFrame =
+    topK(querySide(prepared(queries, vecCol, idCol))
+      .crossJoin(candidateSide(prepared(corpus, vecCol, idCol))), "cosine", k)
 
   /**
    * Deterministic random-hyperplane matrix for one hash table:
@@ -328,21 +395,8 @@ object EmbeddingOps {
       idCol: String, k: Int, nlist: Int, nprobe: Int,
       centroids: Option[Array[(Long, Array[Double], Double)]] = None): DataFrame = {
     val cents = centroids.getOrElse(ivfCentroids(corpus, vecCol, idCol, nlist))
-    val assigned = prepared(corpus, vecCol, idCol)
-      .withColumn("cluster", ivfAssignment(col("v"), cents))
-      .select(col("cluster"), col("vec_id").as("neighbor_id"),
-        col("v").as("cv"), col("nrm").as("cn"))
-    val probing = prepared(queries, vecCol, idCol)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"),
-        explode(ivfProbes(col("v"), cents, nprobe)).as("cluster"))
-    val scored = probing.join(assigned, "cluster")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 4)
-          .as("cosine"))
-    graft.operators.Relational.topKPerGroup(scored,
-      Seq("query_id"), Seq(desc("cosine"), asc("neighbor_id")), k)
+    serveIvf(queries, ivfRows(corpus, vecCol, cents), vecCol, idCol, k,
+      nprobe, cents)
   }
 
   /**
@@ -361,29 +415,15 @@ object EmbeddingOps {
       nlist: Int, nprobe: Int,
       centroids: Option[Array[(Long, Array[Double], Double)]] = None): DataFrame = {
     val cents = centroids.getOrElse(ivfCentroids(corpus, vecCol, idCol, nlist))
-    def withLabel(df: DataFrame): DataFrame =
-      graft.operators.Materialized(
-        df.select(col(idCol).as("vec_id"), col(labelCol).as("lbl"),
-          asDouble(col(vecCol)).as("v"))
-          .withColumn("nrm", norm(col("v"))))
-    val assigned = withLabel(corpus)
-      .withColumn("cluster", ivfAssignment(col("v"), cents))
-      .select(col("cluster"), col("vec_id").as("neighbor_id"),
-        col("lbl").as("neighbor_label"), col("v").as("cv"),
-        col("nrm").as("cn"))
-    val probing = withLabel(queries)
-      .select(col("vec_id").as("query_id"),
-        col("lbl").as("anchor_label"), col("v").as("qv"),
-        col("nrm").as("qn"),
-        explode(ivfProbes(col("v"), cents, nprobe)).as("cluster"))
-    val scored = probing.join(assigned, "cluster")
-      .filter(col("anchor_label") =!= col("neighbor_label"))
-      .select(col("query_id"), col("anchor_label"), col("neighbor_id"),
-        col("neighbor_label"),
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 4)
-          .as("cosine"))
-    graft.operators.Relational.topKPerGroup(scored,
-      Seq("query_id"), Seq(desc("cosine"), asc("neighbor_id")), k)
+    val probing = probes(prepared(queries, vecCol, idCol,
+      col(labelCol).as("anchor_label")), cents, nprobe)
+    val assigned = candidateSide(prepared(corpus, vecCol, idCol,
+        col(labelCol).as("neighbor_label")))
+      .withColumn("cluster", ivfAssignment(col("cv"), cents))
+    topK(probing.join(assigned, "cluster")
+        .filter(col("anchor_label") =!= col("neighbor_label")),
+      "cosine", k,
+      Seq("query_id", "anchor_label", "neighbor_id", "neighbor_label"))
   }
 
   /**
@@ -398,10 +438,27 @@ object EmbeddingOps {
       nlist: Int, path: String,
       centroids: Option[Array[(Long, Array[Double], Double)]] = None): Unit = {
     val cents = centroids.getOrElse(ivfCentroids(corpus, vecCol, idCol, nlist))
-    val assigned = corpus
-      .withColumn("cluster", ivfAssignment(asDouble(col(vecCol)), cents))
-    graft.io.ParquetSink.writePartitioned(assigned, path, Seq("cluster"))
+    graft.io.ParquetSink.writePartitioned(ivfRows(corpus, vecCol, cents),
+      path, Seq("cluster"))
   }
+
+  /** The float IVF index row: the corpus row plus its nearest-centroid
+    * `cluster` — what [[writeIvfIndex]] persists and [[ivfTopK]] serves
+    * in memory. */
+  private def ivfRows(corpus: DataFrame, vecCol: String,
+      cents: Array[(Long, Array[Double], Double)]): DataFrame =
+    corpus.withColumn("cluster", ivfAssignment(asDouble(col(vecCol)), cents))
+
+  /** Float IVF top-k over a frame of [[ivfRows]]: exact cosine against
+    * the stored float vectors inside the probed cells. */
+  private def serveIvf(queries: DataFrame, rows: DataFrame, vecCol: String,
+      idCol: String, k: Int, nprobe: Int,
+      cents: Array[(Long, Array[Double], Double)]): DataFrame =
+    serveCells(queries,
+      rows.select(col("cluster"), col(idCol).as("neighbor_id"),
+          asDouble(col(vecCol)).as("cv"))
+        .withColumn("cn", norm(col("cv"))),
+      vecCol, idCol, cents, nprobe, "cosine", k)
 
   /** Serve top-k from a persisted IVF index: re-derive the probe cells
     * for each query from the same deterministic centroids, join on the
@@ -410,24 +467,10 @@ object EmbeddingOps {
       corpusForCentroids: DataFrame, vecCol: String, idCol: String,
       k: Int, nlist: Int, nprobe: Int,
       centroids: Option[Array[(Long, Array[Double], Double)]] = None): DataFrame = {
-    val spark = queries.sparkSession
     val cents = centroids.getOrElse(
       ivfCentroids(corpusForCentroids, vecCol, idCol, nlist))
-    val index = spark.read.parquet(indexPath)
-      .select(col("cluster"), col(idCol).as("neighbor_id"),
-        asDouble(col(vecCol)).as("cv"))
-      .withColumn("cn", norm(col("cv")))
-    val probing = prepared(queries, vecCol, idCol)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"),
-        explode(ivfProbes(col("v"), cents, nprobe)).as("cluster"))
-    val scored = probing.join(index, "cluster")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 4)
-          .as("cosine"))
-    graft.operators.Relational.topKPerGroup(scored,
-      Seq("query_id"), Seq(desc("cosine"), asc("neighbor_id")), k)
+    serveIvf(queries, queries.sparkSession.read.parquet(indexPath), vecCol,
+      idCol, k, nprobe, cents)
   }
 
   /** Corpus-size-derived SRP plane count: P = ⌈log₂ n⌉ − 1, i.e. ~n/2
@@ -490,8 +533,7 @@ object EmbeddingOps {
       .join(p.select(col("vec_id").as("id_b"), col("v").as("vb"),
         col("nrm").as("nb")), "id_b")
       .select(col("id_a"), col("id_b"),
-        round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 4)
-          .as("cosine"))
+        roundedCosine(col("va"), col("na"), col("vb"), col("nb")).as("cosine"))
       .filter(col("cosine") >= threshold)
   }
 }

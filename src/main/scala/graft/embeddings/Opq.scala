@@ -343,15 +343,11 @@ object Opq {
       corpus: DataFrame, vecCol: String, idCol: String, k: Int,
       nprobe: Int, model: Model,
       cents: Array[(Long, Array[Double], Double)],
-      rerankK: Int): DataFrame = {
-    require(rerankK >= k, s"rerankK=$rerankK must be >= k=$k")
-    val rotQ = rotatedFrame(queries, vecCol, idCol, model)
-    val cand = ProductQuantization.ivfPqTopKFromIndex(rotQ, indexPath,
-      vecCol, idCol, rerankK, nprobe, model.cb, model.ksub, cents)
-      .select("query_id", "neighbor_id")
-    ProductQuantization.exactRerank(cand, queries, corpus, vecCol,
-      idCol, k)
-  }
+      rerankK: Int): DataFrame =
+    ProductQuantization.exactRerank(queries, corpus, vecCol, idCol, k,
+      rerankK)(ProductQuantization.ivfPqTopKFromIndex(
+        rotatedFrame(queries, vecCol, idCol, model), indexPath, vecCol, idCol,
+        rerankK, nprobe, model.cb, model.ksub, cents))
 
   /** Recall@k of the rotated-space ADC against the exact FLOAT top-k
     * on the ORIGINAL vectors (ground truth is rotation-free), plus the
@@ -359,40 +355,12 @@ object Opq {
     * report shape as [[ProductQuantization.recallAtK]], directly
     * comparable to the plain-PQ row (the spec asserts ≤ / ≥). */
   def recallAtK(queries: DataFrame, corpus: DataFrame, vecCol: String,
-      idCol: String, k: Int, model: Model): DataFrame = {
-    val exact = EmbeddingOps.bruteForceTopK(queries, corpus,
-      vecCol, idCol, k).select("query_id", "neighbor_id")
-    val opq = adcTopK(queries, corpus, vecCol, idCol, k, model)
-      .select("query_id", "neighbor_id")
-    val recall = exact.join(opq, Seq("query_id", "neighbor_id"))
-      .agg(count(lit(1)).as("total_hits"))
-      .crossJoin(exact.agg(
-        countDistinct(col("query_id")).as("n_queries")))
-      .select(col("n_queries"),
-        round(col("total_hits").cast("double") /
-          (col("n_queries") * k), 4).as("recall_at_k"))
-    // two consumers below (encode input + the vec_id read-back join):
-    // materialize so the rotation kernel runs once over the corpus
-    val rot = graft.operators.Materialized(
-      rotatedFrame(corpus, vecCol, idCol, model))
-    val cbL = typedlit(model.cb.toSeq)
-    val nv = col("v_norm")
-    val err = ProductQuantization.encode(rot, vecCol, idCol, model.cb,
-        model.m, model.ksub)
-      .withColumn("rv", graft.functions.GraftFunctions.pq_decode(
-        col("codes"), cbL, model.ksub))
-      .join(rot.select(col(idCol).as("vec_id"),
-        col(vecCol).cast("array<double>").as("v")), "vec_id")
-      .withColumn("n0", EmbeddingOps.norm(col("v")))
-      .withColumn("v_norm",
-        when(col("n0") === 0d, lit(1d)).otherwise(col("n0")))
-      .select(explode(zip_with(
-        transform(col("v"), x => x / nv), col("rv"),
-        (u, r) => abs(u - r))).as("e"))
-      .select(round(col("e"), 9).cast("decimal(28,9)").as("e9"))
-      .agg(round(sum(col("e9")).cast("double") / count(lit(1)), 6)
-        .as("mean_abs_err"))
-    recall.crossJoin(err).select(lit(k).as("k"), col("n_queries"),
-      col("recall_at_k"), col("mean_abs_err"))
-  }
+      idCol: String, k: Int, model: Model): DataFrame =
+    EmbeddingOps.recallVsExact(queries, corpus, vecCol, idCol, k,
+      "recall_at_k" -> adcTopK(queries, corpus, vecCol, idCol, k, model))
+      .crossJoin(ProductQuantization.meanAbsErr(
+        // two consumers inside (encode input + the vec_id read-back
+        // join): materialize so the rotation kernel runs once
+        graft.operators.Materialized(rotatedFrame(corpus, vecCol, idCol, model)),
+        vecCol, idCol, model.cb, model.m, model.ksub))
 }

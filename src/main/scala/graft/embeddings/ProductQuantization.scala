@@ -210,6 +210,17 @@ object ProductQuantization {
       graft.functions.GraftFunctions.pq_encode(
         col(vecCol).cast("array<double>"), cbLit(cb), m, ksub).as("codes"))
 
+  /** PQ-coded rows as scoring candidates: `codes` (with `vec_id` as
+    * `neighbor_id`) replaced by the decoded reconstruction `cv` and its
+    * guarded norm `cn`; every other column passes through. */
+  private def decoded(codes: DataFrame, cb: Array[Double],
+      ksub: Int): DataFrame =
+    codes.withColumnRenamed("vec_id", "neighbor_id")
+      .withColumn("cv",
+        graft.functions.GraftFunctions.pq_decode(col("codes"), cbLit(cb), ksub))
+      .withColumn("cn", guardedNorm(col("cv")))
+      .drop("codes")
+
   /**
    * Brute-force ADC top-k: queries keep their FLOAT vectors, the corpus
    * is its PQ codes; each candidate is scored as the cosine of the
@@ -228,21 +239,36 @@ object ProductQuantization {
     // join, re-evaluating it once per (query, row) PAIR instead of
     // once per corpus row — measured 20× slower at the 100× soak leg
     val rec = graft.operators.Materialized(
-      encode(corpus, vecCol, idCol, cb, m, ksub)
-        .withColumn("rv",
-          graft.functions.GraftFunctions.pq_decode(col("codes"), cbLit(cb), ksub))
-        .select(col("vec_id").as("neighbor_id"), col("rv"),
-          guardedNorm(col("rv")).as("rn")))
-    val q = EmbeddingOps.prepared(queries, vecCol, idCol)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"))
-    val cand = q.join(rec, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(EmbeddingOps.dot(col("qv"), col("rv")) /
-          (col("qn") * col("rn")), 4).as("cosine_pq"))
-    graft.operators.Relational.topKPerGroup(cand,
-      Seq("query_id"), Seq(desc("cosine_pq"), asc("neighbor_id")), k)
+      decoded(encode(corpus, vecCol, idCol, cb, m, ksub), cb, ksub))
+    EmbeddingOps.topK(EmbeddingOps.querySide(
+      EmbeddingOps.prepared(queries, vecCol, idCol)).crossJoin(rec),
+      "cosine_pq", k)
   }
+
+  /** The IVF+PQ index row: (cluster, vec_id, codes) — ONE map-side
+    * projection (coarse cell via the flat centroid-matrix kernel + the
+    * PQ encode kernel). What [[writeIvfPqIndex]] persists,
+    * [[ivfPqTopK]] serves in memory, and the streaming ANN index
+    * appends per micro-batch. */
+  private[graft] def indexRows(corpus: DataFrame, vecCol: String,
+      idCol: String, cents: Array[(Long, Array[Double], Double)],
+      cb: Array[Double], m: Int, ksub: Int): DataFrame =
+    corpus
+      .select(col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("v"))
+      .withColumn("cluster", EmbeddingOps.ivfAssignment(col("v"), cents))
+      .select(col("cluster"), col("vec_id"),
+        graft.functions.GraftFunctions.pq_encode(
+          col("v"), cbLit(cb), m, ksub).as("codes"))
+
+  /** IVF+PQ top-k over a frame of [[indexRows]]: float queries probe
+    * their nprobe cells and ADC-score against the decoded codes. Other
+    * columns (the growing layout's `batch_id`) are dropped. */
+  private def serve(queries: DataFrame, rows: DataFrame, vecCol: String,
+      idCol: String, k: Int, nprobe: Int, cb: Array[Double], ksub: Int,
+      cents: Array[(Long, Array[Double], Double)]): DataFrame =
+    EmbeddingOps.serveCells(queries,
+      decoded(rows.select("cluster", "vec_id", "codes"), cb, ksub),
+      vecCol, idCol, cents, nprobe, "cosine_pq", k)
 
   /**
    * IVF + PQ top-k — the canonical large-scale faiss layout
@@ -251,9 +277,8 @@ object ProductQuantization {
    * nprobe cells and ADC-score against the decoded reconstructions.
    * One map-side projection builds the entire index row (cell + codes
    * + decoded norm); the probe join is a broadcast of queries×nprobe
-   * rows, so the corpus never shuffles — at 100 TB the persisted form
-   * of this is [[EmbeddingOps.writeIvfIndex]] carrying `codes` instead
-   * of the float column: a ~3 TB index for a 100 TB corpus.
+   * rows, so the corpus never shuffles — the persisted form of this is
+   * [[writeIvfPqIndex]]: a ~3 TB index for a 100 TB corpus.
    */
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, vecCol: String,
       idCol: String, k: Int, nlist: Int, nprobe: Int, cb: Array[Double],
@@ -262,27 +287,8 @@ object ProductQuantization {
       : DataFrame = {
     val cents = centroids.getOrElse(
       EmbeddingOps.ivfCentroids(corpus, vecCol, idCol, nlist))
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-        col(vecCol).cast("array<double>").as("v"))
-      .withColumn("cluster", EmbeddingOps.ivfAssignment(col("v"), cents))
-      .withColumn("codes", graft.functions.GraftFunctions.pq_encode(
-        col("v"), cbLit(cb), m, ksub))
-      .withColumn("rv", graft.functions.GraftFunctions.pq_decode(
-        col("codes"), cbLit(cb), ksub))
-      .withColumn("rn", guardedNorm(col("rv")))
-      .select("cluster", "neighbor_id", "rv", "rn")
-    val probing = EmbeddingOps.prepared(queries, vecCol, idCol)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"),
-        explode(EmbeddingOps.ivfProbes(col("v"), cents, nprobe))
-          .as("cluster"))
-    val scored = probing.join(c, "cluster")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(EmbeddingOps.dot(col("qv"), col("rv")) /
-          (col("qn") * col("rn")), 4).as("cosine_pq"))
-    graft.operators.Relational.topKPerGroup(scored,
-      Seq("query_id"), Seq(desc("cosine_pq"), asc("neighbor_id")), k)
+    serve(queries, indexRows(corpus, vecCol, idCol, cents, cb, m, ksub),
+      vecCol, idCol, k, nprobe, cb, ksub, cents)
   }
 
   /**
@@ -300,30 +306,25 @@ object ProductQuantization {
       vecCol: String, idCol: String, k: Int, nlist: Int, nprobe: Int,
       cb: Array[Double], m: Int, ksub: Int, rerankK: Int,
       centroids: Option[Array[(Long, Array[Double], Double)]] = None)
-      : DataFrame = {
-    require(rerankK >= k, s"rerankK=$rerankK must be >= k=$k")
-    val cand = ivfPqTopK(queries, corpus, vecCol, idCol, rerankK, nlist,
-      nprobe, cb, m, ksub, centroids)
-      .select("query_id", "neighbor_id")
-    exactRerank(cand, queries, corpus, vecCol, idCol, k)
-  }
+      : DataFrame =
+    exactRerank(queries, corpus, vecCol, idCol, k, rerankK)(
+      ivfPqTopK(queries, corpus, vecCol, idCol, rerankK, nlist, nprobe, cb,
+        m, ksub, centroids))
 
-  /** Stage 2 of the refine convention: exact float cosine over the
-    * (query_id, neighbor_id) candidate list only, cut to k. */
-  private[embeddings] def exactRerank(cand: DataFrame, queries: DataFrame,
-      corpus: DataFrame, vecCol: String, idCol: String, k: Int): DataFrame = {
-    val q = EmbeddingOps.prepared(queries, vecCol, idCol)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"))
-    val c = EmbeddingOps.prepared(corpus, vecCol, idCol)
-      .select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
-        col("nrm").as("cn"))
-    val rescored = cand.join(q, "query_id").join(c, "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(EmbeddingOps.dot(col("qv"), col("cv")) /
-          (col("qn") * col("cn")), 4).as("cosine"))
-    graft.operators.Relational.topKPerGroup(rescored,
-      Seq("query_id"), Seq(desc("cosine"), asc("neighbor_id")), k)
+  /** Stage 2 of the refine convention: checks `rerankK >= k` before
+    * building the stage-1 `candidates` (a top-`rerankK` frame), then
+    * re-scores only their (query_id, neighbor_id) pairs with the exact
+    * float cosine, cut to k. */
+  private[embeddings] def exactRerank(queries: DataFrame, corpus: DataFrame,
+      vecCol: String, idCol: String, k: Int, rerankK: Int)(
+      candidates: => DataFrame): DataFrame = {
+    require(rerankK >= k, s"rerankK=$rerankK must be >= k=$k")
+    EmbeddingOps.topK(candidates.select("query_id", "neighbor_id")
+      .join(EmbeddingOps.querySide(
+        EmbeddingOps.prepared(queries, vecCol, idCol)), "query_id")
+      .join(EmbeddingOps.candidateSide(
+        EmbeddingOps.prepared(corpus, vecCol, idCol)), "neighbor_id"),
+      "cosine", k)
   }
 
   /**
@@ -338,13 +339,10 @@ object ProductQuantization {
   def ivfPqRerankTopKFromIndex(queries: DataFrame, indexPath: String,
       corpus: DataFrame, vecCol: String, idCol: String, k: Int,
       nprobe: Int, cb: Array[Double], ksub: Int,
-      cents: Array[(Long, Array[Double], Double)], rerankK: Int): DataFrame = {
-    require(rerankK >= k, s"rerankK=$rerankK must be >= k=$k")
-    val cand = ivfPqTopKFromIndex(queries, indexPath, vecCol, idCol,
-      rerankK, nprobe, cb, ksub, cents)
-      .select("query_id", "neighbor_id")
-    exactRerank(cand, queries, corpus, vecCol, idCol, k)
-  }
+      cents: Array[(Long, Array[Double], Double)], rerankK: Int): DataFrame =
+    exactRerank(queries, corpus, vecCol, idCol, k, rerankK)(
+      ivfPqTopKFromIndex(queries, indexPath, vecCol, idCol, rerankK, nprobe,
+        cb, ksub, cents))
 
   /** ONE-row report comparing recall@k of the pure-ADC IVF+PQ top-k and
     * of the reranked top-k against the exact float top-k: (k, n_queries,
@@ -355,26 +353,12 @@ object ProductQuantization {
       vecCol: String, idCol: String, k: Int, nlist: Int, nprobe: Int,
       cb: Array[Double], m: Int, ksub: Int, rerankK: Int,
       centroids: Option[Array[(Long, Array[Double], Double)]] = None)
-      : DataFrame = {
-    val exact = EmbeddingOps.bruteForceTopK(queries, corpus,
-      vecCol, idCol, k).select("query_id", "neighbor_id")
-    val adc = ivfPqTopK(queries, corpus, vecCol, idCol, k, nlist, nprobe,
-      cb, m, ksub, centroids).select("query_id", "neighbor_id")
-    val rr = ivfPqRerankTopK(queries, corpus, vecCol, idCol, k, nlist,
-      nprobe, cb, m, ksub, rerankK, centroids)
-      .select("query_id", "neighbor_id")
-    val ha = exact.join(adc, Seq("query_id", "neighbor_id"))
-      .agg(count(lit(1)).as("hits_adc"))
-    val hr = exact.join(rr, Seq("query_id", "neighbor_id"))
-      .agg(count(lit(1)).as("hits_rerank"))
-    val nq = exact.agg(countDistinct(col("query_id")).as("n_queries"))
-    nq.crossJoin(ha).crossJoin(hr)
-      .select(lit(k).as("k"), col("n_queries"),
-        round(col("hits_adc").cast("double") / (col("n_queries") * k), 4)
-          .as("recall_adc"),
-        round(col("hits_rerank").cast("double") / (col("n_queries") * k), 4)
-          .as("recall_rerank"))
-  }
+      : DataFrame =
+    EmbeddingOps.recallVsExact(queries, corpus, vecCol, idCol, k,
+      "recall_adc" -> ivfPqTopK(queries, corpus, vecCol, idCol, k, nlist,
+        nprobe, cb, m, ksub, centroids),
+      "recall_rerank" -> ivfPqRerankTopK(queries, corpus, vecCol, idCol, k,
+        nlist, nprobe, cb, m, ksub, rerankK, centroids))
 
   /**
    * Persist the corpus as an IVF + PQ index: one parquet directory per
@@ -389,13 +373,8 @@ object ProductQuantization {
       centroids: Option[Array[(Long, Array[Double], Double)]] = None): Unit = {
     val cents = centroids.getOrElse(
       EmbeddingOps.ivfCentroids(corpus, vecCol, idCol, nlist))
-    val indexed = corpus
-      .select(col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("cluster", EmbeddingOps.ivfAssignment(col("v"), cents))
-      .select(col("cluster"), col("vec_id"),
-        graft.functions.GraftFunctions.pq_encode(
-          col("v"), cbLit(cb), m, ksub).as("codes"))
-    graft.io.ParquetSink.writePartitioned(indexed, path, Seq("cluster"))
+    graft.io.ParquetSink.writePartitioned(
+      indexRows(corpus, vecCol, idCol, cents, cb, m, ksub), path, Seq("cluster"))
   }
 
   /** Serve IVF+PQ top-k from a persisted [[writeIvfPqIndex]] layout:
@@ -406,26 +385,9 @@ object ProductQuantization {
   def ivfPqTopKFromIndex(queries: DataFrame, indexPath: String,
       vecCol: String, idCol: String, k: Int, nprobe: Int,
       cb: Array[Double], ksub: Int,
-      cents: Array[(Long, Array[Double], Double)]): DataFrame = {
-    val spark = queries.sparkSession
-    val index = spark.read.parquet(indexPath)
-      .select(col("cluster"), col("vec_id").as("neighbor_id"),
-        graft.functions.GraftFunctions.pq_decode(
-          col("codes"), cbLit(cb), ksub).as("rv"))
-      .withColumn("rn", guardedNorm(col("rv")))
-    val probing = EmbeddingOps.prepared(queries, vecCol, idCol)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"),
-        explode(EmbeddingOps.ivfProbes(col("v"), cents, nprobe))
-          .as("cluster"))
-    val scored = probing.join(index, "cluster")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(EmbeddingOps.dot(col("qv"), col("rv")) /
-          (col("qn") * col("rn")), 4).as("cosine_pq"))
-    graft.operators.Relational.topKPerGroup(scored,
-      Seq("query_id"), Seq(desc("cosine_pq"), asc("neighbor_id")), k)
-  }
+      cents: Array[(Long, Array[Double], Double)]): DataFrame =
+    serve(queries, queries.sparkSession.read.parquet(indexPath), vecCol,
+      idCol, k, nprobe, cb, ksub, cents)
 
   /**
    * Quality report: recall@k of the ADC top-k against the exact float
@@ -436,20 +398,20 @@ object ProductQuantization {
    */
   def recallAtK(queries: DataFrame, corpus: DataFrame, vecCol: String,
       idCol: String, k: Int, cb: Array[Double], m: Int,
-      ksub: Int): DataFrame = {
-    val exact = EmbeddingOps.bruteForceTopK(queries, corpus,
-      vecCol, idCol, k).select("query_id", "neighbor_id")
-    val pq = adcTopK(queries, corpus, vecCol, idCol, k, cb, m, ksub)
-      .select("query_id", "neighbor_id")
-    val recall = exact.join(pq, Seq("query_id", "neighbor_id"))
-      .agg(count(lit(1)).as("total_hits"))
-      .crossJoin(exact.agg(
-        countDistinct(col("query_id")).as("n_queries")))
-      .select(col("n_queries"),
-        round(col("total_hits").cast("double") /
-          (col("n_queries") * k), 4).as("recall_at_k"))
+      ksub: Int): DataFrame =
+    EmbeddingOps.recallVsExact(queries, corpus, vecCol, idCol, k,
+      "recall_at_k" -> adcTopK(queries, corpus, vecCol, idCol, k, cb, m, ksub))
+      .crossJoin(meanAbsErr(corpus, vecCol, idCol, cb, m, ksub))
+
+  /** ONE row (mean_abs_err): the mean |unit(v)_i − rv_i| of the decoded
+    * codes against the unit-normalized vectors of `corpus` (OPQ passes
+    * its rotated frame). Per-element rounding is deterministic and the
+    * decimal sum is exact and commutative, so the mean is engine- and
+    * partitioning-exact. */
+  private[embeddings] def meanAbsErr(corpus: DataFrame, vecCol: String,
+      idCol: String, cb: Array[Double], m: Int, ksub: Int): DataFrame = {
     val nv = col("v_norm")
-    val err = encode(corpus, vecCol, idCol, cb, m, ksub)
+    encode(corpus, vecCol, idCol, cb, m, ksub)
       .withColumn("rv",
         graft.functions.GraftFunctions.pq_decode(col("codes"), cbLit(cb), ksub))
       .join(corpus.select(col(idCol).as("vec_id"),
@@ -463,7 +425,5 @@ object ProductQuantization {
       .select(round(col("e"), 9).cast("decimal(28,9)").as("e9"))
       .agg(round(sum(col("e9")).cast("double") / count(lit(1)), 6)
         .as("mean_abs_err"))
-    recall.crossJoin(err).select(lit(k).as("k"), col("n_queries"),
-      col("recall_at_k"), col("mean_abs_err"))
   }
 }

@@ -51,15 +51,20 @@ object Quantization {
         codesOf(col("v"), col("scale")).as("q"))
   }
 
-  /** Quantized codes widened for scoring: vec_id, scale, qd (codes as
-    * doubles — int8 values are exactly representable), qn (L2 norm of
-    * the codes). Materialized once for the multi-consumer joins. */
+  /** Quantized codes widened for scoring, in [[EmbeddingOps.prepared]]
+    * shape: vec_id, v (codes as doubles — int8 values are exactly
+    * representable), nrm (L2 norm of the codes). Materialized once for
+    * the multi-consumer joins. */
   private def scored(df: DataFrame, vecCol: String, idCol: String): DataFrame =
     graft.operators.Materialized(
       quantize(df, vecCol, idCol)
-        .withColumn("qd", col("q").cast("array<double>"))
-        .withColumn("qn", EmbeddingOps.norm(col("qd")))
-        .select("vec_id", "scale", "qd", "qn"))
+        .select(col("vec_id"), col("scale"),
+          col("q").cast("array<double>").as("v"))
+        .withColumn("nrm", EmbeddingOps.norm(col("v"))))
+      // `scale` is materialized and dropped only after: with no second
+      // reference Catalyst inlines it into the codes lambda, re-running
+      // max|v| once per element (ann_quantized_topk ~1.6× slower)
+      .drop("scale")
 
   /**
    * Exact top-k over the QUANTIZED codes (cosine of int8 code vectors;
@@ -69,20 +74,11 @@ object Quantization {
    * payloads — this is the correctness anchor for that path.
    */
   def quantizedTopK(queries: DataFrame, corpus: DataFrame,
-      vecCol: String, idCol: String, k: Int): DataFrame = {
-    val c = scored(corpus, vecCol, idCol)
-      .select(col("vec_id").as("neighbor_id"), col("qd").as("cv"),
-        col("qn").as("cn"))
-    val q = scored(queries, vecCol, idCol)
-      .select(col("vec_id").as("query_id"), col("qd").as("qv"),
-        col("qn").as("qn_q"))
-    val pairs = q.join(c, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(EmbeddingOps.dot(col("qv"), col("cv")) /
-          (col("qn_q") * col("cn")), 4).as("cosine_q"))
-    graft.operators.Relational.topKPerGroup(pairs,
-      Seq("query_id"), Seq(desc("cosine_q"), asc("neighbor_id")), k)
-  }
+      vecCol: String, idCol: String, k: Int): DataFrame =
+    EmbeddingOps.topK(
+      EmbeddingOps.querySide(scored(queries, vecCol, idCol))
+        .crossJoin(EmbeddingOps.candidateSide(scored(corpus, vecCol, idCol))),
+      "cosine_q", k)
 
   /**
    * IVF + SQ8 top-k — the production ANN shape (faiss "IVF,SQ8"): the
@@ -92,8 +88,8 @@ object Quantization {
    * so dequantization is free, see object doc). Relative to
    * [[EmbeddingOps.ivfTopK]] the probe join moves 4×-smaller corpus
    * payloads; relative to [[quantizedTopK]] only the probed cells are
-   * scored. At 100 TB this is the layout [[EmbeddingOps.writeIvfIndex]]
-   * would persist with `q`+`scale` instead of the float column.
+   * scored. It serves the in-memory [[indexRows]] — the rows
+   * [[writeIvfSq8Index]] persists and [[ivfSq8TopKFromIndex]] reads back.
    */
   def ivfQuantizedTopK(queries: DataFrame, corpus: DataFrame,
       vecCol: String, idCol: String, k: Int, nlist: Int, nprobe: Int,
@@ -101,35 +97,16 @@ object Quantization {
       : DataFrame = {
     val cents = centroids.getOrElse(
       EmbeddingOps.ivfCentroids(corpus, vecCol, idCol, nlist))
-    // One map-side projection builds the whole index row: coarse cell
-    // (flat-matrix kernel) + int8 codes + code norm.
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-        col(vecCol).cast("array<double>").as("v"))
-      .withColumn("cluster", EmbeddingOps.ivfAssignment(col("v"), cents))
-      .withColumn("scale", scaleOf(maxAbs(col("v"))))
-      .withColumn("cd", codesOf(col("v"), col("scale")).cast("array<double>"))
-      .withColumn("cn", EmbeddingOps.norm(col("cd")))
-      .select("cluster", "neighbor_id", "cd", "cn")
-    val probing = EmbeddingOps.prepared(queries, vecCol, idCol)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"),
-        explode(EmbeddingOps.ivfProbes(col("v"), cents, nprobe))
-          .as("cluster"))
-    val scored = probing.join(c, "cluster")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(EmbeddingOps.dot(col("qv"), col("cd")) /
-          (col("qn") * col("cn")), 4).as("cosine_adc"))
-    graft.operators.Relational.topKPerGroup(scored,
-      Seq("query_id"), Seq(desc("cosine_adc"), asc("neighbor_id")), k)
+    serve(queries, indexRows(corpus, vecCol, idCol, cents), vecCol, idCol, k,
+      nprobe, cents)
   }
 
   /**
    * Persist the corpus as an IVF + SQ8 index: one parquet directory per
    * coarse cluster, each row carrying the int8 codes and the per-vector
    * scale INSTEAD of the float vector — the ~4×-smaller on-disk layout
-   * the `ivfQuantizedTopK` doc promises ("the layout writeIvfIndex
-   * would persist"). At 100 TB of float32 embeddings the persisted
+   * of the rows `ivfQuantizedTopK` serves in memory. At 100 TB of
+   * float32 embeddings the persisted
    * index is ~25 TB, and a query batch's probe join reads only its
    * nprobe cluster directories (dynamic partition pruning, asserted in
    * EmbeddingIndexSpec).
@@ -145,8 +122,9 @@ object Quantization {
 
   /** The SQ8 index row relation: (cluster, vec_id, scale, q) — ONE
     * map-side projection (coarse cell via the flat centroid-matrix
-    * kernel + int8 codes). Shared by [[writeIvfSq8Index]] and the
-    * streaming SemDeDup index ([[SemanticDedup.corpusIndex]]). */
+    * kernel + int8 codes). Shared by [[writeIvfSq8Index]],
+    * [[ivfQuantizedTopK]] and the streaming SemDeDup index
+    * ([[SemanticDedup.corpusIndex]]). */
   private[embeddings] def indexRows(corpus: DataFrame, vecCol: String,
       idCol: String,
       cents: Array[(Long, Array[Double], Double)]): DataFrame =
@@ -157,34 +135,33 @@ object Quantization {
       .select(col("cluster"), col("vec_id"), col("scale"),
         codesOf(col("v"), col("scale")).as("q"))
 
+  /** SQ8 index rows as scoring candidates: (cluster, neighbor_id, cv, cn)
+    * — the codes as doubles and their code norm (cosine is scale-free,
+    * so the stored scale is not even read here; it exists for
+    * reconstruction consumers). */
+  private[embeddings] def codeCandidates(rows: DataFrame): DataFrame =
+    rows.select(col("cluster"), col("vec_id").as("neighbor_id"),
+        col("q").cast("array<double>").as("cv"))
+      .withColumn("cn", EmbeddingOps.norm(col("cv")))
+
+  /** IVF+SQ8 top-k over a frame of [[indexRows]]: ADC scoring of the
+    * float queries against the stored codes. */
+  private def serve(queries: DataFrame, rows: DataFrame, vecCol: String,
+      idCol: String, k: Int, nprobe: Int,
+      cents: Array[(Long, Array[Double], Double)]): DataFrame =
+    EmbeddingOps.serveCells(queries, codeCandidates(rows), vecCol, idCol,
+      cents, nprobe, "cosine_adc", k)
+
   /** Serve IVF+SQ8 top-k from a persisted [[writeIvfSq8Index]] layout:
     * float queries probe their nprobe cells (same centroids the index
     * was written with), the scan reads ONLY the probed cluster
     * directories, and ADC scoring runs on the stored codes — value-
-    * identical to the in-memory [[ivfQuantizedTopK]] (cosine is
-    * scale-free, so the stored scale is not even read here; it exists
-    * for reconstruction consumers). */
+    * identical to the in-memory [[ivfQuantizedTopK]]. */
   def ivfSq8TopKFromIndex(queries: DataFrame, indexPath: String,
       vecCol: String, idCol: String, k: Int, nprobe: Int,
-      cents: Array[(Long, Array[Double], Double)]): DataFrame = {
-    val spark = queries.sparkSession
-    val index = spark.read.parquet(indexPath)
-      .select(col("cluster"), col("vec_id").as("neighbor_id"),
-        col("q").cast("array<double>").as("cd"))
-      .withColumn("cn", EmbeddingOps.norm(col("cd")))
-    val probing = EmbeddingOps.prepared(queries, vecCol, idCol)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"),
-        explode(EmbeddingOps.ivfProbes(col("v"), cents, nprobe))
-          .as("cluster"))
-    val scored = probing.join(index, "cluster")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(EmbeddingOps.dot(col("qv"), col("cd")) /
-          (col("qn") * col("cn")), 4).as("cosine_adc"))
-    graft.operators.Relational.topKPerGroup(scored,
-      Seq("query_id"), Seq(desc("cosine_adc"), asc("neighbor_id")), k)
-  }
+      cents: Array[(Long, Array[Double], Double)]): DataFrame =
+    serve(queries, queries.sparkSession.read.parquet(indexPath), vecCol,
+      idCol, k, nprobe, cents)
 
   /**
    * Quality report for the quantized index: recall@k of the quantized
@@ -195,20 +172,8 @@ object Quantization {
    */
   def recallAtK(queries: DataFrame, corpus: DataFrame,
       vecCol: String, idCol: String, k: Int): DataFrame = {
-    val exact = EmbeddingOps.bruteForceTopK(queries, corpus,
-      vecCol, idCol, k).select("query_id", "neighbor_id")
-    val quant = quantizedTopK(queries, corpus, vecCol, idCol, k)
-      .select("query_id", "neighbor_id")
-    // Integer hit counts, ONE double division at the end — a running
-    // double avg would be partition-order-dependent (same discipline as
-    // the decimal-summed TF-IDF/BM25 scores).
-    val recall = exact.join(quant, Seq("query_id", "neighbor_id"))
-      .agg(count(lit(1)).as("total_hits"))
-      .crossJoin(exact.agg(
-        countDistinct(col("query_id")).as("n_queries")))
-      .select(col("n_queries"),
-        round(col("total_hits").cast("double") /
-          (col("n_queries") * k), 4).as("recall_at_k"))
+    val recall = EmbeddingOps.recallVsExact(queries, corpus, vecCol, idCol, k,
+      "recall_at_k" -> quantizedTopK(queries, corpus, vecCol, idCol, k))
     // Reconstruction error over the corpus: mean |v_i − q_i·scale|.
     // Per-element rounding is deterministic; the decimal sum is exact
     // and commutative, so the mean is engine- and partitioning-exact.
@@ -220,7 +185,6 @@ object Quantization {
       .select(round(col("e"), 9).cast("decimal(28,9)").as("e9"))
       .agg(round(sum(col("e9")).cast("double") / count(lit(1)), 6)
         .as("mean_abs_err"))
-    recall.crossJoin(err).select(lit(k).as("k"), col("n_queries"),
-      col("recall_at_k"), col("mean_abs_err"))
+    recall.crossJoin(err)
   }
 }

@@ -72,8 +72,8 @@ object SemanticDedup {
       .toDF("cluster", "cv", "cn")
     p.join(broadcast(centDf), "cluster")
       .select(col("vec_id"), col("v"), col("nrm"), col("cluster"),
-        round(EmbeddingOps.dot(col("v"), col("cv")) /
-          (col("nrm") * col("cn")), 4).as("centroid_cos"))
+        EmbeddingOps.roundedCosine(col("v"), col("nrm"), col("cv"), col("cn"))
+          .as("centroid_cos"))
   }
 
   /**
@@ -100,8 +100,8 @@ object SemanticDedup {
         col("v").as("vb"), col("nrm").as("nb")), Seq("cluster"))
       .filter(col("id_a") < col("id_b"))
       .select(col("cluster"), col("id_a"), col("id_b"),
-        round(EmbeddingOps.dot(col("va"), col("vb")) /
-          (col("na") * col("nb")), 4).as("cosine"))
+        EmbeddingOps.roundedCosine(col("va"), col("na"), col("vb"), col("nb"))
+          .as("cosine"))
       .filter(col("cosine") >= threshold)
   }
 
@@ -134,8 +134,8 @@ object SemanticDedup {
         col("v").as("vy"), col("nrm").as("ny"),
         col("centroid_cos").as("cc_y")), Seq("cluster"))
       .filter(col("id_x") =!= col("id_y") &&
-        round(EmbeddingOps.dot(col("vx"), col("vy")) /
-          (col("nx") * col("ny")), 4) >= threshold &&
+        EmbeddingOps.roundedCosine(col("vx"), col("nx"), col("vy"),
+          col("ny")) >= threshold &&
         (col("cc_y") < col("cc_x") ||
           (col("cc_y") === col("cc_x") && col("id_y") < col("id_x"))))
       .select(col("id_x").as("vec_id"))
@@ -178,16 +178,13 @@ object SemanticDedup {
     val keep = t.groupBy("cluster").agg(count(lit(1)).as("cell_n"))
       .where(col("cell_n") <= maxCell)
       .select("cluster")
-    val b = EmbeddingOps.prepared(bench, vecCol, idCol)
-      .select(col("vec_id").as("bench_id"), col("v").as("bv"),
-        col("nrm").as("bn"),
-        explode(EmbeddingOps.ivfProbes(col("v"), cents, nprobe))
-          .as("cluster"))
+    val b = EmbeddingOps.probes(EmbeddingOps.prepared(bench, vecCol, idCol),
+      cents, nprobe)
     t.join(keep, "cluster")
       .join(b, Seq("cluster"))
-      .select(col("cluster"), col("vec_id"), col("bench_id"),
-        round(EmbeddingOps.dot(col("v"), col("bv")) /
-          (col("nrm") * col("bn")), 4).as("cosine"))
+      .select(col("cluster"), col("vec_id"), col("query_id").as("bench_id"),
+        EmbeddingOps.roundedCosine(col("v"), col("nrm"), col("qv"), col("qn"))
+          .as("cosine"))
       .filter(col("cosine") >= threshold)
   }
 
@@ -232,11 +229,12 @@ object SemanticDedup {
 
   /**
    * Batch-vs-index semantic dedup: drop every batch vector that has a
-   * same-cluster index neighbour at ADC cosine ≥ threshold (float batch
-   * vector against the index's int8 codes — cosine is scale-free, so
-   * the stored scale is not read). Linear in the batch; the index side
-   * touches only the batch's clusters. Batch-INTERNAL dups are the
-   * caller's business ([[keepers]]), mirroring how
+   * same-cluster neighbour in `index` (rows of [[corpusIndex]]) at ADC
+   * cosine ≥ threshold (float batch vector against the index's int8
+   * codes — cosine is scale-free, so the stored scale is not read).
+   * Linear in the batch; the index side touches only the batch's
+   * clusters. Batch-INTERNAL dups are the caller's business
+   * ([[keepers]]), mirroring how
    * `TextDedup.dedupAgainstIndex` leaves in-batch near-dups alone.
    */
   def semdedupAgainstIndex(batch: DataFrame, index: DataFrame,
@@ -245,12 +243,9 @@ object SemanticDedup {
       threshold: Double): DataFrame = {
     val b = EmbeddingOps.prepared(batch, vecCol, idCol)
       .withColumn("cluster", EmbeddingOps.ivfAssignment(col("v"), cents))
-    val idx = index.select(col("cluster"),
-        col("q").cast("array<double>").as("qd"))
-      .withColumn("qn", EmbeddingOps.norm(col("qd")))
-    val dupIds = b.join(idx, Seq("cluster"))
-      .filter(round(EmbeddingOps.dot(col("v"), col("qd")) /
-        (col("nrm") * col("qn")), 4) >= threshold)
+    val dupIds = b.join(Quantization.codeCandidates(index), Seq("cluster"))
+      .filter(EmbeddingOps.roundedCosine(col("v"), col("nrm"), col("cv"),
+        col("cn")) >= threshold)
       .select(col("vec_id").as(idCol))
       .distinct()
     batch.join(dupIds, Seq(idCol), "left_anti")

@@ -270,24 +270,40 @@ object Sampling {
       grain: Int = 10000): DataFrame = {
     require(permille > 0 && permille <= 1000, "permille in [1, 1000]")
     require(grain > 0, "grain must be positive")
-    import org.apache.spark.sql.expressions.Window
-    val d = Materialized(df)
-    val g = d.withColumn("__m",
+    val g = Materialized(df).withColumn("__m",
       round(col(scoreCol) * grain).cast("long"))
-    val byDesc = Window.orderBy(col("__m").desc)
-    val cum = g.groupBy("__m").agg(count(lit(1)).as("__cnt"))
+    val thr = histogramCuts(g, Nil, "__thr" -> permille)
+    g.crossJoin(broadcast(thr))
+      .filter(col("__m") >= col("__thr"))
+      .drop("__m", "__thr")
+  }
+
+  /** The tie-inclusive cut points of a fixed-grain score, per group:
+    * for each (name → permille) target, the largest micro-unit `__m`
+    * whose descending cumulative count reaches ⌈n·permille/1000⌉ (via
+    * integer DIV), n the group's row count. `grained` carries the
+    * integer micro-unit score `__m` and the `groups` columns; no group
+    * means one global cut. The histogram is hash-aggregated over
+    * (groups, __m) — bounded by the score range, never by rows — and
+    * one window over it, partitioned by the groups, accumulates the
+    * counts. Output: one row per group, (groups…, name…). */
+  private[graft] def histogramCuts(grained: DataFrame, groups: Seq[String],
+      targets: (String, Int)*): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val byDesc = Window.partitionBy(groups.map(col): _*)
+      .orderBy(col("__m").desc)
+    val cum = grained.groupBy((groups :+ "__m").map(col): _*)
+      .agg(count(lit(1)).as("__cnt"))
       .withColumn("__cum", sum(col("__cnt")).over(
         byDesc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .withColumn("__n", sum(col("__cnt")).over(
         byDesc.rowsBetween(Window.unboundedPreceding,
           Window.unboundedFollowing)))
-    val thr = cum.agg(
-      max(when(col("__cum") >=
-        expr(s"(__n * $permille + 999) DIV 1000"), col("__m")))
-        .as("__thr"))
-    g.crossJoin(broadcast(thr))
-      .filter(col("__m") >= col("__thr"))
-      .drop("__m", "__thr")
+    val cuts = targets.map { case (name, p) =>
+      max(when(col("__cum") >= expr(s"(__n * $p + 999) DIV 1000"),
+        col("__m"))).as(name)
+    }
+    cum.groupBy(groups.map(col): _*).agg(cuts.head, cuts.tail: _*)
   }
 
   /**

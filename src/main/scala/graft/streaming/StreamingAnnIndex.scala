@@ -80,18 +80,11 @@ object StreamingAnnIndex {
   }
 
   /** One batch's index rows under the frozen model: (cluster, vec_id,
-    * codes) — one map-side projection, the exact arithmetic of the
-    * rebuild path's `writeIvfPqIndex`. */
+    * codes) — the rebuild path's `writeIvfPqIndex` rows. */
   def indexRows(batch: DataFrame, vecCol: String, idCol: String,
       model: AnnModel): DataFrame =
-    batch
-      .select(col(idCol).as("vec_id"),
-        col(vecCol).cast("array<double>").as("v"))
-      .withColumn("cluster", EmbeddingOps.ivfAssignment(col("v"), model.cents))
-      .select(col("cluster"), col("vec_id"),
-        graft.functions.GraftFunctions.pq_encode(
-          col("v"), typedlit(model.cb.toSeq), model.m, model.ksub)
-          .as("codes"))
+    ProductQuantization.indexRows(batch, vecCol, idCol, model.cents,
+      model.cb, model.m, model.ksub)
 
   /** One micro-batch: append the raw vectors to `outDir` (the rerank /
     * refit corpus) and their encoded cells to `indexDir`, idempotently

@@ -708,27 +708,8 @@ object LanguageModel {
     require(headPermille > 0 && midPermille >= 0 &&
       headPermille + midPermille <= 1000,
       "head/mid permille must be positive and sum to at most 1000")
-    // exact micro-unit recovery: the score IS m/10⁴ for integer m, so
-    // round(·×10⁴) is ≥ ½-ulp from any .5 boundary — identical in both
-    // engines
-    val grained = scored0.withColumn("__m",
-      round(col(scoreCol) * 10000).cast("long"))
-    val hist = grained.groupBy("__m").agg(count(lit(1)).as("__cnt"))
-    val byScoreDesc = Window.orderBy(col("__m").desc)
-    val cum = hist
-      .withColumn("__cum", sum(col("__cnt")).over(
-        byScoreDesc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("__n", sum(col("__cnt")).over(
-        byScoreDesc.rowsBetween(Window.unboundedPreceding,
-          Window.unboundedFollowing)))
-    val headMid = headPermille + midPermille
-    cum.agg(
-      max(when(col("__cum") >=
-        expr(s"(__n * $headPermille + 999) DIV 1000"), col("__m")))
-        .as("thr_head"),
-      max(when(col("__cum") >=
-        expr(s"(__n * $headMid + 999) DIV 1000"), col("__m")))
-        .as("thr_mid"))
+    graft.operators.Sampling.histogramCuts(microUnits(scored0, scoreCol), Nil,
+      "thr_head" -> headPermille, "thr_mid" -> (headPermille + midPermille))
   }
 
   /**
@@ -748,32 +729,10 @@ object LanguageModel {
     require(headPermille > 0 && midPermille >= 0 &&
       headPermille + midPermille <= 1000,
       "head/mid permille must be positive and sum to at most 1000")
-    val scored = Materialized(scored0)
-    val grained = scored.withColumn("__m",
-      round(col(scoreCol) * 10000).cast("long"))
-    val hist = grained.groupBy(groupCol, "__m")
-      .agg(count(lit(1)).as("__cnt"))
-    val byScoreDesc = Window.partitionBy(groupCol).orderBy(col("__m").desc)
-    val cum = hist
-      .withColumn("__cum", sum(col("__cnt")).over(
-        byScoreDesc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("__n", sum(col("__cnt")).over(
-        byScoreDesc.rowsBetween(Window.unboundedPreceding,
-          Window.unboundedFollowing)))
-    val headMid = headPermille + midPermille
-    val thr = cum.groupBy(groupCol).agg(
-      max(when(col("__cum") >=
-        expr(s"(__n * $headPermille + 999) DIV 1000"), col("__m")))
-        .as("thr_head"),
-      max(when(col("__cum") >=
-        expr(s"(__n * $headMid + 999) DIV 1000"), col("__m")))
-        .as("thr_mid"))
-    grained.join(broadcast(thr), Seq(groupCol))
-      .withColumn("bucket",
-        when(col("__m") >= col("thr_head"), lit("head"))
-          .when(col("__m") >= col("thr_mid"), lit("middle"))
-          .otherwise(lit("tail")))
-      .drop("__m", "thr_head", "thr_mid")
+    val grained = microUnits(Materialized(scored0), scoreCol)
+    labelled(grained.join(broadcast(graft.operators.Sampling.histogramCuts(
+      grained, Seq(groupCol), "thr_head" -> headPermille,
+      "thr_mid" -> (headPermille + midPermille))), Seq(groupCol)))
   }
 
   /** Label a scored frame against FIXED thresholds (a single-row
@@ -783,9 +742,18 @@ object LanguageModel {
     * threshold relation, map-side labels, no corpus-wide window. */
   def bucketByThresholds(scored0: DataFrame, scoreCol: String,
       thr: DataFrame): DataFrame =
-    scored0.withColumn("__m", round(col(scoreCol) * 10000).cast("long"))
-      .crossJoin(broadcast(thr))
-      .withColumn("bucket",
+    labelled(microUnits(scored0, scoreCol).crossJoin(broadcast(thr)))
+
+  /** Exact micro-unit recovery: the score IS m/10⁴ for integer m, so
+    * round(·×10⁴) is ≥ ½-ulp from any .5 boundary — identical in both
+    * engines. Adds `__m`. */
+  private def microUnits(scored: DataFrame, scoreCol: String): DataFrame =
+    scored.withColumn("__m", round(col(scoreCol) * 10000).cast("long"))
+
+  /** The head/middle/tail label of a micro-unit score against the
+    * `thr_head`/`thr_mid` columns beside it, dropping all three. */
+  private def labelled(df: DataFrame): DataFrame =
+    df.withColumn("bucket",
         when(col("__m") >= col("thr_head"), lit("head"))
           .when(col("__m") >= col("thr_mid"), lit("middle"))
           .otherwise(lit("tail")))

@@ -142,4 +142,102 @@ class EmbeddingIndexSpec extends SparkSpec {
       planStr.contains("PartitionFilters: [isnotnull(cluster"),
       s"no partition pruning on the index scan:\n$planStr")
   }
+
+  test("every ANN top-k entry point: schema, no self pair, <= k per query, ties by neighbor_id") {
+    import graft.embeddings.{Opq, ProductQuantization => PQ, Quantization}
+    import spark.implicits._
+    // 40 distinct base vectors plus three exact copies of ids 0..9
+    // (ids 40..69): every query in 0..9 ties at cosine 1.0 with its
+    // copies. Ids >= 50 carry label "b", so hard-negative queries (all
+    // label "a") still tie on their two label-"b" copies.
+    val rnd = new scala.util.Random(7)
+    val base = Array.fill(40)(Array.fill(16)(rnd.nextGaussian().toFloat))
+    val vecs = (0 until 70).map { id =>
+      (id.toLong, if (id < 40) base(id) else base(id % 10),
+        if (id >= 50) "b" else "a")
+    }.toDF("vec_id", "embedding", "label")
+    val queries = vecs.filter(col("vec_id") < 10)
+    val (v, id, k) = ("embedding", "vec_id", 5)
+    val cents = EmbeddingOps.ivfCentroids(vecs, v, id, 4)
+    val cb = PQ.demoCodebook(vecs, v, id, m = 4, ksub = 8)
+    def dir(tag: String) =
+      java.nio.file.Files.createTempDirectory(s"graft-ann-$tag").toString
+    val ivfPath = dir("ivf")
+    EmbeddingOps.writeIvfIndex(vecs, v, id, 4, ivfPath, Some(cents))
+    val sq8Path = dir("sq8")
+    Quantization.writeIvfSq8Index(vecs, v, id, 4, sq8Path, Some(cents))
+    val pqPath = dir("pq")
+    PQ.writeIvfPqIndex(vecs, v, id, 4, pqPath, cb, m = 4, ksub = 8, Some(cents))
+    val model = Opq.train(vecs, v, id, m = 4, ksub = 8)
+    val opqPath = dir("opq")
+    val opqCents = Opq.writeProductionIndex(vecs, v, id, model, 4, opqPath)
+
+    def pinned(score: String) =
+      s"query_id:bigint,neighbor_id:bigint,$score:double,rank:int"
+    val entryPoints: Seq[(String, String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      ("bruteForceTopK", pinned("cosine"),
+        () => EmbeddingOps.bruteForceTopK(queries, vecs, v, id, k)),
+      ("ivfTopK", pinned("cosine"),
+        () => EmbeddingOps.ivfTopK(queries, vecs, v, id, k, 4, 2, Some(cents))),
+      ("ivfTopKFromIndex", pinned("cosine"),
+        () => EmbeddingOps.ivfTopKFromIndex(queries, ivfPath, vecs, v, id, k,
+          4, 2, Some(cents))),
+      ("ivfHardNegatives", "query_id:bigint,anchor_label:string," +
+        "neighbor_id:bigint,neighbor_label:string,cosine:double,rank:int",
+        () => EmbeddingOps.ivfHardNegatives(queries, vecs, v, id, "label", k,
+          4, 2, Some(cents))),
+      ("quantizedTopK", pinned("cosine_q"),
+        () => Quantization.quantizedTopK(queries, vecs, v, id, k)),
+      ("ivfQuantizedTopK", pinned("cosine_adc"),
+        () => Quantization.ivfQuantizedTopK(queries, vecs, v, id, k, 4, 2,
+          Some(cents))),
+      ("ivfSq8TopKFromIndex", pinned("cosine_adc"),
+        () => Quantization.ivfSq8TopKFromIndex(queries, sq8Path, v, id, k, 2,
+          cents)),
+      ("adcTopK", pinned("cosine_pq"),
+        () => PQ.adcTopK(queries, vecs, v, id, k, cb, 4, 8)),
+      ("ivfPqTopK", pinned("cosine_pq"),
+        () => PQ.ivfPqTopK(queries, vecs, v, id, k, 4, 2, cb, 4, 8,
+          Some(cents))),
+      ("ivfPqTopKFromIndex", pinned("cosine_pq"),
+        () => PQ.ivfPqTopKFromIndex(queries, pqPath, v, id, k, 2, cb, 8,
+          cents)),
+      ("ivfPqRerankTopK", pinned("cosine"),
+        () => PQ.ivfPqRerankTopK(queries, vecs, v, id, k, 4, 2, cb, 4, 8,
+          rerankK = 20, Some(cents))),
+      ("ivfPqRerankTopKFromIndex", pinned("cosine"),
+        () => PQ.ivfPqRerankTopKFromIndex(queries, pqPath, vecs, v, id, k, 2,
+          cb, 8, cents, rerankK = 20)),
+      ("Opq.adcTopK", pinned("cosine_pq"),
+        () => Opq.adcTopK(queries, vecs, v, id, k, model)),
+      ("Opq.productionTopKFromIndex", pinned("cosine"),
+        () => Opq.productionTopKFromIndex(queries, opqPath, vecs, v, id, k,
+          2, model, opqCents, rerankK = 20)))
+
+    entryPoints.foreach { case (name, schema, run) =>
+      val df = run()
+      assert(df.schema.fields.map(f => s"${f.name}:${f.dataType.simpleString}")
+        .mkString(",") == schema, s"$name schema")
+      val score = df.columns(df.columns.length - 2)
+      val rows = df.select("query_id", "neighbor_id", score, "rank").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+      assert(rows.nonEmpty, name)
+      assert(rows.forall(r => r._1 != r._2), s"$name returned a self pair")
+      val perQuery = rows.groupBy(_._1)
+      assert(perQuery.values.forall(_.length <= k), s"$name: > $k rows per query")
+      var ties = 0
+      perQuery.values.foreach { rs =>
+        rs.sortBy(_._4).sliding(2).foreach {
+          case Array(a, b) =>
+            assert(a._3 >= b._3, s"$name ranks a lower score first: $a, $b")
+            if (a._3 == b._3) {
+              ties += 1
+              assert(a._2 < b._2, s"$name breaks a tie against neighbor_id: $a, $b")
+            }
+          case _ =>
+        }
+      }
+      assert(ties > 0, s"$name: the planted duplicates produced no tie")
+    }
+  }
 }
